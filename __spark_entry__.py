@@ -38,12 +38,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from kgforge.fixtures import pages_from_documents
-    from kgforge.operators.parse import extract_shapes_df, parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
     sf_dir = "/root/testdata/sf0.001"
     pages = pages_from_documents(spark, sf_dir)
-    shapes = extract_shapes_df(pages)
-    triples = parse_pages(pages).filter(F.col("subject").isNotNull())
+    triples, shapes = split_parsed(parse_combined(pages))
+    triples = triples.filter(F.col("subject").isNotNull())
     shape_summary = shapes.select(
         "url",
         "uri",
@@ -655,11 +655,11 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.fixtures import pages_from_documents
-    from kgforge.operators.parse import extract_shapes_df
+    from kgforge.operators.parse import parse_combined, split_parsed
 
     pages = pages_from_documents(spark, sf_dir)
     return (
-        extract_shapes_df(pages)
+        split_parsed(parse_combined(pages))[1]
         .select("url", "uri", "target_class", F.size("property_shapes").alias("n_ps"), "severity")
         .orderBy("url", "uri")
     )
@@ -667,11 +667,11 @@ def q_kg_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.fixtures import pages_from_documents
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
     pages = pages_from_documents(spark, sf_dir)
     return (
-        parse_pages(pages)
+        split_parsed(parse_combined(pages))[0]
         .filter(F.col("subject").isNotNull())
         .groupBy("predicate")
         .agg(F.count("*").alias("n"))
@@ -688,11 +688,11 @@ def q_kg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form per-doc triple inventory with per-predicate structural
     kinds."""
     from kgforge.fixtures import pages_from_documents
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
     from kgforge.operators.profile import predicate_profile
 
     pages = pages_from_documents(spark, sf_dir)
-    triples = parse_pages(pages).filter(F.col("subject").isNotNull())
+    triples = split_parsed(parse_combined(pages))[0].filter(F.col("subject").isNotNull())
     return predicate_profile(triples).orderBy("predicate")
 
 
@@ -872,11 +872,11 @@ def q_kg_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas page parser as q_kg_triples, dispatched by payload
     detection. Per-predicate triple counts + distinct object values."""
     from kgforge.fixtures import microdata_pages_from_documents
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
     pages = microdata_pages_from_documents(spark, sf_dir)
     return (
-        parse_pages(pages)
+        split_parsed(parse_combined(pages))[0]
         .filter(F.col("subject").isNotNull())
         .groupBy("predicate")
         .agg(
@@ -1543,12 +1543,11 @@ def q_emb_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.fixtures import pages_from_documents
-    from kgforge.operators.parse import extract_shapes_df, parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
     from kgforge.operators.validate import split_validated, validate_triples
 
     pages = pages_from_documents(spark, sf_dir)
-    triples = parse_pages(pages)
-    shapes = extract_shapes_df(pages)
+    triples, shapes = split_parsed(parse_combined(pages))
     _accepted, rejected = split_validated(validate_triples(triples, shapes))
     return rejected.select(
         "url", "subject", "predicate", F.array_join("violations", ",").alias("violations")
@@ -1566,7 +1565,7 @@ def q_kg_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     i%13/i%17 violation inventory expanded through the identical
     8-triple template with DuckDB md5 skolems."""
     from kgforge.fixtures import pages_from_documents
-    from kgforge.operators.parse import extract_shapes_df, parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
     from kgforge.operators.validate import (
         split_validated,
         validate_triples,
@@ -1574,8 +1573,7 @@ def q_kg_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pages = pages_from_documents(spark, sf_dir)
-    triples = parse_pages(pages)
-    shapes = extract_shapes_df(pages)
+    triples, shapes = split_parsed(parse_combined(pages))
     _accepted, rejected = split_validated(validate_triples(triples, shapes))
     return validation_report_triples(rejected).orderBy(
         "subject", "predicate", "object"
@@ -1610,10 +1608,10 @@ def q_kg_r2rml(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.fixtures import pages_from_documents
     from kgforge.operators.canonicalize import canonicalize_entities
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
     pages = pages_from_documents(spark, sf_dir)
-    return canonicalize_entities(parse_pages(pages)).orderBy("node")
+    return canonicalize_entities(split_parsed(parse_combined(pages))[0]).orderBy("node")
 
 
 def q_kg_cluster_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1625,9 +1623,9 @@ def q_kg_cluster_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form alias pairs joined to the closed-form min-node components."""
     from kgforge.fixtures import pages_from_documents
     from kgforge.operators.canonicalize import canonicalize_entities, condense_graph
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
-    triples = parse_pages(pages_from_documents(spark, sf_dir))
+    triples = split_parsed(parse_combined(pages_from_documents(spark, sf_dir)))[0]
     aliases = (
         triples.filter(F.col("predicate") == "http://www.w3.org/2002/07/owl#sameAs")
         .select("url", "subject")
@@ -1672,11 +1670,11 @@ def q_kg_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — closed-form oracle from doc_id."""
     from kgforge.fixtures import pages_from_documents
     from kgforge.operators.ontology import extract_classes_df
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
     pages = pages_from_documents(spark, sf_dir)
     return (
-        extract_classes_df(parse_pages(pages))
+        extract_classes_df(split_parsed(parse_combined(pages))[0])
         .select("url", "class_uri", "n_instances")
         .orderBy("url", "class_uri")
     )
@@ -1902,13 +1900,13 @@ def q_kg_distant(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.fixtures import gazetteer_rows, pages_from_documents
     from kgforge.operators.distant import distant_supervision_pairs
     from kgforge.operators.mentions import detect_mentions
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
     # both lineages (mentions + triples) read the same synthesized pages;
     # persist so the mapInPandas page build runs once
     pages = pages_from_documents(spark, sf_dir).persist()
     m = detect_mentions(pages, gazetteer_rows())
-    triples = parse_pages(pages)
+    triples = split_parsed(parse_combined(pages))[0]
     knows = triples.filter(
         F.col("predicate") == "http://schema.org/knows"
     ).select(F.col("subject").alias("s_alias"), F.col("object")["value"].alias("o_alias"))
@@ -2695,9 +2693,9 @@ def q_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _knows_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.fixtures import pages_from_documents
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
-    return parse_pages(pages_from_documents(spark, sf_dir))
+    return split_parsed(parse_combined(pages_from_documents(spark, sf_dir)))[0]
 
 
 def q_kg_sparql(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4799,7 +4797,7 @@ def q_kg_rdfstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the statement-level-metadata surface (edge confidence, provenance)
     modern KGs carry. The oracle rebuilds all six rows per doc closed-form
     including the skolem node via DuckDB's own md5()."""
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
     from kgforge.operators.rdfstar import unstar
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
@@ -4822,7 +4820,7 @@ def q_kg_rdfstar(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(html, "UTF-8").alias("html"),
         F.lit("").alias("text"),
     )
-    out = unstar(parse_pages(pages))
+    out = unstar(split_parsed(parse_combined(pages))[0])
     return out.select(
         "url", "subject", "predicate",
         F.col("object.value").alias("value"),

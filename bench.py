@@ -138,9 +138,9 @@ def main():
 
     def run_pipeline_once(src=None):
         src = pages if src is None else src
-        # fused scan: triples + shapes from ONE parse of each page's HTML
-        # (parse_pages + extract_shapes_df each re-parse; the combined
-        # stream is materialized once and both tables are filters over it)
+        # scan: triples + shapes from ONE parse of each page's HTML (the
+        # combined stream is materialized once and both tables are filters
+        # over it)
         combined = parse_combined(src).persist()
         combined.count()  # materialize: exactly one parse pass, no branch race
         triples, shapes = split_parsed(combined)

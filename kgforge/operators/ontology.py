@@ -154,7 +154,7 @@ def extract_base_shapes_df(triples: DataFrame) -> DataFrame:
     """Base-parser shapes: implicit class-shapes (every declared rdfs:Class /
     owl:Class subject is a potential SHACL implicit-class-target shape) in
     SHAPES_SCHEMA layout with source='rdf_parser'. ``merge_shapes(base,
-    extract_shapes_df(pages))`` then reproduces the reference's
+    split_parsed(parse_combined(pages))[1])`` then reproduces the reference's
     array_merge(base.shapes, enhancedShapes) — the SHACL-enriched row
     replaces the base row on (url, uri) collision."""
     data = _ok(triples)

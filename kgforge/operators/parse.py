@@ -1,10 +1,11 @@
 """Stage 01-03: text extraction, RDF parsing, shape extraction.
 
-All three are embarrassingly parallel per-page transforms implemented as
-``mapInPandas`` (Arrow-batched, no per-row Python API calls, no shuffle) —
-the Spark equivalent of the reference's single-file parse entry point
-(/root/reference/src/ShaclParser.php:34-43). Everything downstream of these
-operators is pure DataFrame algebra.
+``parse_combined`` is the one batch loop over ``parse_document``: an
+embarrassingly parallel ``mapInPandas`` transform (Arrow-batched, no shuffle)
+that parses each page once into its triples AND shape records — the Spark
+equivalent of the reference's single-file parse entry point
+(``src/ShaclParser.php:34-43``). Everything downstream of
+``split_parsed`` is pure DataFrame algebra.
 
 Scale notes:
 - A 100 TB pages table partitions by input file; each task parses its own
@@ -79,38 +80,6 @@ def _term_struct(t: tuple) -> dict:
     return {"value": t[0], "kind": t[1], "datatype": t[2], "lang": t[3]}
 
 
-def parse_pages(pages: DataFrame) -> DataFrame:
-    """pages -> triples DF (TRIPLES_SCHEMA). One Arrow batch in, one out."""
-
-    def fn(batches):
-        for pdf in batches:
-            out = {c: [] for c in _TRIPLE_COLS}
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                triples, _errs, fmt, status = parse_document(url, html, text)
-                if not triples:
-                    out["url"].append(url)
-                    out["seq"].append(0)
-                    out["subject"].append(None)
-                    out["predicate"].append(None)
-                    out["object"].append(None)
-                    out["fmt"].append(fmt)
-                    out["status"].append(status)
-                    out["error"].append(None)
-                    continue
-                for seq, (s, p, o) in enumerate(triples):
-                    out["url"].append(url)
-                    out["seq"].append(seq)
-                    out["subject"].append(s[0])
-                    out["predicate"].append(p[0])
-                    out["object"].append(_term_struct(o))
-                    out["fmt"].append(fmt)
-                    out["status"].append("ok")
-                    out["error"].append(None)
-            yield pd.DataFrame(out)
-
-    return pages.mapInPandas(fn, schema=TRIPLES_SCHEMA)
-
-
 def _combined_schema():
     """TRIPLES_SCHEMA columns + a ``rec`` discriminator + the whole shape
     record as ONE nullable struct column (SHAPES_SCHEMA minus url)."""
@@ -134,15 +103,12 @@ def parse_combined(pages: DataFrame) -> DataFrame:
     discriminated by ``rec`` in {'triple', 'shape'}.
 
     The expensive per-page work — HTML payload scan + RDF tokenizer/parser —
-    runs ONCE per page here, where ``parse_pages`` + ``extract_shapes_df``
-    each re-parse the same HTML (shape extraction itself is cheap; the parse
-    dominates). At 100 TB that halves the scan-stage CPU: the combined
-    stream is written once and both logical tables are derived by a
-    ``rec`` filter that parquet pushes down, with the wide ``shape`` struct
-    column pruned away from triple reads entirely.
-
-    Use ``split_parsed`` to recover (triples, shapes) with the exact
-    TRIPLES_SCHEMA / SHAPES_SCHEMA shapes of the unfused operators.
+    runs ONCE per page here; shape extraction over the parsed triples is
+    cheap next to it. Pages that yield no triples emit one ``triple`` row
+    with NULL subject/predicate/object and the page's parse ``status``.
+    Write or persist the stream once; ``split_parsed`` then derives both
+    logical tables by a ``rec`` filter that parquet pushes down, with the
+    wide ``shape`` struct column pruned away from triple reads entirely.
     """
 
     def fn(batches):
@@ -169,70 +135,14 @@ def parse_combined(pages: DataFrame) -> DataFrame:
 
 
 def split_parsed(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """combined (PARSE_COMBINED_SCHEMA) -> (triples, shapes) with the same
-    schemas as ``parse_pages`` / ``extract_shapes_df``. Callers should
-    persist or write ``combined`` first so the parse UDF runs once."""
+    """combined (PARSE_COMBINED_SCHEMA) -> (triples, shapes) as
+    TRIPLES_SCHEMA / SHAPES_SCHEMA DataFrames. Each output re-runs the parse
+    UDF unless ``combined`` is persisted or written first."""
     from pyspark.sql import functions as F
 
     triples = combined.filter(F.col("rec") == "triple").select(*_TRIPLE_COLS)
     shapes = combined.filter(F.col("rec") == "shape").select("url", "shape.*")
     return triples, shapes
-
-
-def extract_shapes_df(pages: DataFrame) -> DataFrame:
-    """pages -> shape records DF (SHAPES_SCHEMA). Parse + SHACL extraction in
-    ONE UDF pass per page: shape semantics are document-confined (the
-    reference parses one file at a time), so fusing the stages avoids a
-    groupBy-url shuffle entirely."""
-
-    def fn(batches):
-        cols = [f.name for f in SHAPES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                triples, _errs, _fmt, status = parse_document(url, html, text)
-                if not triples:
-                    continue
-                shapes = extract_shapes_from_triples(triples)
-                for shape in shapes.values():
-                    rows.append(shape_to_row(url, shape))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.mapInPandas(fn, schema=SHAPES_SCHEMA)
-
-
-def qualified_rules_df(pages: DataFrame) -> DataFrame:
-    """pages -> executable qualified-cardinality rules (doc-confined blank-
-    node dereference happens inside the UDF; see
-    shacl.extractor.extract_qualified_rules)."""
-    from ..shacl.extractor import extract_qualified_rules
-
-    schema = (
-        "url string, shape_uri string, ps_idx int, target_class string, path string, "
-        "q_class string, q_datatype string, q_nodeKind string, q_min int, q_max int, "
-        "disjoint boolean, "
-        "siblings array<struct<q_class:string,q_datatype:string,q_nodeKind:string>>"
-    )
-    cols = ["url", "shape_uri", "ps_idx", "target_class", "path", "q_class", "q_datatype",
-            "q_nodeKind", "q_min", "q_max", "disjoint", "siblings"]
-
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                triples, _errs, _fmt, _status = parse_document(url, html, text)
-                if not triples:
-                    continue
-                for r in extract_qualified_rules(triples):
-                    sibs = [
-                        (s["q_class"], s["q_datatype"], s["q_nodeKind"]) for s in r["siblings"]
-                    ]
-                    rows.append((url, r["shape_uri"], r["ps_idx"], r["target_class"], r["path"],
-                                 r["q_class"], r["q_datatype"], r["q_nodeKind"], r["q_min"],
-                                 r["q_max"], r["disjoint"], sibs))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.mapInPandas(fn, schema=schema)
 
 
 def extract_text_df(pages: DataFrame) -> DataFrame:

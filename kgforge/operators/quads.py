@@ -1,6 +1,6 @@
 """Named-graph (quad) ingestion: N-Quads corpus scan + graph selection.
 
-`parse_quad_docs` is the quad counterpart of parse.py's parse_pages — a
+`parse_quad_docs` is the quad counterpart of parse.py's parse_combined — a
 single mapInPandas Arrow scan (one batch in, one batch out; per-row status
 instead of job-killing exceptions) producing QUADS_SCHEMA rows with an
 explicit `graph` column ('' = default graph). Downstream, a named graph is
@@ -9,7 +9,7 @@ once quads are materialized partitioned by graph), and `quads_to_triples`
 drops/filters the graph column to feed every existing triple operator
 (SPARQL, validation, fusion, inference) with a per-graph view.
 
-Scale: identical profile to parse_pages — embarrassingly parallel over
+Scale: identical profile to parse_combined — embarrassingly parallel over
 pages, no shuffle, Arrow-batched Python (the parser is the vectorized-UDF
 scan the architecture already budgets for).
 """

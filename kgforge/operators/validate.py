@@ -608,8 +608,87 @@ def pair_constraint_violations(
     )
 
 
+def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
+    """Executable qualified-cardinality rules, one row per (shape, property
+    shape, target class), derived from the parsed stage. The shape records
+    carry ``sh:qualifiedValueShape`` only as a node id, so its row-local
+    fields (sh:class / sh:datatype / sh:nodeKind) are dereferenced from the
+    same url's triples, lowest ``seq`` first. Deactivated shapes,
+    non-predicate paths and rules with neither count an integer are
+    dropped (``try_cast``: a malformed count must not abort the run). A
+    disjoint rule carries its executable siblings, ordered by ``ps_idx``.
+    ``shacl.extractor.extract_qualified_rules`` is the per-document
+    reference. Plan: one aggregate over the value-shape triples, one join on
+    (url, node), one window per (url, shape_uri) for the sibling set."""
+    from pyspark.sql import Window
+
+    fields = {"q_class": "class", "q_datatype": "datatype", "q_nodeKind": "nodeKind"}
+    params = (
+        triples.filter(
+            (F.col("status") == "ok") & F.col("predicate").isin(*[SH + f for f in fields.values()])
+        )
+        .groupBy("url", F.col("subject").alias("qvs"))
+        .agg(*[
+            F.min(
+                F.when(
+                    F.col("predicate") == SH + f,
+                    F.struct("seq", F.col("object.value").alias("value")),
+                )
+            )["value"].alias(name)
+            for name, f in fields.items()
+        ])
+    )
+    qps = (
+        shapes.filter(~F.col("deactivated"))
+        .select(
+            "url",
+            F.col("uri").alias("shape_uri"),
+            "target_classes",
+            F.posexplode("property_shapes").alias("ps_idx", "ps"),
+        )
+        .filter(F.col("ps.qualifiedValueShape").isNotNull())
+        .withColumn("qvs", F.col("ps.qualifiedValueShape"))
+        .join(params, ["url", "qvs"], "left")
+    )
+
+    # a value shape with no row-checkable field is no sibling: it would
+    # vacuously exclude every value
+    executable = F.coalesce(*fields).isNotNull()
+    value_shapes = F.collect_list(F.when(executable, F.struct("ps_idx", *fields))).over(
+        Window.partitionBy("url", "shape_uri")
+    )
+    q_min = F.col("ps.qualifiedMinCount").try_cast("int")
+    q_max = F.col("ps.qualifiedMaxCount").try_cast("int")
+    disjoint = F.coalesce(
+        F.lower(F.col("ps.qualifiedValueShapesDisjoint")).isin("true", "1"), F.lit(False)
+    )
+    rules = qps.select(
+        "url", "shape_uri", "ps_idx", "target_classes", "ps", *fields,
+        value_shapes.alias("value_shapes"),
+    ).filter(
+        (F.col("ps.path_type") == "predicate")
+        & (F.col("ps.deactivated").isNull() | ~F.col("ps.deactivated").isin("true", "1"))
+        & (q_min.isNotNull() | q_max.isNotNull())
+    )
+    siblings = F.array_sort(
+        F.filter("value_shapes", lambda s: disjoint & (s["ps_idx"] != F.col("ps_idx")))
+    )
+    return rules.select(
+        "url", "shape_uri", "ps_idx",
+        F.explode("target_classes").alias("target_class"),
+        F.col("ps.path").alias("path"),
+        *fields,
+        q_min.alias("q_min"),
+        q_max.alias("q_max"),
+        disjoint.alias("disjoint"),
+        F.transform(siblings, lambda s: F.struct(*[s[f].alias(f) for f in fields])).alias(
+            "siblings"
+        ),
+    )
+
+
 def qualified_cardinality_violations(
-    triples: DataFrame, qrules: DataFrame, same_url_scope: bool = True
+    triples: DataFrame, shapes: DataFrame, same_url_scope: bool = True
 ) -> DataFrame:
     """sh:qualifiedValueShape + qualifiedMin/MaxCount execution (W3C §4.5.3)
     for the row-local-checkable value-shape subset (sh:class / sh:datatype /
@@ -623,7 +702,8 @@ def qualified_cardinality_violations(
     flag at ShaclPropertyAnalyzer.php:33-38): when set, a value only counts
     if it conforms to THIS qualified shape and to NO sibling qualified
     shape (the rule rows carry their executable siblings' row-local fields
-    as an array, dereferenced doc-confined at extraction time)."""
+    as an array; see ``qualified_rules``)."""
+    qrules = qualified_rules(triples, shapes)
     data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
     typed = _typed_subjects(data)
 

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..fixtures import gazetteer_rows
 from ..operators.canonicalize import canonicalize_entities, rewrite_to_canonical
 from ..operators.mentions import detect_mentions, mention_triples
-from ..operators.parse import parse_combined, qualified_rules_df, split_parsed
+from ..operators.parse import parse_combined, split_parsed
 from ..operators.sparql import sparql_constraint_violations
 from ..operators.validate import (
     closed_shape_violations,
@@ -31,7 +31,7 @@ from ..operators.validate import (
 from ..sinks.materialize import ManifestStore, materialize_spo, write_stage
 
 
-def constraint_reports(pages: DataFrame, triples: DataFrame, shapes: DataFrame) -> DataFrame:
+def constraint_reports(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     """Focus-node-level verdicts from the extended constraint executors —
     pair constraints, qualified cardinality, sh:node conformance, node-level
     logical combinators, and non-predicate paths — normalized to one report
@@ -43,7 +43,7 @@ def constraint_reports(pages: DataFrame, triples: DataFrame, shapes: DataFrame) 
         pair_constraint_violations(triples, shapes).select(
             "url", "subject", F.lit("pair").alias("source"), "shape_uri", "violations"
         ),
-        qualified_cardinality_violations(triples, qualified_rules_df(pages)).select(
+        qualified_cardinality_violations(triples, shapes).select(
             "url", "subject", F.lit("qualified").alias("source"), "shape_uri", "violations"
         ),
         node_shape_violations(triples, shapes).select(
@@ -200,9 +200,8 @@ def run_pipeline(
             "span_dedup", run_id, manifests, range_cols=["url"],
         )
 
-    # fused scan stage: triples AND shape records come out of ONE parse of
-    # each page (parse_pages + extract_shapes_df would each re-parse the
-    # HTML). The combined stream is written once; the two logical tables are
+    # scan stage: triples AND shape records come out of ONE parse of each
+    # page. The combined stream is written once; the two logical tables are
     # ``rec`` filters over the written parquet — the filter pushes down to
     # the scan and the wide ``shape`` struct column is pruned from triple
     # reads, so downstream stages pay only for the columns they touch.
@@ -248,7 +247,7 @@ def run_pipeline(
     reports = None
     if extended_checks:
         reports = write_stage(
-            constraint_reports(pages, all_triples, shapes),
+            constraint_reports(all_triples, shapes),
             os.path.join(work_root, "reports"), "constraint_reports", run_id, manifests,
             range_cols=["subject"],
         )

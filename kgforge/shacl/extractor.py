@@ -21,6 +21,8 @@ holds no Spark state. Distribution happens at the DataFrame layer
 
 from __future__ import annotations
 
+import re
+
 from ..rdf.graph import Graph
 from ..rdf.terms import (
     RDF_FIRST,
@@ -635,15 +637,22 @@ def extract_shapes_from_triples(triples: list[tuple]) -> dict[str, dict]:
     return ShaclExtractor(Graph(triples)).extract_shapes()
 
 
+def _int_or_none(value: str | None) -> int | None:
+    """Spark's ``try_cast(value as int)``: blanks and a sign are allowed;
+    decimals, exponents and out-of-range values give None."""
+    m = re.fullmatch(r"\s*([+-]?[0-9]+)\s*", value or "")
+    return int(m.group(1)) if m and -(2**31) <= int(m.group(1)) < 2**31 else None
+
+
 def extract_qualified_rules(triples: list[tuple]) -> list[dict]:
     """Executable qualified-cardinality descriptors for the validation stage.
 
     The reference stores ``sh:qualifiedValueShape`` as an opaque (blank-node)
     id plus qualifiedMin/MaxCount strings (ShaclPropertyAnalyzer.php:232-237,
-    fixture qualifiedValueShape-001.ttl). Qualified shapes are document-
-    confined, so the dereference of the value shape's row-local constraint
-    params (sh:class / sh:datatype / sh:nodeKind — the executable subset)
-    happens here in the per-doc UDF, not as a corpus join.
+    fixture qualifiedValueShape-001.ttl); the value shape's row-local params
+    (sh:class / sh:datatype / sh:nodeKind) are dereferenced within the
+    document. Deactivated shapes and unparseable counts yield no rule. The
+    per-document reference for ``operators.validate.qualified_rules``.
     """
     g = Graph(triples)
     shapes = ShaclExtractor(g).extract_shapes()
@@ -660,6 +669,8 @@ def extract_qualified_rules(triples: list[tuple]) -> list[dict]:
 
     rules: list[dict] = []
     for uri, shape in shapes.items():
+        if shape.get("deactivated"):
+            continue
         # all qualified value shapes of this node shape — the SIBLING set
         # for sh:qualifiedValueShapesDisjoint (W3C §4.5.3: when the flag is
         # set, values conforming to any sibling's qualified shape do not
@@ -672,10 +683,10 @@ def extract_qualified_rules(triples: list[tuple]) -> list[dict]:
         for idx, ps in enumerate(shape.get("property_shapes", [])):
             q = ps.get("qualifiedValueShape")
             path = ps.get("path")
-            if not q or not isinstance(path, str):
+            if not q or not isinstance(path, str) or ps.get("deactivated") in ("true", "1"):
                 continue
-            qmin = ps.get("qualifiedMinCount")
-            qmax = ps.get("qualifiedMaxCount")
+            qmin = _int_or_none(ps.get("qualifiedMinCount"))
+            qmax = _int_or_none(ps.get("qualifiedMaxCount"))
             if qmin is None and qmax is None:
                 continue
             disjoint = str(ps.get("qualifiedValueShapesDisjoint", "")).lower() in ("true", "1")
@@ -694,8 +705,8 @@ def extract_qualified_rules(triples: list[tuple]) -> list[dict]:
                         "target_class": tc,
                         "path": path,
                         **_qvs_fields(q),
-                        "q_min": int(qmin) if qmin is not None else None,
-                        "q_max": int(qmax) if qmax is not None else None,
+                        "q_min": qmin,
+                        "q_max": qmax,
                         "disjoint": disjoint,
                         "siblings": siblings,
                     }

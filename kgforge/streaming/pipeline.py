@@ -4,7 +4,7 @@ The reference is a pure batch function (SURVEY §2.9: no watermarks, windows,
 state, or late-data handling anywhere in /root/reference/src). This module is
 the engine's own incremental-ingest surface: a continuously-landing directory
 of Common-Crawl-style page files streams through the SAME parse operator the
-batch path uses (``parse_pages`` is a mapInPandas transform, legal on
+batch path uses (``parse_combined`` is a mapInPandas transform, legal on
 streaming DataFrames), with event-time watermarking on the WARC capture
 timestamp for the windowed aggregations.
 
@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.parse import parse_pages
+from ..operators.parse import parse_combined, split_parsed
 from ..schema import PAGES_SCHEMA
 
 
@@ -38,7 +38,7 @@ def stream_pages(spark: SparkSession, pages_dir: str, max_files_per_trigger: int
 def streaming_triples(pages_stream: DataFrame) -> DataFrame:
     """Incremental triple extraction — the batch parse operator applied to a
     streaming DataFrame (stateless, per-batch, no shuffle)."""
-    return parse_pages(pages_stream)
+    return split_parsed(parse_combined(pages_stream))[0]
 
 
 def streaming_predicate_counts(
@@ -73,8 +73,8 @@ def streaming_predicate_counts(
 
 
 def parse_pages_with_ts(pages: DataFrame) -> DataFrame:
-    """parse_pages variant that carries the event-time column through the
-    Arrow UDF so downstream windowed aggs can use it."""
+    """Triple-only ``parse_combined`` variant that carries the event-time
+    column through the Arrow UDF so downstream windowed aggs can use it."""
     import pandas as pd
 
     from ..operators.parse import parse_document
@@ -240,7 +240,6 @@ def validate_each_batch(pages_stream: DataFrame, out_root: str):
     as the batch materializer.
 
     Returns the DataStreamWriter (caller starts/stops it)."""
-    from ..operators.parse import parse_combined, split_parsed
     from ..operators.validate import split_validated, validate_triples
 
     def handle(batch_df, _batch_id):

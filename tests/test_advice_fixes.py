@@ -20,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgforge.html import extract_text
-from kgforge.operators.parse import extract_shapes_df, parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.operators.validate import split_validated, validate_triples
 from kgforge.schema import PAGES_SCHEMA
 
@@ -59,7 +59,7 @@ def test_same_path_two_rules(spark):
     single value was counted once per RULE (n_vals=2), silently satisfying
     minCount 2; and rule 1 (no hasValue) must not mask rule 2's hasValue."""
     pages = _page(spark, SAME_PATH_TTL)
-    _acc, rejected = split_validated(validate_triples(parse_pages(pages), extract_shapes_df(pages)))
+    _acc, rejected = split_validated(validate_triples(*split_parsed(parse_combined(pages))))
     rej = {(r["subject"], r["predicate"]): sorted(r["violations"]) for r in rejected.collect()}
     assert rej[("http://example.org/bad", "http://example.org/tag")] == ["hasValue", "minCount"]
     assert ("http://example.org/good", "http://example.org/tag") not in rej
@@ -89,7 +89,7 @@ def test_severity_rank_not_lexicographic(spark):
     """A triple violating a Warning rule AND a Violation rule must report
     'violation' — lexicographic max picks 'warning' ('w' > 'v')."""
     pages = _page(spark, SEVERITY_TTL)
-    _acc, rejected = split_validated(validate_triples(parse_pages(pages), extract_shapes_df(pages)))
+    _acc, rejected = split_validated(validate_triples(*split_parsed(parse_combined(pages))))
     rows = rejected.filter(F.col("subject") == "http://example.org/p").collect()
     assert len(rows) == 1
     assert rows[0]["violation_severity"] == "violation"
@@ -231,7 +231,7 @@ def test_not_nonexecutable_member_skipped(spark):
     EVERY value as a 'not' violation. It must be skipped; a row-local
     member (sh:datatype) still executes."""
     pages = _page(spark, NOT_TTL)
-    _acc, rej = split_validated(validate_triples(parse_pages(pages), extract_shapes_df(pages)))
+    _acc, rej = split_validated(validate_triples(*split_parsed(parse_combined(pages))))
     got = {(r["subject"], r["predicate"]): sorted(r["violations"]) for r in rej.collect()}
     # ex:t1's ref must NOT be rejected (class-only member is non-executable)
     assert ("http://example.org/t1", "http://example.org/ref") not in got
@@ -273,7 +273,7 @@ def test_node_not_nonexecutable_member_skipped(spark):
     from kgforge.operators.validate import node_logical_violations
 
     pages = _page(spark, NODE_NOT_TTL)
-    out = node_logical_violations(parse_pages(pages), extract_shapes_df(pages))
+    out = node_logical_violations(*split_parsed(parse_combined(pages)))
     got = {(r["subject"], r["constraint"]) for r in out.collect()}
     assert ("http://example.org/a1", "not") not in got  # opaque member: skipped
     assert ("http://example.org/b1", "not") in got      # conforms => 'not' violated
@@ -308,7 +308,7 @@ def test_inverse_path_bnode_nodekind(spark):
     from kgforge.operators.validate import path_constraint_violations
 
     pages = _page(spark, BNODE_KIND_TTL)
-    out = path_constraint_violations(parse_pages(pages), extract_shapes_df(pages))
+    out = path_constraint_violations(*split_parsed(parse_combined(pages)))
     got = {(r["subject"], tuple(sorted(r["violations"]))) for r in out.collect()}
     # bnode subject satisfies sh:BlankNode: no violation for ex:t
     assert not any(s == "http://example.org/t" for s, _v in got)
@@ -337,5 +337,5 @@ def test_union_nodekinds_in_path_executor(spark):
     from kgforge.operators.validate import path_constraint_violations
 
     pages = _page(spark, UNION_KIND_TTL)
-    out = path_constraint_violations(parse_pages(pages), extract_shapes_df(pages))
+    out = path_constraint_violations(*split_parsed(parse_combined(pages)))
     assert not any("nodeKind" in r["violations"] for r in out.collect())

@@ -10,7 +10,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from kgforge.html import extract_text
-from kgforge.operators.parse import extract_shapes_df, parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.operators.validate import closed_shape_violations
 from kgforge.schema import PAGES_SCHEMA
 
@@ -59,8 +59,7 @@ def _page(spark, ttl):
 
 def test_closed_shape_violations(spark):
     pages = _page(spark, TTL)
-    triples = parse_pages(pages)
-    shapes = extract_shapes_df(pages)
+    triples, shapes = split_parsed(parse_combined(pages))
 
     viol = closed_shape_violations(triples, shapes).collect()
     # ex:age on the closed Person focus node is the ONLY violation:
@@ -79,4 +78,4 @@ def test_closed_shape_violations(spark):
         "sh:property [ sh:path ex:age ] ;\n    sh:property [\n        sh:path ex:name ;",
     )
     pages_ok = _page(spark, ttl_ok)
-    assert closed_shape_violations(parse_pages(pages_ok), extract_shapes_df(pages_ok)).count() == 0
+    assert closed_shape_violations(*split_parsed(parse_combined(pages_ok))).count() == 0

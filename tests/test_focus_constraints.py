@@ -9,7 +9,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from kgforge.html import extract_text
-from kgforge.operators.parse import extract_shapes_df, parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.operators.validate import split_validated, validate_triples
 from kgforge.schema import PAGES_SCHEMA
 
@@ -51,7 +51,7 @@ def _page(spark, ttl):
 
 def test_unique_lang_and_has_value(spark):
     pages = _page(spark, TTL)
-    validated = validate_triples(parse_pages(pages), extract_shapes_df(pages))
+    validated = validate_triples(*split_parsed(parse_combined(pages)))
     _accepted, rejected = split_validated(validated)
     rej = {
         (r["subject"], r["predicate"]): r["violations"]

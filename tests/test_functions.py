@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 from kgforge.fixtures import pages_df
 from kgforge.functions.merge import merge_shapes
 from kgforge.functions.shacl_fns import cardinality_col, property_type_col, range_from_shape_col
-from kgforge.operators.parse import extract_shapes_df
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.shacl.extractor import (
     determine_property_type,
     extract_cardinality,
@@ -16,7 +16,7 @@ from kgforge.shacl.rows import _row_to_ps
 
 def test_column_fns_match_python(spark):
     pages = pages_df(spark, 60, partitions=4)
-    shapes = extract_shapes_df(pages)
+    shapes = split_parsed(parse_combined(pages))[1]
     exploded = shapes.select("url", "uri", F.explode("property_shapes").alias("ps"))
     rows = exploded.select(
         "url",

@@ -95,9 +95,10 @@ def test_corpus_wl_partition_equals_closed_form_classes(spark):
     target) group multiset) derived from doc_id arithmetic."""
     from kgforge.fixtures import page_entities, pages_from_documents
     from kgforge.operators.graphsig import wl_fingerprints
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
+    from tests.test_dedup_recall import SF
 
-    triples = parse_pages(pages_from_documents(spark, "/root/testdata/sf0.001"))
+    triples = split_parsed(parse_combined(pages_from_documents(spark, SF)))[0]
     fps = wl_fingerprints(triples, rounds=3, value_blind=True).collect()
 
     def class_key(i):

@@ -123,23 +123,23 @@ def test_induced_shapes_round_trip_through_validator(spark):
     drifted batch (a status outside the induced sh:in vocabulary) must be
     rejected by exactly that constraint."""
     from kgforge.operators.induction import induce_shapes, induced_to_ttl
-    from kgforge.operators.parse import extract_shapes_df, parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
     from kgforge.operators.validate import split_validated, validate_triples
 
-    data = parse_pages(_page(spark, DATA_TTL))
+    data = split_parsed(parse_combined(_page(spark, DATA_TTL)))[0]
     induced = induce_shapes(data).collect()
     ttl = induced_to_ttl(induced)
     assert "sh:targetClass <http://example.org/Person>" in ttl
     assert 'sh:in ( "active" "inactive" )' in ttl
 
-    shapes = extract_shapes_df(_page(spark, ttl, url="https://ex.example.org/shapes"))
+    shapes = split_parsed(parse_combined(_page(spark, ttl, url="https://ex.example.org/shapes")))[1]
     assert shapes.count() == 1
 
     validated = validate_triples(data, shapes, same_url_scope=False)
     _acc, rejected = split_validated(validated)
     assert rejected.count() == 0
 
-    drift = parse_pages(_page(spark, DRIFT_TTL, url="https://ex.example.org/drift"))
+    drift = split_parsed(parse_combined(_page(spark, DRIFT_TTL, url="https://ex.example.org/drift")))[0]
     _acc2, rej2 = split_validated(
         validate_triples(drift, shapes, same_url_scope=False)
     )
@@ -227,7 +227,7 @@ def test_induced_ttl_emits_datatype_and_class_checks(spark):
     parser/extractor AND be executed by the validator: the source corpus
     conforms, a drifted batch violates exactly the induced constraints."""
     from kgforge.operators.induction import induce_shapes, induced_to_ttl
-    from kgforge.operators.parse import extract_shapes_df, parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
     from kgforge.operators.validate import split_validated, validate_triples
 
     data_ttl = """\
@@ -244,18 +244,18 @@ ex:a3 a ex:Article ;
     ex:wordcount "99"^^xsd:integer ;
     ex:author ex:untyped_thing .
 """
-    data = parse_pages(_page(spark, data_ttl))
+    data = split_parsed(parse_combined(_page(spark, data_ttl)))[0]
     rows = [r for r in induce_shapes(data).collect()
             if r["target_class"] == "http://example.org/Article"]
     ttl = induced_to_ttl(rows)
     assert "sh:datatype <http://www.w3.org/2001/XMLSchema#string>" in ttl
     assert "sh:class <http://example.org/Person>" in ttl
 
-    shapes = extract_shapes_df(_page(spark, ttl, url="https://ex.example.org/shapes"))
+    shapes = split_parsed(parse_combined(_page(spark, ttl, url="https://ex.example.org/shapes")))[1]
     _acc, rej = split_validated(validate_triples(data, shapes, same_url_scope=False))
     assert rej.count() == 0
 
-    drift = parse_pages(_page(spark, drift_ttl, url="https://ex.example.org/drift"))
+    drift = split_parsed(parse_combined(_page(spark, drift_ttl, url="https://ex.example.org/drift")))[0]
     _a2, rej2 = split_validated(validate_triples(drift, shapes, same_url_scope=False))
     bad = {(r["subject"].rsplit("/", 1)[-1], r["predicate"].rsplit("/", 1)[-1])
            for r in rej2.collect()}

@@ -12,7 +12,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from kgforge.html import extract_text
-from kgforge.operators.parse import extract_shapes_df, parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.operators.validate import (
     path_constraint_violations,
     split_validated,
@@ -43,7 +43,7 @@ def _page(spark, ttl, url="https://ex.example.org/logic"):
 
 def _rejects(spark, ttl):
     pages = _page(spark, ttl)
-    _acc, rej = split_validated(validate_triples(parse_pages(pages), extract_shapes_df(pages)))
+    _acc, rej = split_validated(validate_triples(*split_parsed(parse_combined(pages))))
     return {(r["subject"], r["predicate"]): sorted(r["violations"]) for r in rej.collect()}
 
 
@@ -122,7 +122,7 @@ ex:bad a ex:Resource ; ex:value "text" .
 
 def _path_viols(spark, ttl):
     pages = _page(spark, ttl, url="https://ex.example.org/paths")
-    out = path_constraint_violations(parse_pages(pages), extract_shapes_df(pages))
+    out = path_constraint_violations(*split_parsed(parse_combined(pages)))
     return {(r["subject"], r["path_type"]): sorted(r["violations"]) for r in out.collect()}
 
 
@@ -213,7 +213,7 @@ def _node_logical(spark, ttl):
     from kgforge.operators.validate import node_logical_violations
 
     pages = _page(spark, ttl, url="https://ex.example.org/nodelogic")
-    out = node_logical_violations(parse_pages(pages), extract_shapes_df(pages))
+    out = node_logical_violations(*split_parsed(parse_combined(pages)))
     return {(r["subject"], r["constraint"]): r["violations"] for r in out.collect()}
 
 

@@ -16,7 +16,7 @@ from kgforge.operators.ontology import (
     extract_properties_df,
     extract_restrictions_df,
 )
-from kgforge.operators.parse import extract_shapes_df, parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.schema import PAGES_SCHEMA
 
 EX = "http://example.org/"
@@ -66,7 +66,7 @@ def _pages(spark):
 def test_classes_df(spark):
     classes = {
         r["class_uri"]: (r["n_instances"], r["declared"])
-        for r in extract_classes_df(parse_pages(_pages(spark))).collect()
+        for r in extract_classes_df(split_parsed(parse_combined(_pages(spark)))[0]).collect()
     }
     # ex:Person: declared AND has 2 instances
     assert classes[EX + "Person"] == (2, True)
@@ -79,7 +79,7 @@ def test_classes_df(spark):
 def test_properties_df(spark):
     props = {
         r["property_uri"]: r
-        for r in extract_properties_df(parse_pages(_pages(spark))).collect()
+        for r in extract_properties_df(split_parsed(parse_combined(_pages(spark)))[0]).collect()
     }
     name = props[EX + "name"]
     assert name["declared"] is True
@@ -89,7 +89,7 @@ def test_properties_df(spark):
 
 
 def test_restrictions_df(spark):
-    rows = extract_restrictions_df(parse_pages(_pages(spark))).collect()
+    rows = extract_restrictions_df(split_parsed(parse_combined(_pages(spark)))[0]).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["node"] == EX + "HasEngine"
@@ -105,9 +105,8 @@ def test_merge_base_and_shacl_shapes(spark):
     from kgforge.functions.merge import merge_shapes
 
     pages = _pages(spark)
-    triples = parse_pages(pages)
+    triples, shacl = split_parsed(parse_combined(pages))
     base = extract_base_shapes_df(triples)
-    shacl = extract_shapes_df(pages)
 
     base_rows = {r["uri"]: r for r in base.collect()}
     assert base_rows[EX + "Person"]["source"] == "rdf_parser"

@@ -8,7 +8,7 @@ from __future__ import annotations
 import datetime as dt
 
 from kgforge.html import extract_text
-from kgforge.operators.parse import extract_shapes_df, parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.operators.validate import pair_constraint_violations
 from kgforge.schema import PAGES_SCHEMA
 
@@ -58,8 +58,7 @@ def test_pair_constraints(spark):
           html, extract_text(html.decode()), "en")],
         PAGES_SCHEMA,
     )
-    triples = parse_pages(pages)
-    shapes = extract_shapes_df(pages)
+    triples, shapes = split_parsed(parse_combined(pages))
 
     viol = pair_constraint_violations(triples, shapes)
     got = {(r["subject"].rsplit("/", 1)[-1], r["constraint"]) for r in viol.collect()}

@@ -6,10 +6,20 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from kgforge.html import extract_text
-from kgforge.operators.parse import extract_shapes_df, parse_pages, qualified_rules_df
-from kgforge.operators.validate import qualified_cardinality_violations
+from kgforge.operators.parse import parse_combined, parse_document, split_parsed
+from kgforge.operators.validate import qualified_cardinality_violations, qualified_rules
+from kgforge.pipeline.run import constraint_reports
 from kgforge.schema import PAGES_SCHEMA
+from kgforge.shacl.extractor import extract_qualified_rules
+
+PREFIXES = """\
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://example.org/> .
+@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+"""
 
 TTL = """\
 @prefix sh: <http://www.w3.org/ns/shacl#> .
@@ -36,25 +46,26 @@ ex:toomany a ex:Person ; ex:address ex:a1 , ex:a2 , ex:a3 .
 """
 
 
-def test_qualified_cardinality(spark):
-    html = (
-        "<html><head><title>t</title></head><body>"
-        f'<script type="text/turtle">\n{TTL}\n</script>'
-        "</body></html>"
-    ).encode()
-    pages = spark.createDataFrame(
-        [("https://ex.example.org/qual", dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc),
-          html, extract_text(html.decode()), "en")],
+def _pages(spark, *ttls, url="https://ex.example.org/qual"):
+    """One page embedding each Turtle document as its own script payload."""
+    scripts = "".join(f'<script type="text/turtle">\n{t}\n</script>' for t in ttls)
+    html = f"<html><head><title>t</title></head><body>{scripts}</body></html>".encode()
+    return spark.createDataFrame(
+        [(url, dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc), html,
+          extract_text(html.decode()), "en")],
         PAGES_SCHEMA,
     )
-    triples = parse_pages(pages)
-    qrules = qualified_rules_df(pages)
+
+
+def test_qualified_cardinality(spark):
+    triples, shapes = split_parsed(parse_combined(_pages(spark, TTL)))
+    qrules = qualified_rules(triples, shapes)
     assert qrules.count() == 1
     r = qrules.collect()[0]
     assert r["q_class"] == "http://example.org/HomeAddress"
     assert (r["q_min"], r["q_max"]) == (1, 2)
 
-    viol = qualified_cardinality_violations(triples, qrules)
+    viol = qualified_cardinality_violations(triples, shapes)
     got = {r["subject"].rsplit("/", 1)[-1]: (r["violations"][0], r["n_conforming"]) for r in viol.collect()}
     assert got == {
         "none": ("qualifiedMinCount", 0),
@@ -96,27 +107,182 @@ def test_qualified_disjoint(spark):
     typed Female AND Male, so under disjointness it counts for neither
     rule — ex:ambig then misses its Female parent (qualifiedMinCount),
     while ex:okkid (disjoint parents) conforms to both rules."""
-    import datetime as dt
-
-    html = (
-        "<html><head><title>t</title></head><body>"
-        f'<script type="text/turtle">\n{DISJOINT_TTL}\n</script>'
-        "</body></html>"
-    ).encode()
-    pages = spark.createDataFrame(
-        [("https://ex.example.org/disj", dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc),
-          html, extract_text(html.decode()), "en")],
-        PAGES_SCHEMA,
-    )
-    qrules = qualified_rules_df(pages)
-    rows = qrules.collect()
+    pages = _pages(spark, DISJOINT_TTL, url="https://ex.example.org/disj")
+    triples, shapes = split_parsed(parse_combined(pages))
+    rows = qualified_rules(triples, shapes).collect()
     assert len(rows) == 2 and all(r["disjoint"] for r in rows)
     assert all(len(r["siblings"]) == 1 for r in rows)
 
-    viol = qualified_cardinality_violations(parse_pages(pages), qrules)
+    viol = qualified_cardinality_violations(triples, shapes)
     got = {
         (r["subject"].rsplit("/", 1)[-1], r["ps_idx"]): (r["violations"][0], r["n_conforming"])
         for r in viol.collect()
     }
     female_idx = next(r["ps_idx"] for r in rows if r["q_class"].endswith("Female"))
     assert got == {("ambig", female_idx): ("qualifiedMinCount", 0)}
+
+
+# --- rule-table equivalence: qualified_rules vs extract_qualified_rules -------
+
+EDGE_CASES = {
+    "base": [TTL],
+    "disjoint": [DISJOINT_TTL],
+    # the sh:node-only sibling has no row-checkable field: it is a rule of
+    # its own but never a sibling of the other two
+    "disjoint_nonexecutable_sibling": [PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:Child ;
+    sh:property [ sh:path ex:parent ; sh:qualifiedValueShape [ sh:class ex:Female ] ;
+                  sh:qualifiedMinCount 1 ; sh:qualifiedValueShapesDisjoint true ] ;
+    sh:property [ sh:path ex:parent ; sh:qualifiedValueShape [ sh:node ex:Other ] ;
+                  sh:qualifiedMaxCount 3 ; sh:qualifiedValueShapesDisjoint true ] ;
+    sh:property [ sh:path ex:parent ; sh:qualifiedValueShape [ sh:datatype xsd:string ] ;
+                  sh:qualifiedMaxCount 0 ; sh:qualifiedValueShapesDisjoint "1" ] .
+ex:kid a ex:Child ; ex:parent ex:mom , "text" .
+ex:mom a ex:Female .
+"""],
+    "iri_value_shape": [PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:Person ;
+    sh:property [ sh:path ex:address ; sh:qualifiedValueShape ex:HomeShape ;
+                  sh:qualifiedMinCount 1 ] .
+ex:HomeShape sh:class ex:HomeAddress ; sh:nodeKind sh:IRI .
+"""],
+    "two_target_classes": [PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:A , ex:B ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:datatype xsd:integer ] ;
+                  sh:qualifiedMaxCount 1 ] .
+"""],
+    "repeated_class": [PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:X , ex:Y ; sh:class ex:Z ] ;
+                  sh:qualifiedMinCount 2 ] .
+"""],
+    # the inverse-path property shape yields no rule but is still a sibling
+    "non_predicate_path": [PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path [ sh:inversePath ex:knows ] ; sh:qualifiedValueShape [ sh:class ex:P ] ;
+                  sh:qualifiedMinCount 1 ; sh:qualifiedValueShapesDisjoint true ] ;
+    sh:property [ sh:path ex:knows ; sh:qualifiedValueShape [ sh:class ex:Q ] ;
+                  sh:qualifiedMinCount 1 ; sh:qualifiedValueShapesDisjoint true ] .
+"""],
+    # a value shape with neither count yields no rule but is still a sibling
+    "no_min_max": [PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:nodeKind sh:Literal ] ;
+                  sh:qualifiedValueShapesDisjoint true ] ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:C ] ;
+                  sh:qualifiedMaxCount 2 ; sh:qualifiedValueShapesDisjoint true ] .
+"""],
+    # the second payload's blank nodes are namespaced _:p1...
+    "second_payload": [TTL, PREFIXES + """
+ex:S2 a sh:NodeShape ; sh:targetClass ex:Person ;
+    sh:property [ sh:path ex:address ; sh:qualifiedValueShape [ sh:class ex:WorkAddress ] ;
+                  sh:qualifiedMaxCount 0 ] .
+"""],
+    "deactivated": [PREFIXES + """
+ex:Off a sh:NodeShape ; sh:targetClass ex:A ; sh:deactivated true ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:C ] ;
+                  sh:qualifiedMinCount 1 ] .
+ex:On a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:C ] ;
+                  sh:qualifiedMinCount 1 ; sh:deactivated true ;
+                  sh:qualifiedValueShapesDisjoint true ] ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:D ] ;
+                  sh:qualifiedMinCount 1 ; sh:qualifiedValueShapesDisjoint true ] .
+"""],
+    "malformed_counts": [PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:C ] ;
+                  sh:qualifiedMinCount "two" ] ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:C ] ;
+                  sh:qualifiedMinCount "x" ; sh:qualifiedMaxCount 1 ] ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:C ] ;
+                  sh:qualifiedMinCount 2.5 ; sh:qualifiedMaxCount " 3 " ] ;
+    sh:property [ sh:path ex:p ; sh:qualifiedValueShape [ sh:class ex:C ] ;
+                  sh:qualifiedMaxCount 99999999999 ] .
+"""],
+}
+
+
+def _canon(rules):
+    return sorted(rules, key=lambda r: (r["url"], r["shape_uri"], r["ps_idx"], r["target_class"]))
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_qualified_rules_match_reference(spark, case):
+    """The DataFrame derivation over the parsed stage reproduces the
+    per-document reference rule table row for row."""
+    url = f"https://ex.example.org/{case}"
+    pages = _pages(spark, *EDGE_CASES[case], url=url)
+    triples, shapes = split_parsed(parse_combined(pages))
+    got = [r.asDict(recursive=True) for r in qualified_rules(triples, shapes).collect()]
+
+    want = []
+    for p in pages.collect():
+        doc_triples, _errs, _fmt, _status = parse_document(p["url"], p["html"], p["text"])
+        want += [{"url": p["url"], **r} for r in extract_qualified_rules(doc_triples)]
+    assert _canon(got) == _canon(want)
+    if case not in ("deactivated", "no_min_max", "non_predicate_path"):
+        assert want, "the case must yield rules"
+
+
+def test_qualified_rules_edge_semantics(spark):
+    """Spot checks of the reference table the equivalence test pins."""
+    def rules(case):
+        pages = _pages(spark, *EDGE_CASES[case])
+        html = pages.collect()[0]
+        doc_triples = parse_document(html["url"], html["html"], html["text"])[0]
+        return extract_qualified_rules(doc_triples)
+
+    sibs = {r["q_datatype"] or r["q_class"]: r["siblings"] for r in rules("disjoint_nonexecutable_sibling")}
+    assert [s["q_datatype"] for s in sibs["http://example.org/Female"]] == [
+        "http://www.w3.org/2001/XMLSchema#string"
+    ]
+    (iri,) = rules("iri_value_shape")
+    assert (iri["q_class"], iri["q_nodeKind"]) == (
+        "http://example.org/HomeAddress", "http://www.w3.org/ns/shacl#IRI"
+    )
+    assert {r["target_class"] for r in rules("two_target_classes")} == {
+        "http://example.org/A", "http://example.org/B"
+    }
+    assert rules("repeated_class")[0]["q_class"] == "http://example.org/X"
+    (npp,) = rules("non_predicate_path")
+    assert [s["q_class"] for s in npp["siblings"]] == ["http://example.org/P"]
+    (nmm,) = rules("no_min_max")
+    assert nmm["siblings"] == [
+        {"q_class": None, "q_datatype": None, "q_nodeKind": "http://www.w3.org/ns/shacl#Literal"}
+    ]
+    assert len(rules("second_payload")) == 2
+    (on,) = rules("deactivated")
+    assert on["q_class"] == "http://example.org/D" and len(on["siblings"]) == 1
+    assert sorted((r["q_min"], r["q_max"]) for r in rules("malformed_counts")) == [
+        (None, 1), (None, 3)
+    ]
+
+
+def test_deactivated_shapes_report_nothing(spark):
+    """sh:deactivated on the node shape or on the property shape switches
+    the qualified-cardinality check off, as for every other executor."""
+    data = """
+ex:a a ex:A ; ex:p ex:v .
+ex:v a ex:D .
+"""
+    pages = _pages(spark, EDGE_CASES["deactivated"][0] + data)
+    triples, shapes = split_parsed(parse_combined(pages))
+    got = {(r["shape_uri"], r["ps_idx"]) for r in qualified_cardinality_violations(triples, shapes).collect()}
+    assert got == set()
+
+
+def test_malformed_counts_do_not_abort_reports(spark):
+    """A non-integer qualifiedMinCount must not abort the report stage: the
+    rule keeps its well-formed bound, or is dropped when it has none."""
+    data = """
+ex:a a ex:A ; ex:p ex:c1 , ex:c2 .
+ex:c1 a ex:C .
+ex:c2 a ex:C .
+"""
+    pages = _pages(spark, EDGE_CASES["malformed_counts"][0] + data)
+    triples, shapes = split_parsed(parse_combined(pages))
+    rows = constraint_reports(triples, shapes).filter("source = 'qualified'").collect()
+    assert [(r["subject"], r["violations"]) for r in rows] == [
+        ("http://example.org/a", ["qualifiedMaxCount"])
+    ]

@@ -834,10 +834,10 @@ class TestJsonldExport:
 
     def test_full_corpus_round_trip_exact(self, spark):
         from kgforge.fixtures import pages_df
-        from kgforge.operators.parse import parse_pages
+        from kgforge.operators.parse import parse_combined, split_parsed
         from kgforge.rdf.jsonld_out import jsonld_objects, reparse_jsonld
 
-        t = parse_pages(pages_df(spark, 40, partitions=2)).filter(
+        t = split_parsed(parse_combined(pages_df(spark, 40, partitions=2)))[0].filter(
             F.col("subject").isNotNull()
         )
         rt = reparse_jsonld(jsonld_objects(t))

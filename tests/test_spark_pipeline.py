@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from kgforge.fixtures import gazetteer_rows, pages_df, reference_fixture_pages
 from kgforge.operators.canonicalize import connected_components
 from kgforge.operators.mentions import detect_mentions
-from kgforge.operators.parse import extract_shapes_df, extract_text_df, parse_pages
+from kgforge.operators.parse import extract_text_df, parse_combined, split_parsed
 from kgforge.operators.validate import split_validated, validate_triples
 from kgforge.shacl.rows import row_to_shape_dict
 
@@ -30,7 +30,7 @@ def test_text_extraction_byte_identical(spark, pages):
 
 
 def test_parse_pages_triples(spark, pages):
-    t = parse_pages(pages)
+    t = split_parsed(parse_combined(pages))[0]
     assert t.filter(F.col("status") == "ok").count() > 0
     # every page produced triples (fixture pages all embed RDF)
     assert t.filter(F.col("subject").isNotNull()).select("url").distinct().count() == 120
@@ -40,26 +40,54 @@ def test_parse_pages_triples(spark, pages):
 
 
 def test_parse_combined_equals_unfused(spark, pages):
-    """The fused scan (parse_combined -> split_parsed) must reproduce the
-    unfused operators' outputs EXACTLY — same triples (incl. error rows for
-    empty pages), same shape records — since the pipeline/bench now run the
-    fused path while the goldens pin the unfused ones."""
-    from kgforge.operators.parse import parse_combined, split_parsed
+    """parse_combined -> split_parsed must reproduce a plain Python loop over
+    the per-document reference (parse_document + extract_shapes_from_triples
+    + shape_to_row) EXACTLY: same triples, incl. the single status row of a
+    page with no RDF or an unparseable payload, and same shape records."""
+    import datetime as dt
 
-    combined = parse_combined(pages).persist()
+    from kgforge.operators.parse import parse_document
+    from kgforge.schema import PAGES_SCHEMA
+    from kgforge.shacl.extractor import extract_shapes_from_triples
+    from kgforge.shacl.rows import shape_to_row
+
+    ts = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    odd = spark.createDataFrame(
+        [
+            ("https://ex.example.org/empty", ts, b"<html><body></body></html>", "", "en"),
+            ("https://ex.example.org/plain", ts, b"<html><body>no rdf</body></html>", "no rdf", "en"),
+            ("https://ex.example.org/broken", ts,
+             b'<html><script type="text/turtle">ex:a ex:b [ .</script></html>', "", "en"),
+        ],
+        PAGES_SCHEMA,
+    )
+    src = pages.unionByName(odd)
+
+    want_triples, want_shapes = [], {}
+    for p in src.collect():
+        triples, _errs, fmt, status = parse_document(p["url"], p["html"], p["text"])
+        if not triples:
+            want_triples.append((p["url"], 0, None, None, None, fmt, status, None))
+            continue
+        for seq, (s, pr, o) in enumerate(triples):
+            want_triples.append((p["url"], seq, s[0], pr[0], tuple(o), fmt, "ok", None))
+        for shape in extract_shapes_from_triples(triples).values():
+            want_shapes[(p["url"], shape["uri"])] = row_to_shape_dict(shape_to_row(p["url"], shape))
+    assert {w[6] for w in want_triples} == {"ok", "empty", "format_error", "parse_error"}
+
+    combined = parse_combined(src).persist()
     t_f, s_f = split_parsed(combined)
-    t_u = parse_pages(pages)
-    s_u = extract_shapes_df(pages)
-    assert t_f.exceptAll(t_u).count() == 0 and t_u.exceptAll(t_f).count() == 0
-    # shapes carry nested array/map columns (not comparable with exceptAll);
-    # compare canonical JSON per (url, uri)
-    def canon(df):
-        return {
-            (r["url"], r["uri"]): row_to_shape_dict(r.asDict(recursive=True))
-            for r in df.collect()
-        }
-
-    assert canon(s_f) == canon(s_u)
+    got_triples = [
+        (r["url"], r["seq"], r["subject"], r["predicate"],
+         tuple(r["object"]) if r["object"] is not None else None, r["fmt"], r["status"], r["error"])
+        for r in t_f.collect()
+    ]
+    key = repr
+    assert sorted(got_triples, key=key) == sorted(want_triples, key=key)
+    got_shapes = {
+        (r["url"], r["uri"]): row_to_shape_dict(r.asDict(recursive=True)) for r in s_f.collect()
+    }
+    assert got_shapes == want_shapes
     combined.unpersist()
 
 
@@ -69,7 +97,7 @@ def test_shapes_df_matches_pure_python(spark, pages):
     from kgforge.operators.parse import parse_document
     from kgforge.shacl.extractor import extract_shapes_from_triples
 
-    rows = extract_shapes_df(pages).collect()
+    rows = split_parsed(parse_combined(pages))[1].collect()
     by_url = {}
     for r in rows:
         by_url.setdefault(r["url"], {})[r["uri"]] = row_to_shape_dict(r.asDict(recursive=True))
@@ -90,15 +118,14 @@ def test_shapes_df_matches_pure_python(spark, pages):
 
 def test_reference_fixtures_through_spark(spark):
     ref = reference_fixture_pages(spark)
-    shapes = extract_shapes_df(ref)
+    shapes = split_parsed(parse_combined(ref))[1]
     assert shapes.count() >= 39  # every fixture page yields at least its shapes
     got = {r["uri"] for r in shapes.select("uri").distinct().collect()}
     assert "http://example.org/PersonShape" in got
 
 
 def test_validation_accept_reject(spark, pages):
-    triples = parse_pages(pages)
-    shapes = extract_shapes_df(pages)
+    triples, shapes = split_parsed(parse_combined(pages))
     accepted, rejected = split_validated(validate_triples(triples, shapes))
     n_acc, n_rej = accepted.count(), rejected.count()
     assert n_acc > 0 and n_rej > 0
@@ -190,7 +217,7 @@ def test_materialize_resume(spark, pages, tmp_path):
 
     work = str(tmp_path / "w")
     ms = ManifestStore(work + "/_m")
-    t = parse_pages(pages)
+    t = split_parsed(parse_combined(pages))[0]
     out1 = write_stage(t, work + "/t", "parse", "r1", ms, range_cols=["url", "seq"])
     n1 = out1.count()
     assert ms.is_complete("r1", "parse")
@@ -325,12 +352,12 @@ def test_compact_stage(spark, tmp_path):
     clustering, and refreshes the manifest."""
     import glob
 
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
     from kgforge.sinks.materialize import ManifestStore, compact_stage, write_stage
 
     from kgforge.fixtures import pages_df
 
-    t = parse_pages(pages_df(spark, 40, partitions=4))
+    t = split_parsed(parse_combined(pages_df(spark, 40, partitions=4)))[0]
     work = str(tmp_path / "w")
     ms = ManifestStore(work + "/_manifests")
     out = write_stage(
@@ -376,9 +403,9 @@ def test_pipeline_span_dedup_stage(spark, tmp_path):
     )
     assert out["pages"].count() == n_in
     # html-channel triples unaffected by the text rewrite
-    from kgforge.operators.parse import parse_pages
+    from kgforge.operators.parse import parse_combined, split_parsed
 
-    want = parse_pages(pages).filter(F.col("subject").isNotNull()).count()
+    want = split_parsed(parse_combined(pages))[0].filter(F.col("subject").isNotNull()).count()
     got = out["triples"].filter(F.col("subject").isNotNull()).count()
     assert got == want
     rec = ManifestStore(str(tmp_path / "w" / "_manifests")).load("run1", "span_dedup")

@@ -12,7 +12,7 @@ import datetime as dt
 import pytest
 
 from kgforge.html import extract_text
-from kgforge.operators.parse import extract_shapes_df, parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.operators.sparql import (
     SparqlUnsupported,
     parse_sparql_constraint,
@@ -45,7 +45,7 @@ def _violations(spark, ttl, url="https://ex.example.org/sparql"):
              extract_text(html.decode()), "en")]
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
     out = sparql_constraint_violations(
-        parse_pages(pages), extract_shapes_df(pages), strict=True
+        *split_parsed(parse_combined(pages)), strict=True
     )
     return {(r["subject"], r["constraint"]) for r in out.collect()}
 

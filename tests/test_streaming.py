@@ -14,7 +14,7 @@ import os
 from pyspark.sql import functions as F
 
 from kgforge.fixtures import pages_pdf
-from kgforge.operators.parse import parse_pages
+from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.streaming import stream_pages, streaming_predicate_counts
 
 
@@ -45,7 +45,7 @@ def test_streaming_matches_batch(spark, tmp_path):
         for r in spark.sql("SELECT predicate, sum(n) AS n FROM pred_counts GROUP BY predicate").collect()
     }
 
-    batch = parse_pages(pages).filter(F.col("subject").isNotNull())
+    batch = split_parsed(parse_combined(pages))[0].filter(F.col("subject").isNotNull())
     want = {(r["predicate"],): r["n"] for r in batch.groupBy("predicate").agg(F.count("*").alias("n")).collect()}
     assert got == want
     assert sum(want.values()) > 0
