@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..persist import persist
 from .canonicalize import (
     _hashed_ngram_set,
     _hashed_token_shingle_set,
@@ -74,11 +75,13 @@ def minhash_duplicate_pairs(
     tail); exact-recall callers (the q_minhash oracle path) leave it off.
     Prefiltering persists the signature table (at cluster scale, write it
     to a stage table instead) so the UDF is not re-run per join side.
+    The persisted tables are released by the caller's ``released()`` block
+    (kgforge.persist) once the returned pairs are consumed.
     """
     docs = rebalance(docs)
     sigs = minhash_signatures(docs, id_col, text_col, num_hashes=num_hashes)
     if sig_prefilter:
-        sigs = sigs.persist()
+        sigs = persist(sigs)
     cands = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=num_hashes // bands)
     if sig_prefilter:
         import math
@@ -104,7 +107,7 @@ def minhash_duplicate_pairs(
     # once in the verify join) and each unpersisted reference would re-run
     # the banding self-join + prefilter lineage (at cluster scale, write
     # candidates to a stage table instead)
-    cands = cands.persist()
+    cands = persist(cands)
     # gram sets ONLY for docs that appear in a surviving candidate pair: the
     # gram expression (~KB array per row) is the stage's dominant cost, and
     # computing it over the whole corpus for both join sides made verify
@@ -122,9 +125,9 @@ def minhash_duplicate_pairs(
     # the gram expression over the candidate docs' full text — measured
     # 16.2 s -> 6.9 s for the verify stage at 19k pages / 11k candidates
     # (at cluster scale, write the gram table to a stage table instead)
-    grams = cand_docs.select(
+    grams = persist(cand_docs.select(
         F.col(id_col).alias("id"), _hashed_ngram_set(F.col(text_col), 3).alias("grams")
-    ).persist()
+    ))
     return (
         cands.join(grams.alias("ga"), cands.a == F.col("ga.id"))
         .join(grams.alias("gb"), cands.b == F.col("gb.id"))

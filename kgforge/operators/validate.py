@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..persist import persist
 from ..rdf.terms import RDF_TYPE, SH
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -1203,13 +1204,14 @@ def path_constraint_violations(
         )
 
     # ONE driver-side probe of the tiny rule-metadata table, persisted so
-    # the shape-extraction plan executes once — not once per branch probe.
+    # the shape-extraction plan executes once — not once per branch probe
+    # (released by the caller's kgforge.persist.released block).
     # (ADVICE r2: the old tc limit(1).count() + sequence-lengths collect()
     # ran 2+ eager jobs at plan-construction time even when no such rules
     # existed, re-executing an unmaterialized shapes plan each time.)
     # Branches below are only CONSTRUCTED for path types actually present,
     # so a corpus with plain predicate paths pays zero plan overhead here.
-    base_rules = base_rules.persist()
+    base_rules = persist(base_rules)
     meta = base_rules.select("path_type", F.size("paths").alias("L")).distinct().collect()
     types_present = {r["path_type"] for r in meta}
 

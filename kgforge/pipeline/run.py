@@ -28,6 +28,7 @@ from ..operators.validate import (
     split_validated,
     validate_triples,
 )
+from ..persist import persist, released
 from ..sinks.materialize import ManifestStore, materialize_spo, write_stage
 
 
@@ -95,7 +96,7 @@ def dedup_pages(pages: DataFrame, mode: str = "near", threshold: float = 0.9) ->
     # FOUR lineages below (signatures, candidate-gram semi-join, the CC edge
     # materialization, and the final anti-join) — without a persist each one
     # re-runs the whole text shuffle
-    exact = exact.persist()
+    exact = persist(exact)
     pairs = minhash_duplicate_pairs(
         exact, id_col="url", text_col="text", threshold=threshold, sig_prefilter=True
     )
@@ -149,7 +150,7 @@ def run_pipeline(
     ifp_props: list | None = None,
 ) -> dict:
     """Returns dict of stage DataFrames + metrics. All heavy stages write
-    through ``write_stage`` (repartitionByRange + lineage + manifest).
+    through ``write_stage`` (repartitionByRange + per-file stats + manifest).
     ``extended_checks=True`` additionally materializes the focus-node
     constraint-report stream (see ``constraint_reports``); ``dedup`` in
     {'exact', 'near'} inserts a page-dedup stage before parsing (manifest
@@ -190,10 +191,12 @@ def run_pipeline(
             "host_filter", run_id, manifests, range_cols=["url"],
         )
     if dedup is not None:
-        pages = write_stage(
-            dedup_pages(pages, mode=dedup), os.path.join(work_root, "pages_dedup"),
-            "dedup", run_id, manifests, range_cols=["url"],
-        )
+        # dedup_pages' plan reads tables it persisted; free them once written
+        with released():
+            pages = write_stage(
+                dedup_pages(pages, mode=dedup), os.path.join(work_root, "pages_dedup"),
+                "dedup", run_id, manifests, range_cols=["url"],
+            )
     if span_dedup:
         pages = write_stage(
             span_dedup_pages(pages), os.path.join(work_root, "pages_span_dedup"),
@@ -218,39 +221,45 @@ def run_pipeline(
     all_triples = triples.filter(F.col("subject").isNotNull()).unionByName(
         mention_triples(mentions)
     )
-    validated = validate_triples(all_triples, shapes)
-    accepted, rejected = split_validated(validated)
-    closed_rejects = closed_shape_violations(all_triples, shapes).select(
-        "url", "seq", "subject", "predicate", "object", "fmt", "status", "error",
-        F.lit("violation").alias("violation_severity"), "violations",
-    )
-    rejected = rejected.unionByName(closed_rejects)
-    # accepted/rejected must stay a true PARTITION of the validated stream:
-    # a triple rejected by a closed shape may pass every row-local check, so
-    # subtract the closed rejects from accepted (else the canonical graph
-    # keeps triples the pipeline simultaneously reports as rejected, and
-    # accepted+rejected double-counts)
-    accepted = accepted.join(
-        closed_rejects.select("url", "seq", "subject", "predicate").distinct(),
-        ["url", "seq", "subject", "predicate"],
-        "left_anti",
-    )
-    accepted = write_stage(
-        accepted, os.path.join(work_root, "accepted"), "validate_accept", run_id, manifests,
-        range_cols=["subject", "predicate"],
-    )
-    rejected = write_stage(
-        rejected, os.path.join(work_root, "rejected"), "validate_reject", run_id, manifests,
-        range_cols=["subject", "predicate"],
-    )
+    # validation runs once: both verdict streams feed the accept AND the
+    # reject write, so they are persisted for the two writes and released
+    # right after the second
+    with released():
+        validated = persist(validate_triples(all_triples, shapes))
+        accepted, rejected = split_validated(validated)
+        closed_rejects = persist(closed_shape_violations(all_triples, shapes).select(
+            "url", "seq", "subject", "predicate", "object", "fmt", "status", "error",
+            F.lit("violation").alias("violation_severity"), "violations",
+        ))
+        rejected = rejected.unionByName(closed_rejects)
+        # accepted/rejected must stay a true PARTITION of the validated
+        # stream: a triple rejected by a closed shape may pass every
+        # row-local check, so subtract the closed rejects from accepted
+        # (else the canonical graph keeps triples the pipeline
+        # simultaneously reports as rejected, and accepted+rejected
+        # double-counts)
+        accepted = accepted.join(
+            closed_rejects.select("url", "seq", "subject", "predicate").distinct(),
+            ["url", "seq", "subject", "predicate"],
+            "left_anti",
+        )
+        accepted = write_stage(
+            accepted, os.path.join(work_root, "accepted"), "validate_accept", run_id,
+            manifests, range_cols=["subject", "predicate"],
+        )
+        rejected = write_stage(
+            rejected, os.path.join(work_root, "rejected"), "validate_reject", run_id,
+            manifests, range_cols=["subject", "predicate"],
+        )
 
     reports = None
     if extended_checks:
-        reports = write_stage(
-            constraint_reports(all_triples, shapes),
-            os.path.join(work_root, "reports"), "constraint_reports", run_id, manifests,
-            range_cols=["subject"],
-        )
+        with released():
+            reports = write_stage(
+                constraint_reports(all_triples, shapes),
+                os.path.join(work_root, "reports"), "constraint_reports", run_id, manifests,
+                range_cols=["subject"],
+            )
 
     if canonicalize:
         # key-based ER (owl:InverseFunctionalProperty shared values) feeds

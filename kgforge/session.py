@@ -9,8 +9,21 @@ on AQE coalescing (initialPartitionNum high, AQE shrinks).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def default_shuffle_partitions(master: str) -> int:
+    """2N for ``local[N]`` (N cores; ``local`` is one), floor 8: keeps every
+    core busy through AQE coalescing. ``local[*]`` takes N from
+    ``SPARK_GRAFT_CPUS`` (default 32); a cluster master gets 200."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\s*\d+)?\])?", master)
+    if m is None:
+        return 200
+    n = m.group(1) or "1"
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32")) if n == "*" else int(n)
+    return max(8, 2 * cores)
 
 
 def get_spark(
@@ -19,12 +32,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     if shuffle_partitions is None:
-        # local[N] -> 2N keeps every core busy through AQE coalescing
-        n = cpus if "local" in master else 200
-        shuffle_partitions = max(8, 2 * n) if "local" in master else 200
+        shuffle_partitions = default_shuffle_partitions(master)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

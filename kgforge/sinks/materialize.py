@@ -1,10 +1,13 @@
-"""Stage 07: materialize the graph as partitioned S/P/O tables with lineage
-rows and checkpointed stage manifests for exact resume.
+"""Stage 07: materialize the graph as partitioned S/P/O tables with per-file
+lineage and checkpointed stage manifests for exact resume.
 
 North-rule requirements implemented here:
-- explicit ``repartitionByRange`` before every write (range-clustered files,
-  stable file counts, no tiny-file explosion);
-- per-partition lineage rows (stage, partition, row count, content hash);
+- explicit ``repartitionByRange`` before every write (range-clustered files;
+  without an explicit count AQE sizes the files to the data, so a small
+  stage is not split into one tiny file per shuffle partition);
+- one post-write scan per table writes its per-file rows (file, row count,
+  content hash, min/max of the skip columns) to ``<path>_filestats``; the
+  manifest's row count is their sum;
 - stage manifests: a stage whose manifest exists and matches its input
   fingerprint is SKIPPED on re-run (exact resume after failure);
 - parquet here; the writer API is format-agnostic (swap ``.format("iceberg")
@@ -22,40 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _row_hash(cols: list[str]):
+    """Per-row content hash: xxhash64 over the string-cast columns, widened
+    so that sums over any number of rows cannot overflow."""
+    return F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)")
+
+
 def content_fingerprint(df: DataFrame, cols: list[str] | None = None) -> str:
     """Order-insensitive content hash: sum + count of per-row xxhash64."""
-    cols = cols or df.columns
     row = df.select(
-        F.sum(F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)")).alias("h"),
-        F.count("*").alias("c"),
+        F.sum(_row_hash(cols or df.columns)).alias("h"), F.count("*").alias("c")
     ).collect()[0]
     return f"{row['h']}:{row['c']}"
-
-
-def partition_lineage(df: DataFrame, stage: str, run_id: str) -> DataFrame:
-    """Per-partition lineage rows computed in the same pass as the write's
-    input (spark_partition_id + per-partition count/hash)."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count("*").alias("output_rows"),
-            F.sum(
-                F.xxhash64(*[F.col(c).cast("string") for c in df.columns if c != "_pid"]).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("_h"),
-        )
-        .select(
-            F.lit(stage).alias("stage"),
-            F.lit(run_id).alias("run_id"),
-            F.col("_pid").alias("partition_id"),
-            F.lit(None).cast("long").alias("input_rows"),
-            "output_rows",
-            F.col("_h").cast("string").alias("content_hash"),
-            F.lit("ok").alias("status"),
-        )
-    )
 
 
 class ManifestStore:
@@ -152,38 +133,40 @@ def write_stage(
     stats_cols: list[str] | None = None,
     zorder_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Range-repartition -> write parquet -> lineage rows -> file-level
-    min/max skipping stats (on the range columns, whose per-file ranges
-    the range partitioning makes narrow) -> manifest. Returns the re-read
-    DataFrame (checkpointed lineage cut). ``zorder_cols`` switches the
-    layout to Z-order clustering (multi-column skipping; see
-    zorder_key_col) — stats are then written for every z-ordered column."""
+    """Range-repartition -> write parquet -> one post-write scan for the
+    per-file table (rows, content hash, min/max skipping stats on the range
+    columns, whose per-file ranges the range partitioning makes narrow; see
+    write_file_stats) -> manifest, whose ``rows`` is the per-file rows'
+    sum. Returns the re-read DataFrame (checkpointed lineage cut).
+
+    Without ``num_partitions`` the range shuffle has no fixed count, so AQE
+    coalesces it to the data's size: a 64-row stage is one file, not one
+    file per shuffle partition. An explicit ``num_partitions`` is kept.
+    ``zorder_cols`` switches the layout to Z-order clustering (multi-column
+    skipping; see zorder_key_col) — stats are then written for every
+    z-ordered column."""
     spark = df.sparkSession
     if manifests.is_complete(run_id, stage, input_fingerprint):
         return spark.read.parquet(path)
     t0 = time.time()
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
+    count = [num_partitions] if num_partitions else []
     if zorder_cols:
         df = (
             zorder_key_col(df, zorder_cols)
-            .repartitionByRange(n, F.col("_zkey"))
+            .repartitionByRange(*count, F.col("_zkey"))
             .sortWithinPartitions("_zkey")
             .drop("_zkey")
         )
         if stats_cols is None:
             stats_cols = zorder_cols
     elif range_cols:
-        df = df.repartitionByRange(n, *[F.col(c) for c in range_cols])
+        df = df.repartitionByRange(*count, *[F.col(c) for c in range_cols])
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    out = spark.read.parquet(path)
-    lineage = partition_lineage(out, stage, run_id)
-    lineage.write.mode("overwrite").parquet(os.path.join(path.rstrip("/") + "_lineage"))
     skip_cols = stats_cols if stats_cols is not None else (range_cols or [])
-    if skip_cols:
-        write_file_stats(path, spark, skip_cols)
+    stats = write_file_stats(path, spark, skip_cols)
     manifests.save(
         run_id,
         stage,
@@ -192,29 +175,44 @@ def write_stage(
             "stage": stage,
             "run_id": run_id,
             "path": path,
-            "rows": out.count(),
+            "rows": _total_rows(stats),
             "input_fingerprint": input_fingerprint,
             "elapsed_sec": round(time.time() - t0, 3),
         },
     )
-    return out
+    return spark.read.parquet(path)
 
 
 def write_file_stats(df_path: str, spark: SparkSession, cols: list[str]) -> DataFrame:
-    """Iceberg-style data-skipping index: per-FILE min/max for ``cols``,
-    written next to the table (``<path>_filestats``). One scan at write
-    time (map-side-combined groupBy on input_file_name) buys point/range
-    lookups that open only the files whose range overlaps the predicate.
-    Effective BECAUSE write_stage range-repartitions on the cluster
-    column first — each file then covers a narrow, mostly-disjoint slice
-    of the key space, so a point lookup touches ~1 file instead of all."""
+    """The table's one post-write scan: an Iceberg-manifest-style per-FILE
+    table written next to it (``<path>_filestats``). A single groupBy on
+    input_file_name (map-side combined) yields, per data file:
+
+    - ``rows``;
+    - ``content_hash``, the sum of the per-row xxhash64 over all columns,
+      so the files' hashes sum to the table's ``content_fingerprint`` and
+      per-file lineage needs no second scan;
+    - ``min_<c>``/``max_<c>`` for each of ``cols``, the data-skipping
+      index ``pruned_read`` plans from: point/range lookups open only the
+      files whose range overlaps the predicate. Effective BECAUSE
+      write_stage range-repartitions on the cluster column first — each
+      file then covers a narrow, mostly-disjoint slice of the key space,
+      so a point lookup touches ~1 file instead of all.
+
+    Returns the written table, re-read (file-count-sized)."""
     table = spark.read.parquet(df_path)
-    aggs = []
+    aggs = [F.count("*").alias("rows"), F.sum(_row_hash(table.columns)).alias("content_hash")]
     for c in cols:
         aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    stats = table.groupBy(F.input_file_name().alias("file")).agg(*aggs)
-    stats.coalesce(1).write.mode("overwrite").parquet(df_path.rstrip("/") + "_filestats")
-    return stats
+    stats_path = df_path.rstrip("/") + "_filestats"
+    table.groupBy(F.input_file_name().alias("file")).agg(*aggs).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(stats_path)
+    return spark.read.parquet(stats_path)
+
+
+def _total_rows(stats: DataFrame) -> int:
+    return int(stats.agg(F.sum("rows")).first()[0] or 0)
 
 
 def pruned_read(spark: SparkSession, path: str, col: str, lo, hi=None) -> DataFrame:
@@ -300,7 +298,8 @@ def compact_stage(
        (preserves range clustering so downstream range pruning still works),
     3. verifies the rewrite with an order-insensitive content fingerprint
        BEFORE swapping it in (a failed verify leaves the original intact),
-    4. refreshes the stage manifest + lineage rows.
+    4. rewrites the per-file table (write_file_stats: the old one names
+       the replaced files) and refreshes the stage manifest.
     """
     import shutil
 
@@ -330,14 +329,12 @@ def compact_stage(
         )
     shutil.rmtree(path)
     os.replace(tmp, path)
-    out = spark.read.parquet(path)
-    lineage = partition_lineage(out, stage, run_id)
-    lineage.write.mode("overwrite").parquet(os.path.join(path.rstrip("/") + "_lineage"))
+    stats = write_file_stats(path, spark, range_cols)
     rec = manifests.load(run_id, stage) or {"status": "complete", "stage": stage, "run_id": run_id}
     rec.update(
         {
             "path": path,
-            "rows": out.count(),
+            "rows": _total_rows(stats),
             "compacted": True,
             "files_before": int(n_files_before),
             "files_after": int(n_parts),
@@ -345,4 +342,4 @@ def compact_stage(
         }
     )
     manifests.save(run_id, stage, rec)
-    return out
+    return spark.read.parquet(path)

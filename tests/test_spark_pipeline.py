@@ -353,7 +353,12 @@ def test_compact_stage(spark, tmp_path):
     import glob
 
     from kgforge.operators.parse import parse_combined, split_parsed
-    from kgforge.sinks.materialize import ManifestStore, compact_stage, write_stage
+    from kgforge.sinks.materialize import (
+        ManifestStore,
+        compact_stage,
+        pruned_read,
+        write_stage,
+    )
 
     from kgforge.fixtures import pages_df
 
@@ -373,6 +378,14 @@ def test_compact_stage(spark, tmp_path):
     rec = ms.load("r1", "parse")
     assert rec["compacted"] is True and rec["files_after"] == 1
     assert rec["files_before"] > 1
+    # the per-file table is rewritten for the compacted file: pruned reads
+    # never plan from the names of the replaced files
+    stats = spark.read.parquet(work + "/t_filestats").collect()
+    assert [r.rows for r in stats] == [rec["rows"]] == [compacted.count()]
+    url = min(u for u, _ in before)
+    assert pruned_read(spark, work + "/t", "url", url).count() == (
+        compacted.filter(F.col("url") == url).count()
+    )
 
 
 def test_pipeline_span_dedup_stage(spark, tmp_path):
