@@ -193,15 +193,3 @@ MENTIONS_SCHEMA = StructType(
         StructField("score", DoubleType(), True),
     ]
 )
-
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("stage", S, False),
-        StructField("run_id", S, False),
-        StructField("partition_id", IntegerType(), True),
-        StructField("input_rows", LongType(), True),
-        StructField("output_rows", LongType(), True),
-        StructField("content_hash", S, True),
-        StructField("status", S, True),
-    ]
-)

@@ -1,13 +1,15 @@
 """Stage 07: materialize the graph as partitioned S/P/O tables with per-file
-lineage and checkpointed stage manifests for exact resume.
+stats and checkpointed stage manifests for exact resume.
 
 North-rule requirements implemented here:
 - explicit ``repartitionByRange`` before every write (range-clustered files;
   without an explicit count AQE sizes the files to the data, so a small
   stage is not split into one tiny file per shuffle partition);
-- one post-write scan per table writes its per-file rows (file, row count,
-  content hash, min/max of the skip columns) to ``<path>_filestats``; the
-  manifest's row count is their sum;
+- per-file metadata is footer-derived and costs no Spark job: after each
+  write the driver folds every data file's Parquet footer into
+  ``<path>_filestats`` (file, row count, min/max of the skip columns); the
+  manifest's row count is their sum, and ``pruned_read`` plans from that
+  table on the driver. A NULL bound means "no bound": the file is read;
 - stage manifests: a stage whose manifest exists and matches its input
   fingerprint is SKIPPED on re-run (exact resume after failure);
 - parquet here; the writer API is format-agnostic (swap ``.format("iceberg")
@@ -19,10 +21,18 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's Parquet writer stores the table's Spark schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _row_hash(cols: list[str]):
@@ -127,17 +137,18 @@ def write_stage(
     run_id: str,
     manifests: ManifestStore,
     range_cols: list[str] | None = None,
-    partition_by: list[str] | None = None,
     num_partitions: int | None = None,
     input_fingerprint: str | None = None,
     stats_cols: list[str] | None = None,
     zorder_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Range-repartition -> write parquet -> one post-write scan for the
-    per-file table (rows, content hash, min/max skipping stats on the range
-    columns, whose per-file ranges the range partitioning makes narrow; see
-    write_file_stats) -> manifest, whose ``rows`` is the per-file rows'
-    sum. Returns the re-read DataFrame (checkpointed lineage cut).
+    """Range-repartition -> write parquet -> the per-file table, footer-
+    derived with no Spark job (rows and min/max skipping stats on the range
+    columns, whose per-file ranges the range partitioning makes narrow; a
+    NULL bound = read the file; see write_file_stats) -> manifest, whose
+    ``rows`` is the per-file rows' sum. Returns the re-read DataFrame
+    (checkpointed lineage cut), read with the footer schema so that no
+    schema-inference job runs, after a write and on resume alike.
 
     Without ``num_partitions`` the range shuffle has no fixed count, so AQE
     coalesces it to the data's size: a 64-row stage is one file, not one
@@ -147,7 +158,7 @@ def write_stage(
     z-ordered column."""
     spark = df.sparkSession
     if manifests.is_complete(run_id, stage, input_fingerprint):
-        return spark.read.parquet(path)
+        return _read_table(spark, path)
     t0 = time.time()
     count = [num_partitions] if num_partitions else []
     if zorder_cols:
@@ -161,10 +172,7 @@ def write_stage(
             stats_cols = zorder_cols
     elif range_cols:
         df = df.repartitionByRange(*count, *[F.col(c) for c in range_cols])
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode("overwrite").parquet(path)
     skip_cols = stats_cols if stats_cols is not None else (range_cols or [])
     stats = write_file_stats(path, spark, skip_cols)
     manifests.save(
@@ -175,71 +183,130 @@ def write_stage(
             "stage": stage,
             "run_id": run_id,
             "path": path,
-            "rows": _total_rows(stats),
+            "rows": sum(r["rows"] for r in stats),
             "input_fingerprint": input_fingerprint,
             "elapsed_sec": round(time.time() - t0, 3),
         },
     )
-    return spark.read.parquet(path)
+    return _read_table(spark, path)
 
 
-def write_file_stats(df_path: str, spark: SparkSession, cols: list[str]) -> DataFrame:
-    """The table's one post-write scan: an Iceberg-manifest-style per-FILE
-    table written next to it (``<path>_filestats``). A single groupBy on
-    input_file_name (map-side combined) yields, per data file:
+def _data_files(path: str) -> list[str]:
+    """The table's data files, as Spark lists them (hidden and ``_`` files
+    skipped)."""
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
+
+def _read_table(spark: SparkSession, path: str, files: list[str] | None = None) -> DataFrame:
+    """Read the Spark-written table at ``path`` (only ``files`` of it, when
+    given) with the Spark schema its writer stored in the data files'
+    footers, so Spark runs no schema-inference job."""
+    local = _data_files(path)
+    raw = (pq.read_metadata(local[0]).metadata or {}).get(SPARK_SCHEMA_KEY) if local else None
+    reader = spark.read.schema(StructType.fromJson(json.loads(raw))) if raw else spark.read
+    return reader.parquet(*(files or [path]))
+
+
+def _bounds(md: pq.FileMetaData, j: int) -> tuple:
+    """(min, max) of leaf column ``j`` over a file's row groups, from its
+    footer. All-NULL row groups hold no value to bound; any other row group
+    without min/max (Spark's writer drops them for a string over 4 KB) makes
+    the file unbounded, (None, None) — as is a file with no value at all."""
+    lows, highs = [], []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(j).statistics
+        if st is not None and st.has_min_max:
+            lows.append(st.min)
+            highs.append(st.max)
+        elif st is None or not st.has_null_count or st.null_count != rg.num_rows:
+            return None, None
+    return (min(lows), max(highs)) if lows else (None, None)
+
+
+def write_file_stats(df_path: str, spark: SparkSession, cols: list[str]) -> list[dict]:
+    """An Iceberg-manifest-style per-FILE table written next to the table
+    (``<path>_filestats``), footer-derived on the driver with no Spark job.
+    Each data file's Parquet footer is folded into one row:
+
+    - ``file``, the URI Spark's ``input_file_name()`` gives for it;
     - ``rows``;
-    - ``content_hash``, the sum of the per-row xxhash64 over all columns,
-      so the files' hashes sum to the table's ``content_fingerprint`` and
-      per-file lineage needs no second scan;
-    - ``min_<c>``/``max_<c>`` for each of ``cols``, the data-skipping
-      index ``pruned_read`` plans from: point/range lookups open only the
-      files whose range overlaps the predicate. Effective BECAUSE
-      write_stage range-repartitions on the cluster column first — each
-      file then covers a narrow, mostly-disjoint slice of the key space,
-      so a point lookup touches ~1 file instead of all.
+    - ``min_<c>``/``max_<c>`` for each of ``cols`` (typed like ``c``), the
+      data-skipping index ``pruned_read`` plans from: point/range lookups
+      open only the files whose range overlaps the predicate. Effective
+      BECAUSE write_stage range-repartitions on the cluster column first —
+      each file then covers a narrow, mostly-disjoint slice of the key
+      space, so a point lookup touches ~1 file instead of all. A NULL bound
+      (the footer has none; see _bounds) = read the file.
 
-    Returns the written table, re-read (file-count-sized)."""
-    table = spark.read.parquet(df_path)
-    aggs = [F.count("*").alias("rows"), F.sum(_row_hash(table.columns)).alias("content_hash")]
-    for c in cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    Nothing prunes the stats table itself, so it is written lean: no column
+    statistics, no stored Arrow schema. Returns its rows."""
+    files = _data_files(df_path)
+    footers = [pq.read_metadata(f) for f in files]
+    rows = []
+    for f, md in zip(files, footers):
+        leaf = {md.schema.column(j).path: j for j in range(md.num_columns)}
+        row = {"file": pathlib.Path(os.path.abspath(f)).as_uri(), "rows": md.num_rows}
+        for c in cols:
+            row[f"min_{c}"], row[f"max_{c}"] = _bounds(md, leaf[c])
+        rows.append(row)
+    arrow = footers[0].schema.to_arrow_schema()
+    schema = pa.schema(
+        [("file", pa.string()), ("rows", pa.int64())]
+        + [(f"{side}_{c}", arrow.field(c).type) for c in cols for side in ("min", "max")]
+    )
     stats_path = df_path.rstrip("/") + "_filestats"
-    table.groupBy(F.input_file_name().alias("file")).agg(*aggs).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stats_path)
-    return spark.read.parquet(stats_path)
+    shutil.rmtree(stats_path, ignore_errors=True)
+    os.makedirs(stats_path)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema),
+        os.path.join(stats_path, "part-00000.parquet"),
+        store_schema=False,
+        write_statistics=False,
+    )
+    return rows
 
 
-def _total_rows(stats: DataFrame) -> int:
-    return int(stats.agg(F.sum("rows")).first()[0] or 0)
+def _overlaps(lo_bound, hi_bound, lo, hi) -> bool:
+    """Can a file bounded by [lo_bound, hi_bound] hold a value in [lo, hi]?
+    A NULL bound is no bound, and bounds that do not compare with the key
+    keep the file: correctness never depends on skipping one."""
+    try:
+        return (hi_bound is None or lo <= hi_bound) and (lo_bound is None or lo_bound <= hi)
+    except TypeError:
+        return True
 
 
 def pruned_read(spark: SparkSession, path: str, col: str, lo, hi=None) -> DataFrame:
     """Read only the files whose [min,max] range can contain
     ``col BETWEEN lo AND hi`` (point lookup when hi is omitted), per the
-    ``_filestats`` index; the exact predicate is re-applied after the
-    pruned scan so results equal a full-scan filter. Falls back to a full
-    filtered read when no stats table exists. The stats table is
-    file-count-sized — collecting the surviving file list to the driver
-    is manifest-sized work, same as Iceberg's planning phase."""
+    footer-derived ``_filestats`` index; a NULL bound = read the file. The
+    exact predicate is re-applied after the pruned scan so results equal a
+    full-scan filter. Planning runs on the driver like Iceberg's: the stats
+    table is read with pyarrow, files are kept by plain comparisons, and
+    the data is read with its footer schema, so the caller's scan is the
+    only Spark job. Falls back to a full filtered read when no stats table
+    exists."""
     if hi is None:
         hi = lo
     exact = lambda df: df.filter(F.col(col).between(lo, hi))  # noqa: E731
     stats_path = path.rstrip("/") + "_filestats"
     try:
-        stats = spark.read.parquet(stats_path)
-    except Exception:
+        stats = pq.read_table(stats_path).to_pylist()
+    except FileNotFoundError:
         return exact(spark.read.parquet(path))
     keep = [
-        r.file
-        for r in stats.filter(
-            ~((F.col(f"max_{col}") < lo) | (F.col(f"min_{col}") > hi))
-        ).collect()
+        r["file"]
+        for r in stats
+        if r["rows"] and _overlaps(r[f"min_{col}"], r[f"max_{col}"], lo, hi)
     ]
     if not keep:
-        return exact(spark.read.parquet(path)).filter(F.lit(False))
-    return exact(spark.read.parquet(*keep))
+        return exact(_read_table(spark, path)).filter(F.lit(False))
+    return exact(_read_table(spark, path, keep))
 
 
 def materialize_spo(
@@ -301,8 +368,6 @@ def compact_stage(
     4. rewrites the per-file table (write_file_stats: the old one names
        the replaced files) and refreshes the stage manifest.
     """
-    import shutil
-
     df = spark.read.parquet(path)
     on_disk = sum(
         os.path.getsize(os.path.join(dp, f))
@@ -334,7 +399,7 @@ def compact_stage(
     rec.update(
         {
             "path": path,
-            "rows": _total_rows(stats),
+            "rows": sum(r["rows"] for r in stats),
             "compacted": True,
             "files_before": int(n_files_before),
             "files_after": int(n_parts),

@@ -1,12 +1,15 @@
 """File-level min/max data skipping (sinks/materialize.py:
 write_file_stats / pruned_read): pruned reads must equal full-scan
 filters while opening strictly fewer files — and on the per-file table
-that write_file_stats writes as each stage's one post-write scan."""
+that write_file_stats folds from the data files' Parquet footers, with
+no Spark job, after each stage write. A file whose footer has no bound
+is read, never skipped."""
 
 import glob
 import os
-from decimal import Decimal
+import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from kgforge.sinks.materialize import (
@@ -86,9 +89,11 @@ def _data_files(path):
 
 
 def test_filestats_is_the_per_file_table(spark, tmp_path):
-    """One _filestats row per data file; its rows sum to the manifest's
-    rows and the table count, and its content hashes sum to the table's
-    content_fingerprint. No per-partition lineage table is written."""
+    """One _filestats row per data file, named by the URI Spark's
+    input_file_name() gives; its rows sum to the manifest's rows and the
+    table count. Footers carry no content hash, so the table has no
+    content_hash column (content_fingerprint hashes a table's content). No
+    per-partition lineage table is written."""
     path = _table(spark, tmp_path)
     stats = spark.read.parquet(path + "_filestats").collect()
     files = _data_files(path)
@@ -97,11 +102,14 @@ def test_filestats_is_the_per_file_table(spark, tmp_path):
         os.path.basename(f) for f in files
     )
     table = spark.read.parquet(path)
+    assert {r.file for r in stats} == {
+        r.f for r in table.select(F.input_file_name().alias("f")).distinct().collect()
+    }
     rec = ManifestStore(str(tmp_path / "manifests")).load("r1", "s")
     assert sum(r.rows for r in stats) == rec["rows"] == table.count() == 1000
-    h, n = content_fingerprint(table).split(":")
-    assert sum(r.content_hash for r in stats) == Decimal(h)
+    _h, n = content_fingerprint(table).split(":")
     assert int(n) == rec["rows"]
+    assert "content_hash" not in stats[0].asDict()
     assert not os.path.exists(path + "_lineage")
 
 
@@ -145,3 +153,88 @@ def test_resume_skips_complete_stage(spark, tmp_path):
     out = write_stage(other, path, "s", "r1", ms, range_cols=["subject"], num_partitions=8)
     assert sorted(_data_files(path) + _data_files(path + "_filestats")) == before
     assert out.count() == 1000
+
+
+def _appended(spark, path, parts):
+    """A table of one data file per entry of ``parts`` (rows of (subject,
+    v)), in order, with its per-file table written for ``subject``."""
+    for rows in parts:
+        spark.createDataFrame(rows, "subject string, v long").coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+    write_file_stats(path, spark, ["subject"])
+    return {r["file"]: r for r in pq.read_table(path + "_filestats").to_pylist()}
+
+
+def _matches_full_scan(spark, path, key):
+    full = spark.read.parquet(path).filter(F.col("subject") == key).collect()
+    got = pruned_read(spark, path, "subject", key).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, full))
+    return got
+
+
+def test_file_without_footer_bounds_is_read(spark, tmp_path):
+    """Spark's Parquet writer drops a row group's min/max (and its null
+    count) when a string in it is over 4 KB: that file's bounds are NULL,
+    and a NULL bound means "no bound", so a lookup still reads the file.
+    Treating NULL bounds as "skip" would lose the long value's row."""
+    path = str(tmp_path / "long")
+    big = "s0999" + "x" * 5000
+    stats = _appended(spark, path, [
+        [(f"s{i:04d}", i) for i in range(500)],
+        [(f"s{i:04d}", i) for i in range(500, 1000)] + [(big, -1)],
+    ])
+    assert {(r["min_subject"], r["max_subject"]) for r in stats.values()} == {
+        (None, None), ("s0000", "s0499")
+    }
+    assert [r.v for r in _matches_full_scan(spark, path, big)] == [-1]
+    assert len(_matches_full_scan(spark, path, "s0123")) == 1
+    # the bounded file is still pruned for a key outside its range
+    assert len(_matches_full_scan(spark, path, "s0700")) == 1
+    assert len(pruned_read(spark, path, "subject", "s0700").inputFiles()) == 1
+
+
+def test_all_null_file_is_read(spark, tmp_path):
+    """A file whose stats column is all NULL has no min/max either; its
+    bounds are NULL, and lookups still equal a full-scan filter."""
+    path = str(tmp_path / "nulls")
+    stats = _appended(spark, path, [
+        [(None, i) for i in range(50)],
+        [(f"s{i:04d}", i) for i in range(100)],
+    ])
+    assert {(r["min_subject"], r["max_subject"]) for r in stats.values()} == {
+        (None, None), ("s0000", "s0099")
+    }
+    assert len(_matches_full_scan(spark, path, "s0042")) == 1
+    assert _matches_full_scan(spark, path, "zzz") == []
+
+
+def _jobs_submitted(spark, fn):
+    """``fn()``'s result and how many Spark jobs it submitted, counted
+    through a job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_metadata_submits_no_spark_jobs(spark, tmp_path):
+    """Folding the per-file table, planning a pruned read and re-reading a
+    complete stage all run on the driver: 0 Spark jobs each. The lookup's
+    own scan is the one job, which shows the counter counts."""
+    path = _table(spark, tmp_path)
+    ms = ManifestStore(str(tmp_path / "manifests"))
+    assert _jobs_submitted(spark, lambda: write_file_stats(path, spark, ["subject"]))[1] == 0
+    planned, jobs = _jobs_submitted(spark, lambda: pruned_read(spark, path, "subject", "s0123"))
+    assert jobs == 0
+    resumed, jobs = _jobs_submitted(
+        spark, lambda: write_stage(spark.range(1), path, "s", "r1", ms, range_cols=["subject"])
+    )
+    assert jobs == 0
+    assert resumed.columns == ["subject", "v"]
+    assert _jobs_submitted(spark, planned.collect)[1] >= 1
