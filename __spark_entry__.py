@@ -1518,7 +1518,9 @@ def q_emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("i").cast("long").alias("i"),
             F.col("j").cast("long").alias("j"),
-            F.round("cov", 6).alias("cov"),
+            # + 0.0 turns a rounded -0.0 into 0.0 (IEEE: -0 + +0 = +0); the
+            # DuckDB twin does the same, so the signs of zero cells agree
+            (F.round("cov", 6) + 0.0).alias("cov"),
         )
         .orderBy("i", "j")
     )
@@ -6349,7 +6351,8 @@ def oracle_sql() -> dict[str, str]:
         # fixed-point covariance: the same quantization (floor(x*2^20+0.5),
         # exact IEEE ops), exact HUGEINT sums (order-free, so ANY partition
         # layout on the Spark side reduces to the same integers), and the
-        # identical final float expression (g/n - (si/n)(sj/n)) / 2^40
+        # identical final float expression (g/n - (si/n)(sj/n)) / 2^40,
+        # rounded, + 0.0 so a negative zero reads as +0.0 on both sides
         "q_emb_covariance": """
             WITH idx AS (SELECT UNNEST(range(64)) AS i),
             v AS (SELECT e.vec_id, idx.i,
@@ -6365,7 +6368,7 @@ def oracle_sql() -> dict[str, str]:
                    ROUND((CAST(g.g AS DOUBLE) / n.n
                           - (CAST(si.s AS DOUBLE) / n.n)
                             * (CAST(sj.s AS DOUBLE) / n.n))
-                         / 1099511627776.0, 6) AS cov
+                         / 1099511627776.0, 6) + 0.0 AS cov
             FROM g
             CROSS JOIN n
             JOIN s si ON si.i = g.i

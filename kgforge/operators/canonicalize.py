@@ -311,7 +311,6 @@ def connected_components(
     spark: SparkSession | None = None,
     max_iterations: int = 20,
     num_partitions: int | None = None,
-    verbose: bool = False,
     driver_cap: int = 100_000,
 ) -> DataFrame:
     """(src: string, dst: string) -> (node: string, component: string).
@@ -439,10 +438,7 @@ def connected_components(
         )
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    for it in range(max_iterations):
-        import time as _time
-
-        t0 = _time.time()
+    for _it in range(max_iterations):
         e2 = large_star(e)
         # no repartition before checkpoint: the next iteration's first op is
         # a groupBy that reshuffles anyway, so co-locating here is a wasted
@@ -467,10 +463,7 @@ def connected_components(
             .agg(F.sum("s").alias("ns"), F.min("s").alias("mn"))
             .filter((F.col("ns") > 1) | ((F.col("ns") >= 1) & (F.col("mn") == 0)))
         )
-        converged = not_star.isEmpty()
-        if verbose:
-            print(f"CC iter {it}: {_time.time() - t0:.1f}s converged={converged}", flush=True)
-        if converged:
+        if not_star.isEmpty():
             break
 
     # converged edge set is a star per component: (member u -> center v=min)

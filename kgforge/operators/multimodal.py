@@ -33,7 +33,6 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -487,14 +486,6 @@ def image_features(
             yield pd.DataFrame(rows)
 
     return media.select("media_id", "payload").mapInPandas(fn, schema=IMAGE_FEATURES_SCHEMA)
-
-
-def media_metadata(media: DataFrame) -> DataFrame:
-    """Metadata-only projection — binary column pruned at the scan."""
-    return media.select("media_id", "kind", "mime", "width", "height", "duration_ms").withColumn(
-        "aspect",
-        F.when(F.col("height") > 0, F.round(F.col("width") / F.col("height"), 4)),
-    )
 
 
 def media_color(i: int) -> tuple[int, int, int]:

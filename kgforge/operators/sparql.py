@@ -31,7 +31,7 @@ through the constraint's own sh:prefixes declarations.
 Semantics (W3C SHACL-SPARQL): a SELECT solution IS a violation — every
 focus node the query returns fails the constraint; an ASK query must
 return true for the focus node to conform (no solution = violation).
-Pattern matching is page-scoped by default (``same_url_scope``): every
+Pattern matching is page-scoped: every
 group — including OPTIONAL/UNION/EXISTS groups — binds an implicit page
 variable, so a constraint can only see triples from its focus node's own
 document, mirroring the reference's per-file parse unit.
@@ -239,13 +239,11 @@ def _filter_cond(flt, bind):
     return _OPS[op](col(var), F.lit(rv))
 
 
-def _constraint_solutions(
-    focus: DataFrame, data: DataFrame, q: dict, same_url_scope: bool
-) -> DataFrame:
+def _constraint_solutions(focus: DataFrame, data: DataFrame, q: dict) -> DataFrame:
     """focus(f_url, focus, shape_uri) x parsed WHERE -> matched focus rows.
 
     The focus DataFrame SEEDS the shared WHERE compiler: ``?__this`` is
-    pre-bound to the focus column, and with ``same_url_scope`` the reserved
+    pre-bound to the focus column, and the reserved
     ``?__url`` variable (pre-bound to the focus node's page) forces every
     pattern join — in the main group AND in OPTIONAL/UNION/EXISTS groups,
     which bind it on first use and then share it — onto the focus page."""
@@ -254,7 +252,7 @@ def _constraint_solutions(
         data,
         q["where"],
         seed=(focus, seed_bind, ["f_url", "focus", "shape_uri"]),
-        url_var="__url" if same_url_scope else None,
+        url_var="__url",
     )
     return cur.select(
         F.col(bind["__url"]).alias("f_url"),
@@ -266,7 +264,6 @@ def _constraint_solutions(
 def sparql_constraint_violations(
     triples: DataFrame,
     shapes: DataFrame,
-    same_url_scope: bool = True,
     max_distinct_queries: int = 1000,
     strict: bool = False,
 ) -> DataFrame:
@@ -350,9 +347,7 @@ def sparql_constraint_violations(
             & (F.col("q_ask").eqNullSafe(row["q_ask"]))
             & (F.col("pfx_key") == row["pfx_key"])
         )
-        f_cond = typed.cls == carriers.target_class
-        if same_url_scope:
-            f_cond = f_cond & (typed.url == carriers.shape_url)
+        f_cond = (typed.cls == carriers.target_class) & (typed.url == carriers.shape_url)
         focus = (
             typed.alias("ty")
             .join(carriers.alias("cb"), f_cond)
@@ -364,7 +359,7 @@ def sparql_constraint_violations(
             .distinct()
         )
         try:
-            matched = _constraint_solutions(focus, data, q, same_url_scope)
+            matched = _constraint_solutions(focus, data, q)
         except SparqlUnsupported:
             if strict:
                 raise
@@ -1020,7 +1015,7 @@ def _join_bgp(cur, kept, bind, data, patterns, url_var=None):
     (cur, kept). ``bind`` is mutated: var -> column name. Greedy connected
     order. When ``url_var`` is set, every pattern join also equates the
     fact row's page with that reserved variable — binding it on first use —
-    confining the whole group to one page (sh:sparql same_url_scope)."""
+    confining the whole group to one page (sh:sparql page scoping)."""
     remaining = list(patterns)
     ordinal = [0]
     while remaining:

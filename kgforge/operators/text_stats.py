@@ -107,20 +107,6 @@ def fingerprint_col(text_col, chunk: int = 64):
     return F.array_min(chunks)
 
 
-def text_profile(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One row per doc: tokens, subword tokens, detected lang, quality,
-    fingerprint."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(id_col),
-        token_count_col(t).alias("n_tokens"),
-        bpe_ish_token_count_col(t).alias("n_subtokens"),
-        lang_id_col(t).alias("lang_pred"),
-        quality_score_col(t).alias("quality"),
-        fingerprint_col(t).alias("fingerprint"),
-    )
-
-
 def repetition_stats(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -439,9 +439,7 @@ def validate_triples(
     return row.withColumn("violations", violations).drop("vmask")
 
 
-def closed_shape_violations(
-    triples: DataFrame, shapes: DataFrame, same_url_scope: bool = True
-) -> DataFrame:
+def closed_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     """Triples violating ``sh:closed`` shapes (W3C §4.8.1): a focus node
     (subject typed as a closed shape's target class) may only use predicates
     that appear as predicate-paths of the shape's property shapes or in
@@ -475,14 +473,12 @@ def closed_shape_violations(
         )
     )
     typed = _typed_subjects(data)
-    focus_cond = typed.cls == closed.target_class
-    if same_url_scope:
-        focus_cond = focus_cond & (typed.url == closed.shape_url)
+    focus_cond = (typed.cls == closed.target_class) & (typed.url == closed.shape_url)
     focus = typed.join(closed, focus_cond).select(
         "url", "subject", "shape_uri", "allowed"
     )
     viol_cond = (F.col("t.subject") == F.col("fo.subject")) & (
-        (F.col("t.url") == F.col("fo.url")) if same_url_scope else F.lit(True)
+        F.col("t.url") == F.col("fo.url")
     )
     return (
         data.alias("t")
@@ -496,9 +492,7 @@ def closed_shape_violations(
     )
 
 
-def pair_constraint_violations(
-    triples: DataFrame, shapes: DataFrame, same_url_scope: bool = True
-) -> DataFrame:
+def pair_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     """Focus-node pair constraints (W3C §4.6): sh:equals, sh:disjoint,
     sh:lessThan, sh:lessThanOrEquals — the extracted-as-metadata parameters
     (ShaclPropertyAnalyzer.php:27-30) executed as value-set comparisons
@@ -536,9 +530,7 @@ def pair_constraint_violations(
         pair_rules = r if pair_rules is None else pair_rules.unionByName(r)
 
     # focus nodes of each rule
-    focus_cond = typed.cls == pair_rules.target_class
-    if same_url_scope:
-        focus_cond = focus_cond & (typed.url == pair_rules.shape_url)
+    focus_cond = (typed.cls == pair_rules.target_class) & (typed.url == pair_rules.shape_url)
     focus = typed.join(pair_rules, focus_cond).select(
         "url", "subject", "shape_uri", "path", "other_path", "constraint"
     )
@@ -546,9 +538,8 @@ def pair_constraint_violations(
     vals = data.select("url", "subject", "predicate", F.col("object.value").alias("val"))
     lhs_cond = (F.col("fo.subject") == F.col("lv.subject")) & (F.col("fo.path") == F.col("lv.predicate"))
     rhs_cond = (F.col("fo.subject") == F.col("rv.subject")) & (F.col("fo.other_path") == F.col("rv.predicate"))
-    if same_url_scope:
-        lhs_cond = lhs_cond & (F.col("fo.url") == F.col("lv.url"))
-        rhs_cond = rhs_cond & (F.col("fo.url") == F.col("rv.url"))
+    lhs_cond = lhs_cond & (F.col("fo.url") == F.col("lv.url"))
+    rhs_cond = rhs_cond & (F.col("fo.url") == F.col("rv.url"))
 
     lhs = focus.alias("fo").join(vals.alias("lv"), lhs_cond, "left").select(
         "fo.*", F.col("lv.val").alias("lval")
@@ -688,9 +679,7 @@ def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     )
 
 
-def qualified_cardinality_violations(
-    triples: DataFrame, shapes: DataFrame, same_url_scope: bool = True
-) -> DataFrame:
+def qualified_cardinality_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     """sh:qualifiedValueShape + qualifiedMin/MaxCount execution (W3C §4.5.3)
     for the row-local-checkable value-shape subset (sh:class / sh:datatype /
     sh:nodeKind — covers the reference fixture pattern).
@@ -708,9 +697,7 @@ def qualified_cardinality_violations(
     data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
     typed = _typed_subjects(data)
 
-    focus_cond = (typed.cls == qrules.target_class)
-    if same_url_scope:
-        focus_cond = focus_cond & (typed.url == qrules.url)
+    focus_cond = (typed.cls == qrules.target_class) & (typed.url == qrules.url)
     focus = typed.alias("ty").join(qrules.alias("qr"), focus_cond).select(
         F.col("ty.url").alias("url"),
         F.col("ty.subject").alias("subject"),
@@ -726,9 +713,11 @@ def qualified_cardinality_violations(
             F.when(F.col("object.datatype") != "", F.col("object.datatype")), F.lit(XSD + "string")
         ).alias("val_dt"),
     )
-    v_cond = (F.col("fo.subject") == F.col("v.subject")) & (F.col("fo.path") == F.col("v.predicate"))
-    if same_url_scope:
-        v_cond = v_cond & (F.col("fo.url") == F.col("v.url"))
+    v_cond = (
+        (F.col("fo.subject") == F.col("v.subject"))
+        & (F.col("fo.path") == F.col("v.predicate"))
+        & (F.col("fo.url") == F.col("v.url"))
+    )
     with_vals = focus.alias("fo").join(vals.alias("v"), v_cond, "left")
 
     # per-value class SET (one small agg over rdf:type triples) — serves
@@ -737,9 +726,7 @@ def qualified_cardinality_violations(
     vt = vt.select(
         F.col("url").alias("vt_url"), F.col("subject").alias("vt_subject"), "val_classes"
     )
-    t_cond = F.col("v.val") == F.col("vt_subject")
-    if same_url_scope:
-        t_cond = t_cond & (F.col("fo.url") == F.col("vt_url"))
+    t_cond = (F.col("v.val") == F.col("vt_subject")) & (F.col("fo.url") == F.col("vt_url"))
     with_types = with_vals.join(vt, t_cond, "left")
     classes = F.coalesce(F.col("val_classes"), F.array())
 
@@ -782,9 +769,7 @@ def qualified_cardinality_violations(
     )
 
 
-def node_shape_violations(
-    triples: DataFrame, shapes: DataFrame, same_url_scope: bool = True
-) -> DataFrame:
+def node_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     """sh:node execution (W3C §4.5.1, one level): values of a property shape
     carrying ``sh:node <S>`` must conform to shape S — S's predicate-path
     property constraints (datatype / nodeKind / min/maxCount subset) are
@@ -825,24 +810,22 @@ def node_shape_violations(
             F.col("cps.maxCount").cast("int").alias("cc_maxCount"),
         )
     )
-    ref_cond = (refs.node_shape == child.c_shape_uri)
-    if same_url_scope:
-        ref_cond = ref_cond & (refs.shape_url == child.c_url)
+    ref_cond = (refs.node_shape == child.c_shape_uri) & (refs.shape_url == child.c_url)
     rules = refs.join(child, ref_cond).select(
         "shape_url", "target_class", "parent_path", "node_shape",
         "child_path", "cc_datatype", "cc_nodeKind", "cc_minCount", "cc_maxCount",
     )
 
     # child focus nodes: values of parent_path on subjects typed target_class
-    f_cond = (typed.cls == rules.target_class)
-    if same_url_scope:
-        f_cond = f_cond & (typed.url == rules.shape_url)
+    f_cond = (typed.cls == rules.target_class) & (typed.url == rules.shape_url)
     focus_parents = typed.alias("ty").join(rules.alias("ru"), f_cond).select(
         F.col("ty.url").alias("url"), F.col("ty.subject").alias("parent"), "ru.*"
     )
-    pv_cond = (F.col("fp.parent") == F.col("pv.subject")) & (F.col("fp.parent_path") == F.col("pv.predicate"))
-    if same_url_scope:
-        pv_cond = pv_cond & (F.col("fp.url") == F.col("pv.url"))
+    pv_cond = (
+        (F.col("fp.parent") == F.col("pv.subject"))
+        & (F.col("fp.parent_path") == F.col("pv.predicate"))
+        & (F.col("fp.url") == F.col("pv.url"))
+    )
     child_focus = (
         focus_parents.alias("fp")
         .join(data.alias("pv"), pv_cond)
@@ -852,9 +835,11 @@ def node_shape_violations(
 
     # child facts: triples of the value node on child_path (left join keeps
     # zero-value nodes for minCount)
-    cf_cond = (F.col("cf.value_node") == F.col("cd.subject")) & (F.col("cf.child_path") == F.col("cd.predicate"))
-    if same_url_scope:
-        cf_cond = cf_cond & (F.col("cf.url") == F.col("cd.url"))
+    cf_cond = (
+        (F.col("cf.value_node") == F.col("cd.subject"))
+        & (F.col("cf.child_path") == F.col("cd.predicate"))
+        & (F.col("cf.url") == F.col("cd.url"))
+    )
     joined = child_focus.alias("cf").join(data.alias("cd"), cf_cond, "left")
 
     o_val = F.col("cd.object.value")
@@ -896,9 +881,7 @@ def node_shape_violations(
     )
 
 
-def node_logical_violations(
-    triples: DataFrame, shapes: DataFrame, same_url_scope: bool = True
-) -> DataFrame:
+def node_logical_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     """Execute NODE-level logical combinators — sh:and / sh:or / sh:xone /
     sh:not referencing OTHER shapes (W3C §4.6; the reference extracts them
     as URI lists only, constraints.and/or/xone/not).
@@ -966,9 +949,7 @@ def node_logical_violations(
         )
     )
 
-    f_cond = typed.cls == combs.target_class
-    if same_url_scope:
-        f_cond = f_cond & (typed.url == combs.shape_url)
+    f_cond = (typed.cls == combs.target_class) & (typed.url == combs.shape_url)
     focus = typed.alias("ty").join(combs.alias("cb"), f_cond).select(
         F.col("ty.url").alias("url"),
         F.col("ty.subject").alias("focus"),
@@ -978,17 +959,14 @@ def node_logical_violations(
         F.explode("cb.members").alias("member"),
     )
 
-    mr_cond = F.col("fm.member") == F.col("mr.m_uri")
-    if same_url_scope:
-        mr_cond = mr_cond & (F.col("fm.url") == F.col("mr.m_url"))
+    mr_cond = (F.col("fm.member") == F.col("mr.m_uri")) & (F.col("fm.url") == F.col("mr.m_url"))
     # left: members with no executable property constraints conform vacuously
     with_rules = focus.alias("fm").join(member_rules.alias("mr"), mr_cond, "left")
 
     v_cond = (F.col("d.subject") == F.col("fm.focus")) & (
         F.col("d.predicate") == F.col("mr.m_path")
     )
-    if same_url_scope:
-        v_cond = v_cond & (F.col("d.url") == F.col("fm.url"))
+    v_cond = v_cond & (F.col("d.url") == F.col("fm.url"))
     with_vals = with_rules.join(data.alias("d"), v_cond, "left")
 
     o_val = F.col("d.object.value")
@@ -1068,12 +1046,12 @@ def node_logical_violations(
     )
 
 
-def path_constraint_violations(
-    triples: DataFrame,
-    shapes: DataFrame,
-    same_url_scope: bool = True,
-    max_closure_hops: int = 10,
-) -> DataFrame:
+# depth bound of the zeroOrMore / oneOrMore closure in
+# ``path_constraint_violations`` (one equi-join round per hop)
+MAX_CLOSURE_HOPS = 10
+
+
+def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     """Execute property shapes with NON-predicate paths — sh:inversePath,
     sequence, sh:alternativePath, and sh:zeroOrOnePath (W3C §2.3.1) —
     extending the executable subset beyond ``path_type == 'predicate'``
@@ -1095,7 +1073,7 @@ def path_constraint_violations(
       connected_components and the reference's own ≤10/≤100 iteration
       caps): each round one equi-join extends the frontier, an anti-join
       against the reached set guarantees termination on cycles,
-      ``localCheckpoint`` cuts lineage per round (``max_closure_hops``
+      ``localCheckpoint`` cuts lineage per round (``MAX_CLOSURE_HOPS``
       bounds depth). Traversal continues through resources; literal
       objects are values but not traversable, per spec.
 
@@ -1139,9 +1117,7 @@ def path_constraint_violations(
     )
 
     def focus_of(rules):
-        cond = typed.cls == rules.target_class
-        if same_url_scope:
-            cond = cond & (typed.url == rules.shape_url)
+        cond = (typed.cls == rules.target_class) & (typed.url == rules.shape_url)
         return typed.alias("ty").join(rules.alias("ru"), cond).select(
             F.col("ty.url").alias("url"), F.col("ty.subject").alias("focus"), "ru.*"
         )
@@ -1157,8 +1133,7 @@ def path_constraint_violations(
         t_cond = (F.col("v_value") == F.col("vt_subject")) & (
             F.col("c_class") == F.col("vt_cls")
         )
-        if same_url_scope:
-            t_cond = t_cond & (F.col("url") == F.col("vt_url"))
+        t_cond = t_cond & (F.col("url") == F.col("vt_url"))
         with_types = vals.join(vt, t_cond, "left")
         row_viol = F.when(
             F.col("v_value").isNotNull()
@@ -1223,8 +1198,7 @@ def path_constraint_violations(
         iv_cond = (F.col("d.object.value") == F.col("fo.focus")) & (
             F.col("d.predicate") == F.col("fo.path")
         ) & F.col("d.object.kind").isin("iri", "bnode")
-        if same_url_scope:
-            iv_cond = iv_cond & (F.col("d.url") == F.col("fo.url"))
+        iv_cond = iv_cond & (F.col("d.url") == F.col("fo.url"))
         inv_vals = inv_focus.alias("fo").join(data.alias("d"), iv_cond, "left").select(
             "fo.*",
             F.col("d.subject").alias("v_value"),
@@ -1246,8 +1220,7 @@ def path_constraint_violations(
         am_cond = (F.col("d.subject") == F.col("fo.focus")) & (
             F.col("d.predicate") == F.col("fo.member")
         )
-        if same_url_scope:
-            am_cond = am_cond & (F.col("d.url") == F.col("fo.url"))
+        am_cond = am_cond & (F.col("d.url") == F.col("fo.url"))
         alt_vals = alt_m.join(data.alias("d"), am_cond, "left").select(
             "fo.*",
             F.col("d.object.value").alias("v_value"),
@@ -1267,8 +1240,7 @@ def path_constraint_violations(
         zo_cond = (F.col("d.subject") == F.col("fo.focus")) & (
             F.col("d.predicate") == F.col("fo.path")
         )
-        if same_url_scope:
-            zo_cond = zo_cond & (F.col("d.url") == F.col("fo.url"))
+        zo_cond = zo_cond & (F.col("d.url") == F.col("fo.url"))
         zo_hop = zo_focus.alias("fo").join(data.alias("d"), zo_cond, "inner").select(
             "fo.*",
             F.col("d.object.value").alias("v_value"),
@@ -1317,12 +1289,11 @@ def path_constraint_violations(
         reached = seed  # depth-0 nodes (the focus itself)
         plus = None  # depth >= 1 values (the oneOrMore set)
         frontier = seed
-        for _hop in range(max_closure_hops):
+        for _hop in range(MAX_CLOSURE_HOPS):
             h_cond = (F.col("d.subject") == F.col("fr.v_value")) & (
                 F.col("d.predicate") == F.col("fr.path")
             ) & F.col("fr.v_kind").isin("iri", "bnode")
-            if same_url_scope:
-                h_cond = h_cond & (F.col("d.url") == F.col("fr.url"))
+            h_cond = h_cond & (F.col("d.url") == F.col("fr.url"))
             nxt = (
                 frontier.alias("fr")
                 .join(data.alias("d"), h_cond, "inner")
@@ -1387,8 +1358,7 @@ def path_constraint_violations(
             cond = (F.col(f"d{i}.subject") == prev) & (
                 F.col(f"d{i}.predicate") == F.col("fo.paths")[i]
             )
-            if same_url_scope:
-                cond = cond & (F.col(f"d{i}.url") == F.col("fo.url"))
+            cond = cond & (F.col(f"d{i}.url") == F.col("fo.url"))
             # every hop is LEFT so zero-value focus nodes survive for minCount
             cur = cur.join(data.alias(f"d{i}"), cond, "left")
         last = f"d{L - 1}"

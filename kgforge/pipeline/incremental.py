@@ -38,9 +38,9 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.canonicalize import canonicalize_entities, rewrite_to_canonical
+from ..operators.canonicalize import rewrite_to_canonical
 from ..sinks.materialize import ManifestStore, materialize_spo, write_stage
-from .run import run_pipeline
+from .run import canonicalized, run_pipeline
 
 
 def merge_increment(
@@ -90,24 +90,10 @@ def merge_increment(
         manifests,
         range_cols=["subject", "predicate"],
     )
-    # key-based ER evidence recomputes over the MERGED accepted set — a
-    # new page sharing an inverse-functional value with an entity from a
-    # previous crawl must merge across batches (same semantics as the
-    # sameAs edges, which canonicalization also re-derives from the union)
-    ifp_edges = None
-    if ifp_props:
-        from ..operators.inference import ifp_sameas_candidates
-
-        ifp_edges = ifp_sameas_candidates(accepted, ifp_props).select("a", "b")
-    mapping = write_stage(
-        canonicalize_entities(accepted, extra_edges=ifp_edges),
-        os.path.join(work_root, "canonical_map"),
-        "canonicalize",
-        run_id,
-        manifests,
-        range_cols=["node"],
-    )
-    canonical = rewrite_to_canonical(accepted, mapping)
+    # sameAs edges and key-based ER evidence are re-derived over the MERGED
+    # accepted set: a new page sharing an inverse-functional value with an
+    # entity from a previous crawl must merge across batches
+    mapping, canonical = canonicalized(accepted, ifp_props, work_root, run_id, manifests)
 
     entailed = None
     graph_in = canonical

@@ -4,6 +4,10 @@ materialized S/P/O graph (SURVEY §7.1), resumable per stage.
 Every stage boundary writes a manifest; re-running with the same run_id
 skips completed stages (exact resume). Intermediate tables persist under
 ``work_root`` so a resumed run never recomputes parsing.
+
+This module is the one definition of the stage chain: its validate step
+(``verdicts``) and canonicalize step (``canonicalized``) are what streaming
+validation and the incremental merge run too.
 """
 
 from __future__ import annotations
@@ -68,6 +72,58 @@ def constraint_reports(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     for r in reports[1:]:
         out = out.unionByName(r)
     return out
+
+
+def verdicts(all_triples: DataFrame, shapes: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(accepted, rejected): the row-local and count checks of
+    ``validate_triples`` plus ``sh:closed``. Validation runs once; the
+    validated stream and the closed-shape rejects are ``persist``-ed, so
+    call this inside ``released()`` and materialize both results there."""
+    validated = persist(validate_triples(all_triples, shapes))
+    accepted, rejected = split_validated(validated)
+    closed_rejects = persist(closed_shape_violations(all_triples, shapes).select(
+        "url", "seq", "subject", "predicate", "object", "fmt", "status", "error",
+        F.lit("violation").alias("violation_severity"), "violations",
+    ))
+    rejected = rejected.unionByName(closed_rejects)
+    # accepted/rejected must stay a true PARTITION of the validated
+    # stream: a triple rejected by a closed shape may pass every
+    # row-local check, so subtract the closed rejects from accepted
+    # (else the canonical graph keeps triples the pipeline
+    # simultaneously reports as rejected, and accepted+rejected
+    # double-counts)
+    accepted = accepted.join(
+        closed_rejects.select("url", "seq", "subject", "predicate").distinct(),
+        ["url", "seq", "subject", "predicate"],
+        "left_anti",
+    )
+    return accepted, rejected
+
+
+def canonicalized(
+    accepted: DataFrame,
+    ifp_props: list | None,
+    work_root: str,
+    run_id: str,
+    manifests: ManifestStore,
+) -> tuple[DataFrame, DataFrame]:
+    """(mapping, canonical): writes the ``canonicalize`` stage (node ->
+    component over the sameAs edges of ``accepted``) and rewrites
+    ``accepted`` onto it."""
+    # key-based ER (owl:InverseFunctionalProperty shared values) feeds
+    # the CC canonicalizer as extra equivalence edges: subjects sharing
+    # an email/ISBN-style key merge even without an explicit sameAs
+    ifp_edges = None
+    if ifp_props:
+        from ..operators.inference import ifp_sameas_candidates
+
+        ifp_edges = ifp_sameas_candidates(accepted, ifp_props).select("a", "b")
+    mapping = write_stage(
+        canonicalize_entities(accepted, extra_edges=ifp_edges),
+        os.path.join(work_root, "canonical_map"), "canonicalize", run_id, manifests,
+        range_cols=["node"],
+    )
+    return mapping, rewrite_to_canonical(accepted, mapping)
 
 
 def dedup_pages(pages: DataFrame, mode: str = "near", threshold: float = 0.9) -> DataFrame:
@@ -167,7 +223,6 @@ def run_pipeline(
     into one component even without an explicit owl:sameAs assertion
     (``ifp_sameas_candidates``' block-cleaned pairs union into the CC
     edge set)."""
-    spark = pages.sparkSession
     manifests = ManifestStore(os.path.join(work_root, "_manifests"))
     gazetteer = gazetteer if gazetteer is not None else gazetteer_rows()
 
@@ -179,10 +234,10 @@ def run_pipeline(
         from ..operators.urlops import host_col
 
         withhost = pages.withColumn("__host", host_col(F.col("url")))
-        verdicts = host_curation(
+        hosts = host_curation(
             withhost, host_col="__host", id_col="url", text_col="text"
         )
-        bad = verdicts.filter(F.col("keep") == False).select(  # noqa: E712
+        bad = hosts.filter(F.col("keep") == False).select(  # noqa: E712
             F.col("host").alias("__host")
         )
         pages = write_stage(
@@ -221,28 +276,10 @@ def run_pipeline(
     all_triples = triples.filter(F.col("subject").isNotNull()).unionByName(
         mention_triples(mentions)
     )
-    # validation runs once: both verdict streams feed the accept AND the
-    # reject write, so they are persisted for the two writes and released
-    # right after the second
+    # the verdict streams are persisted for the accept AND the reject write
+    # and released right after the second
     with released():
-        validated = persist(validate_triples(all_triples, shapes))
-        accepted, rejected = split_validated(validated)
-        closed_rejects = persist(closed_shape_violations(all_triples, shapes).select(
-            "url", "seq", "subject", "predicate", "object", "fmt", "status", "error",
-            F.lit("violation").alias("violation_severity"), "violations",
-        ))
-        rejected = rejected.unionByName(closed_rejects)
-        # accepted/rejected must stay a true PARTITION of the validated
-        # stream: a triple rejected by a closed shape may pass every
-        # row-local check, so subtract the closed rejects from accepted
-        # (else the canonical graph keeps triples the pipeline
-        # simultaneously reports as rejected, and accepted+rejected
-        # double-counts)
-        accepted = accepted.join(
-            closed_rejects.select("url", "seq", "subject", "predicate").distinct(),
-            ["url", "seq", "subject", "predicate"],
-            "left_anti",
-        )
+        accepted, rejected = verdicts(all_triples, shapes)
         accepted = write_stage(
             accepted, os.path.join(work_root, "accepted"), "validate_accept", run_id,
             manifests, range_cols=["subject", "predicate"],
@@ -262,22 +299,7 @@ def run_pipeline(
             )
 
     if canonicalize:
-        # key-based ER (owl:InverseFunctionalProperty shared values) feeds
-        # the CC canonicalizer as extra equivalence edges: subjects sharing
-        # an email/ISBN-style key merge even without an explicit sameAs
-        ifp_edges = None
-        if ifp_props:
-            from ..operators.inference import ifp_sameas_candidates
-
-            ifp_edges = ifp_sameas_candidates(accepted, ifp_props).select(
-                "a", "b"
-            )
-        mapping = write_stage(
-            canonicalize_entities(accepted, extra_edges=ifp_edges),
-            os.path.join(work_root, "canonical_map"), "canonicalize", run_id, manifests,
-            range_cols=["node"],
-        )
-        canonical = rewrite_to_canonical(accepted, mapping)
+        mapping, canonical = canonicalized(accepted, ifp_props, work_root, run_id, manifests)
     else:
         mapping = None
         canonical = accepted

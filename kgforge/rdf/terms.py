@@ -56,13 +56,6 @@ def is_literal(term: tuple) -> bool:
     return term[1] == KIND_LITERAL
 
 
-def term_uri(term: tuple) -> str:
-    """Resource URI; blank nodes keep their ``_:`` label
-    (reference: Resource::getUri, blank ids start '_:',
-    ShaclShapeProcessor.php:157,190)."""
-    return term[0]
-
-
 def literal_value_str(term: tuple) -> str:
     """PHP-parity string coercion of a literal's *value*.
 
@@ -90,11 +83,3 @@ def literal_value_str(term: tuple) -> str:
             return str(int(f))
         return repr(f) if dt == XSD_DOUBLE else lex
     return lex
-
-
-def any_value_str(term: tuple) -> str:
-    """Resource -> URI, literal -> coerced string
-    (reference getAnyValue, ShaclPropertyAnalyzer.php:539-554)."""
-    if term[1] == KIND_LITERAL:
-        return literal_value_str(term)
-    return term[0]

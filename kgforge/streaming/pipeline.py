@@ -226,31 +226,32 @@ def streaming_mention_counts(
 
 def validate_each_batch(pages_stream: DataFrame, out_root: str):
     """Incremental shape-driven validation: every micro-batch of landed
-    pages runs the SAME fused parse + validation the batch pipeline uses
-    (``parse_combined`` → ``validate_triples``) and appends accepted /
-    rejected parquet partitions under ``out_root``.
+    pages runs the batch pipeline's own parse and verdict steps
+    (``parse_combined`` → ``kgforge.pipeline.run.verdicts``: the row-local
+    and count checks plus ``sh:closed``) and appends accepted / rejected
+    parquet partitions under ``out_root``.
 
     Why foreachBatch and not a streaming-native join: shape semantics are
     document-confined (a page's SHACL rules apply to that page's triples —
     reference parses one file at a time), so each micro-batch is
-    self-contained; cardinality checks need a window over the batch's own
-    triples, which streaming aggregation modes can't express but a
-    per-batch BATCH plan runs unchanged. foreachBatch + append parquet +
-    the stream checkpoint gives exactly-once file output, the same recipe
+    self-contained; cardinality and closedness checks need the batch's own
+    triples per focus node, which streaming aggregation modes can't express
+    but a per-batch BATCH plan runs unchanged. foreachBatch + append parquet
+    + the stream checkpoint gives exactly-once file output, the same recipe
     as the batch materializer.
 
     Returns the DataStreamWriter (caller starts/stops it)."""
-    from ..operators.validate import split_validated, validate_triples
+    from ..persist import persist, released
+    from ..pipeline.run import verdicts
 
     def handle(batch_df, _batch_id):
-        combined = parse_combined(batch_df).persist()
-        combined.count()  # one parse pass feeds triples + shapes
-        triples, shapes = split_parsed(combined)
-        validated = validate_triples(triples, shapes)
-        accepted, rejected = split_validated(validated)
-        accepted.write.mode("append").parquet(f"{out_root}/accepted")
-        rejected.write.mode("append").parquet(f"{out_root}/rejected")
-        combined.unpersist()
+        with released():
+            combined = persist(parse_combined(batch_df))
+            combined.count()  # one parse pass feeds triples + shapes
+            triples, shapes = split_parsed(combined)
+            accepted, rejected = verdicts(triples, shapes)
+            accepted.write.mode("append").parquet(f"{out_root}/accepted")
+            rejected.write.mode("append").parquet(f"{out_root}/rejected")
 
     return pages_stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation", f"{out_root}/_chk"

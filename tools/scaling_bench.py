@@ -2,11 +2,12 @@
 >= 0.8 from N to 4N executors; sandboxed as local[8] vs local[32] on the
 SAME input).
 
-Runs the KG pipeline (parse -> shapes -> mentions -> validate ->
-canonicalize) as separate spark-submit-style subprocesses (fresh JVM per
-parallelism level so the measurements don't share a warmed executor), then
-writes BENCH/BASELINE.md with absolute triples/sec at both levels plus the
-efficiency ratio.
+Runs the shipped ``kgforge.pipeline.run.run_pipeline`` (parse -> mentions ->
+validate -> canonicalize -> S/P/O materialize, every stage written) as
+separate spark-submit-style subprocesses (fresh JVM per parallelism level so
+the measurements don't share a warmed executor), then writes
+BENCH/last_run.md with absolute triples/sec at both levels plus the
+efficiency ratio and appends the report to BENCH/runs.jsonl.
 
 Usage: python tools/scaling_bench.py [n_pages] [low_cpus] [high_cpus]
 """
@@ -21,37 +22,26 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CHILD = r"""
-import json, sys, time
+import json, os, shutil, sys, tempfile, time
 sys.path.insert(0, %(repo)r)
-from pyspark.sql import functions as F
 from kgforge.session import get_spark
-from kgforge.fixtures import pages_df, gazetteer_rows
-from kgforge.operators.parse import parse_combined, split_parsed
-from kgforge.operators.mentions import detect_mentions, mention_triples
-from kgforge.operators.validate import validate_triples, split_validated
-from kgforge.operators.canonicalize import canonicalize_entities
+from kgforge.fixtures import pages_df
+from kgforge.pipeline.run import run_pipeline
+from kgforge.sinks.materialize import ManifestStore
 
 cpus = %(cpus)d
 n_pages = %(n_pages)d
 spark = get_spark(app_name=f"kgforge-scale-{cpus}", master=f"local[{cpus}]",
                   shuffle_partitions=2*cpus)
+scratch = tempfile.mkdtemp(prefix=f"kgforge-scale-{cpus}-")
 
-def run_once(pages):
-    combined = parse_combined(pages).persist()
-    combined.count()  # one fused parse pass feeds both triples and shapes
-    triples, shapes = split_parsed(combined)
-    mentions = detect_mentions(pages, gazetteer_rows())
-    all_triples = triples.filter(F.col("subject").isNotNull()).unionByName(mention_triples(mentions)).persist()
-    validated = validate_triples(all_triples, shapes).persist()
-    accepted, rejected = split_validated(validated)
-    n = validated.count()
-    # no accepted.count() barrier: accepted is a filter over the cached
-    # validated table, and canonicalize's own edge-sizing count is the next
-    # action through it — a separate count is one whole serial job for nothing
-    mapping = canonicalize_entities(accepted)
-    mapping.count()
-    validated.unpersist(); all_triples.unpersist(); combined.unpersist()
-    return n
+def run_once(pages, name):
+    # the shipped pipeline on a fresh work root (a reused root would resume
+    # and skip every completed stage); validated triples from its manifests
+    work_root = os.path.join(scratch, name)
+    run_pipeline(pages, work_root)
+    manifests = ManifestStore(os.path.join(work_root, "_manifests"))
+    return sum(manifests.load("run1", s)["rows"] for s in ("validate_accept", "validate_reject"))
 
 # warmup: full pipeline on a small slice — JIT/codegen compilation, python
 # worker pool spin-up, and vCPU frequency ramp all land outside the timed
@@ -59,17 +49,18 @@ def run_once(pages):
 # otherwise dominates the wide-parallelism run and masks scaling)
 warm = pages_df(spark, 4000, partitions=2*cpus).persist()
 warm.count()
-run_once(warm)
+run_once(warm, "warm")
 warm.unpersist()
 
 pages = pages_df(spark, n_pages, partitions=2*cpus).persist()
 pages.count()
 t0 = time.time()
-n = run_once(pages)
+n = run_once(pages, "timed")
 sec = time.time() - t0
 print(json.dumps({"cpus": cpus, "n_pages": n_pages, "n_triples": n,
                   "sec": round(sec, 2), "triples_per_sec": round(n / sec, 1)}))
 spark.stop()
+shutil.rmtree(scratch, ignore_errors=True)
 """
 
 
@@ -115,9 +106,9 @@ def main():
     md = f"""# BENCH/BASELINE — scaling-efficiency evidence
 
 North rule: throughput scaling efficiency >= 0.8 from N to 4N executors.
-Sandbox evidence: the same KG-construction job (parse -> shapes -> mentions ->
-validate -> canonicalize) over the SAME deterministic {n_pages}-page corpus at
-two parallelism levels, fresh JVM each (tools/scaling_bench.py).
+Sandbox evidence: the shipped run_pipeline (parse -> mentions -> validate ->
+canonicalize -> S/P/O materialize) over the SAME deterministic {n_pages}-page
+corpus at two parallelism levels, fresh JVM each (tools/scaling_bench.py).
 
 | parallelism | pages | triples | wall sec | triples/sec |
 |---|---|---|---|---|
