@@ -37,11 +37,12 @@ variable, so a constraint can only see triples from its focus node's own
 document, mirroring the reference's per-file parse unit.
 
 Scale design: query TEXTS are schema-level metadata — the distinct set is
-collected once driver-side (bounded by ``max_distinct_queries``; the tail
+collected once driver-side (bounded by ``MAX_DISTINCT_QUERIES``; the tail
 beyond the cap is skipped and counted, never silently ignored), each
 distinct query compiles to ONE static join plan over the triples fact
-table, and all plans union. Focus-node sets ride the same typed-subjects
-join as every other executor; nothing per-row ever runs in Python.
+table, and all plans union. Focus-node sets come from the same frames and
+focus join as every other executor (``validate.shape_frames`` /
+``validate.focus_nodes``); nothing per-row ever runs in Python.
 """
 
 from __future__ import annotations
@@ -52,6 +53,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..rdf.terms import RDF_TYPE
+from .validate import ShapeFrames, focus_nodes
+
+# bound on the distinct constraint query texts compiled per call; the tail
+# beyond it is skipped and counted
+MAX_DISTINCT_QUERIES = 1000
 
 _FILTER_RE = re.compile(r"FILTER\s*\(", re.IGNORECASE)
 _CMP_RE = re.compile(
@@ -261,43 +267,24 @@ def _constraint_solutions(focus: DataFrame, data: DataFrame, q: dict) -> DataFra
     ).distinct()
 
 
-def sparql_constraint_violations(
-    triples: DataFrame,
-    shapes: DataFrame,
-    max_distinct_queries: int = 1000,
-    strict: bool = False,
-) -> DataFrame:
+def sparql_constraint_violations(fr: ShapeFrames, strict: bool = False) -> DataFrame:
     """Execute shape-level sh:sparql constraints; one report row per
     (focus, constraint) violation, same shape as the other focus-level
     executors (url, subject, shape_uri, constraint, violations).
 
     No silent caps: queries outside the executable subset (or beyond
-    ``max_distinct_queries``) are SKIPPED permissively by default —
+    ``MAX_DISTINCT_QUERIES``) are SKIPPED permissively by default —
     ``strict=True`` raises ``SparqlUnsupported`` instead so callers can
     surface exactly which constraint text was not executed."""
-    from .validate import _typed_subjects
-
-    ok_rows = triples.filter(F.col("status") == "ok").filter(
-        F.col("subject").isNotNull()
-    )
-    typed = _typed_subjects(ok_rows)
     # url-carrying fact table for the shared WHERE compiler (page scoping)
-    data = ok_rows.select(
-        "url", "subject", "predicate", F.col("object.value").alias("obj")
-    )
+    data = fr.values.select("url", "subject", "predicate", F.col("val").alias("obj"))
 
     sc = (
-        shapes.filter(~F.col("deactivated"))
-        .filter(F.size(F.coalesce(F.col("sparql_constraints"), F.array())) > 0)
-        .select(
-            F.col("url").alias("shape_url"),
-            F.col("uri").alias("shape_uri"),
-            F.explode("target_classes").alias("target_class"),
-            F.explode("sparql_constraints").alias("sc"),
-        )
+        fr.targets.filter(F.size(F.coalesce(F.col("sparql_constraints"), F.array())) > 0)
+        .select("url", "shape_uri", "target_class", F.explode("sparql_constraints").alias("sc"))
         .filter(~F.coalesce(F.col("sc.deactivated"), F.lit(False)))
         .select(
-            "shape_url", "shape_uri", "target_class",
+            "url", "shape_uri", "target_class",
             F.col("sc.select").alias("q_select"),
             F.col("sc.ask").alias("q_ask"),
             F.col("sc.prefixes").alias("q_prefixes"),
@@ -317,15 +304,15 @@ def sparql_constraint_violations(
     distinct_q = (
         sc.select("q_select", "q_ask", "pfx_key")
         .distinct()
-        .limit(max_distinct_queries + 1)
+        .limit(MAX_DISTINCT_QUERIES + 1)
         .collect()
     )
-    skipped = max(0, len(distinct_q) - max_distinct_queries)
+    skipped = max(0, len(distinct_q) - MAX_DISTINCT_QUERIES)
     if strict and skipped:
         raise SparqlUnsupported(
-            f"distinct sh:sparql query texts exceed max_distinct_queries={max_distinct_queries}"
+            f"distinct sh:sparql query texts exceed MAX_DISTINCT_QUERIES={MAX_DISTINCT_QUERIES}"
         )
-    distinct_q = distinct_q[:max_distinct_queries]
+    distinct_q = distinct_q[:MAX_DISTINCT_QUERIES]
 
     outs = []
     for row in distinct_q:
@@ -347,15 +334,9 @@ def sparql_constraint_violations(
             & (F.col("q_ask").eqNullSafe(row["q_ask"]))
             & (F.col("pfx_key") == row["pfx_key"])
         )
-        f_cond = (typed.cls == carriers.target_class) & (typed.url == carriers.shape_url)
         focus = (
-            typed.alias("ty")
-            .join(carriers.alias("cb"), f_cond)
-            .select(
-                F.col("ty.url").alias("f_url"),
-                F.col("ty.subject").alias("focus"),
-                "cb.shape_uri",
-            )
+            focus_nodes(fr, carriers)
+            .select(F.col("url").alias("f_url"), "focus", "shape_uri")
             .distinct()
         )
         try:
@@ -384,7 +365,7 @@ def sparql_constraint_violations(
     if not outs:
         from pyspark.sql import types as T
 
-        return triples.sparkSession.createDataFrame(
+        return fr.data.sparkSession.createDataFrame(
             [],
             T.StructType(
                 [

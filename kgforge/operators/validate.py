@@ -16,14 +16,26 @@ rule (accepted + reject streams, SURVEY §7.1). Coverage:
   shapes (``node_logical_violations``)
 - non-predicate paths: inverse / sequence / alternative / zeroOrOne /
   zeroOrMore / oneOrMore (``path_constraint_violations``)
-Only SPARQL constraints remain extraction-only (documented non-goal).
+- SHACL-SPARQL constraints execute in ``operators/sparql.py``
+  (``sparql_constraint_violations``) over the same frames.
+
+Shared frames: ``shape_frames(triples, shapes)`` derives, once, what every
+executor reads — the ok-triples table, the typed-subject table, the value
+table (xsd:string default applied there), the active shape-target table
+and the rule table (target class × property shape, ``ps_idx`` from one
+posexplode, one deactivation filter for the shape and the property
+shape); ``focus_nodes`` is the one focus join (typed subjects × rules on
+url and target class). Each executor is a function of the frames and
+holds only its verdict logic; ``pipeline.run.constraint_reports`` builds
+the frames once for all of them. Deactivated shapes and property shapes
+yield no results (W3C SHACL §2.1.5), with one exception kept as before:
+the member shapes of node-level sh:and/or/xone/not are evaluated whether
+or not they are deactivated.
 
 Scale design:
-- the constraint table (exploded property shapes) joins against the triples
-  fact table with AQE choosing the strategy at runtime: broadcast when the
-  rule side is actually small, shuffle join when per-url shapes scale with
-  the corpus (``broadcast_rules=True`` forces the hint for a known-small
-  global catalog).
+- the rule table joins against the triples fact table with AQE choosing
+  the strategy at runtime: broadcast when the rule side is actually small,
+  shuffle join when per-url shapes scale with the corpus.
 - cardinality checks ride a window over the same stream (one sort), and the
   per-triple collapse is a codegen HashAggregate over an int violation
   bitmask — no ObjectHashAggregate, no array-valued shuffles.
@@ -32,15 +44,15 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..persist import persist
 from ..rdf.terms import RDF_TYPE, SH
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
-
-_NUMERIC_DTS = [XSD + t for t in ("integer", "decimal", "double", "float", "int", "long", "short", "byte")]
 
 
 def _nodekind_conforms(nk, kind):
@@ -71,28 +83,114 @@ def _resource_kind(col):
     )
 
 
-def property_constraints(shapes: DataFrame) -> DataFrame:
-    """Explode shape records into one row per (target_class, property
-    constraint) — the broadcastable rule table."""
-    ps = shapes.select(
+def _datatype(obj):
+    """The object's datatype; a literal without one is an xsd:string."""
+    return F.coalesce(F.when(obj["datatype"] != "", obj["datatype"]), F.lit(XSD + "string"))
+
+
+def _numeric(col):
+    """The value as a double when it reads as a number, else NULL."""
+    return F.when(col.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"), col.cast("double"))
+
+
+def _typed_subjects(triples: DataFrame) -> DataFrame:
+    """(url, subject, class) from rdf:type triples."""
+    return (
+        triples.filter((F.col("predicate") == RDF_TYPE) & (F.col("object.kind") == "iri"))
+        .select("url", "subject", F.col("object.value").alias("cls"))
+        .distinct()
+    )
+
+
+class ShapeFrames(NamedTuple):
+    """What the constraint executors share, derived once by ``shape_frames``.
+
+    - ``data``: ok triples with a subject, full rows.
+    - ``typed``: distinct (url, subject, cls) of the rdf:type triples.
+    - ``values``: (url, subject, predicate, val, val_kind, val_dt) per ok
+      triple; ``val_dt`` is xsd:string for a literal without a datatype.
+    - ``targets``: (url, shape_uri, constraints, sparql_constraints,
+      property_shapes, target_class) per active shape and target class.
+    - ``all_rules``: (url, shape_uri, t_idx, target_class, severity,
+      shape_active, ps_idx, ps, active) per shape, target class (outer: a
+      shape without one keeps a NULL row) and property shape, deactivated
+      ones included.
+    - ``rules``: the ``active`` rows of ``all_rules``.
+    """
+
+    data: DataFrame
+    typed: DataFrame
+    values: DataFrame
+    targets: DataFrame
+    all_rules: DataFrame
+    rules: DataFrame
+
+
+def shape_frames(triples: DataFrame, shapes: DataFrame) -> ShapeFrames:
+    """The shared inputs of every executor (lazy plans, no Spark job)."""
+    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
+    values = data.select(
+        "url", "subject", "predicate",
+        F.col("object.value").alias("val"),
+        F.col("object.kind").alias("val_kind"),
+        _datatype(F.col("object")).alias("val_dt"),
+    )
+    # the one deactivation policy: a shape is off when sh:deactivated true,
+    # a property shape when its sh:deactivated reads "true" or "1"
+    shape_active = ~F.col("deactivated")
+    ps_active = F.col("ps.deactivated").isNull() | ~F.col("ps.deactivated").isin("true", "1")
+    # both generators in one select: a projection between them would copy
+    # the wide property-shape array once more in generated code
+    all_rules = shapes.select(
         "url",
         F.col("uri").alias("shape_uri"),
-        F.col("deactivated").alias("shape_deactivated"),
-        F.col("severity"),
-        F.explode_outer("target_classes").alias("target_class"),
-        F.col("property_shapes"),
+        "severity",
+        shape_active.alias("shape_active"),
+        F.posexplode_outer("target_classes").alias("t_idx", "target_class"),
+        F.posexplode("property_shapes").alias("ps_idx", "ps"),
+    ).withColumn("active", F.col("shape_active") & ps_active)
+    targets = shapes.filter(shape_active).select(
+        "url",
+        F.col("uri").alias("shape_uri"),
+        "constraints",
+        "sparql_constraints",
+        "property_shapes",
+        F.explode("target_classes").alias("target_class"),
+    )
+    return ShapeFrames(
+        data, _typed_subjects(data), values, targets, all_rules, all_rules.filter("active")
+    )
+
+
+def focus_nodes(fr: ShapeFrames, rules: DataFrame) -> DataFrame:
+    """(url, focus, <rule columns but url>): the subjects typed with a
+    rule's target class on the rule's own page. Both sides are aliased, so
+    the page condition compares the two tables' urls even though both
+    derive from one parsed table."""
+    cond = (F.col("ty.url") == F.col("ru.url")) & (F.col("ty.cls") == F.col("ru.target_class"))
+    return fr.typed.alias("ty").join(rules.alias("ru"), cond).select(
+        F.col("ty.url").alias("url"),
+        F.col("ty.subject").alias("focus"),
+        *[F.col(f"ru.{c}") for c in rules.columns if c != "url"],
+    )
+
+
+def _by_shape(rules: DataFrame) -> DataFrame:
+    """One row per (shape, property shape) of a rule table, whatever the
+    shape's number of target classes: lookups by ``shape_uri``."""
+    return rules.filter(F.coalesce(F.col("t_idx"), F.lit(0)) == 0)
+
+
+def property_constraints(rules: DataFrame) -> DataFrame:
+    """The predicate-path rows of a rule table with their row-local
+    parameters — the rule table of ``validate_triples``."""
+    return rules.filter(
+        # only predicate paths are executable ROW-LOCAL; the other six path
+        # types execute as joins in path_constraint_violations
+        F.col("ps.path_type") == "predicate"
     ).select(
         "url",
         "shape_uri",
-        "shape_deactivated",
-        "severity",
-        "target_class",
-        F.posexplode("property_shapes").alias("ps_idx", "ps"),
-    )
-    return ps.select(
-        "url",
-        "shape_uri",
-        "shape_deactivated",
         "severity",
         "target_class",
         # stable per-rule discriminator: a shape may carry several property
@@ -100,13 +198,10 @@ def property_constraints(shapes: DataFrame) -> DataFrame:
         # focus-node windows must not mix their rows (one rule's values would
         # inflate another's n_vals / has_required)
         F.col("ps_idx"),
-        F.col("ps.path_type").alias("path_type"),
         F.col("ps.path").alias("path"),
         F.col("ps.datatype").alias("c_datatype"),
-        F.col("ps.class").alias("c_class"),
         F.col("ps.nodeKind").alias("c_nodeKind"),
         F.col("ps.pattern").alias("c_pattern"),
-        F.col("ps.flags").alias("c_flags"),
         F.col("ps.in").alias("c_in"),
         F.col("ps.languageIn").alias("c_languageIn"),
         F.col("ps.minLength").cast("int").alias("c_minLength"),
@@ -123,22 +218,6 @@ def property_constraints(shapes: DataFrame) -> DataFrame:
         F.col("ps.sh_and").alias("c_and"),
         F.col("ps.sh_xone").alias("c_xone"),
         F.col("ps.sh_not").alias("c_not"),
-        F.col("ps.deactivated").alias("ps_deactivated"),
-    ).filter(
-        # only predicate paths are executable ROW-LOCAL; the other six path
-        # types execute as joins in path_constraint_violations
-        F.col("path_type") == "predicate"
-    ).filter(
-        ~F.col("shape_deactivated") & (F.col("ps_deactivated").isNull() | ~F.col("ps_deactivated").isin("true", "1"))
-    )
-
-
-def _typed_subjects(triples: DataFrame) -> DataFrame:
-    """(url, subject, class) from rdf:type triples."""
-    return (
-        triples.filter((F.col("predicate") == RDF_TYPE) & (F.col("object.kind") == "iri"))
-        .select("url", "subject", F.col("object.value").alias("cls"))
-        .distinct()
     )
 
 
@@ -146,22 +225,18 @@ def validate_triples(
     triples: DataFrame,
     shapes: DataFrame,
     same_url_scope: bool = True,
-    broadcast_rules: bool = False,
 ) -> DataFrame:
     """-> triples + (violations: array<string>) column; callers split into
     accepted (empty) / rejected (non-empty) streams.
 
     Constraint applicability: a data triple (s, p, o) is checked against
     property constraints whose target_class matches a type of s and whose
-    path == p. Row-local checks happen in one broadcast-join pass; count
+    path == p. Row-local checks happen in one rule-join pass; count
     constraints in one aggregate pass.
     """
-    rules = property_constraints(shapes)
-    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
-    typed = _typed_subjects(data)
-
-    fact = data.alias("t").join(
-        typed.alias("ty"),
+    fr = shape_frames(triples, shapes)
+    fact = fr.data.alias("t").join(
+        fr.typed.alias("ty"),
         (F.col("t.subject") == F.col("ty.subject")) & ((F.col("t.url") == F.col("ty.url")) if same_url_scope else F.lit(True)),
         "left",
     ).select("t.*", F.col("ty.cls").alias("subj_class"))
@@ -169,24 +244,17 @@ def validate_triples(
     rule_cond = (F.col("r.target_class") == F.col("f.subj_class")) & (F.col("r.path") == F.col("f.predicate"))
     if same_url_scope:
         rule_cond = rule_cond & (F.col("r.url") == F.col("f.url"))
-    # No forced broadcast by default: with same_url_scope the rule table
-    # scales WITH the corpus (per-url shapes), so a static broadcast hint
-    # OOMs at 10^12 pages. AQE converts the join to broadcast at runtime
-    # whenever the built side is actually small (measured identical wall
-    # time at bench scale). Pass broadcast_rules=True only for a known-small
-    # global shapes catalog.
-    r = F.broadcast(rules.alias("r")) if broadcast_rules else rules.alias("r")
-    joined = fact.alias("f").join(r, rule_cond, "left")
+    # No broadcast hint: with same_url_scope the rule table scales WITH the
+    # corpus (per-url shapes), so a static hint OOMs at 10^12 pages; AQE
+    # converts the join to broadcast at runtime whenever the built side is
+    # actually small (measured identical wall time at bench scale).
+    joined = fact.alias("f").join(property_constraints(fr.rules).alias("r"), rule_cond, "left")
 
     o_val = F.col("f.object.value")
     o_kind = F.col("f.object.kind")
-    o_dt = F.coalesce(
-        F.when(F.col("f.object.datatype") != "", F.col("f.object.datatype")), F.lit(XSD + "string")
-    )
+    o_dt = _datatype(F.col("f.object"))
     o_lang = F.col("f.object.lang")
-    num_val = F.when(
-        (o_kind == "literal") & o_val.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"), o_val.cast("double")
-    )
+    num_val = F.when(o_kind == "literal", _numeric(o_val))
 
     def _inline_conforms(m):
         """Does the value node conform to one INLINE member shape (the
@@ -334,8 +402,6 @@ def validate_triples(
     # together; that diamond recomputes the whole parse->join lineage per
     # branch when the input is not materialized, which dominated pipeline
     # wall time.
-    from pyspark.sql.window import Window
-
     # PER-RULE partitioning: rule_key = hash(shape_uri, ps_idx, target_class)
     # pins the exact property-shape rule (two rules on the same sh:path — or
     # one shape matched via two target classes — must each see only their own
@@ -451,7 +517,7 @@ def closed_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     not a per-(rule, triple) check — one extra equi-join on (url, subject),
     AQE-managed.
     """
-    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
+    fr = shape_frames(triples, shapes)
     empty = F.array().cast("array<string>")
     allowed = F.array_union(
         F.coalesce(
@@ -463,25 +529,13 @@ def closed_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
         ),
         F.coalesce(F.col("constraints.ignoredProperties"), empty),
     )
-    closed = (
-        shapes.filter(F.coalesce(F.col("constraints.closed"), F.lit(False)) & ~F.col("deactivated"))
-        .select(
-            F.col("url").alias("shape_url"),
-            F.col("uri").alias("shape_uri"),
-            F.explode("target_classes").alias("target_class"),
-            allowed.alias("allowed"),
-        )
+    closed = fr.targets.filter(F.coalesce(F.col("constraints.closed"), F.lit(False))).select(
+        "url", "shape_uri", "target_class", allowed.alias("allowed")
     )
-    typed = _typed_subjects(data)
-    focus_cond = (typed.cls == closed.target_class) & (typed.url == closed.shape_url)
-    focus = typed.join(closed, focus_cond).select(
-        "url", "subject", "shape_uri", "allowed"
-    )
-    viol_cond = (F.col("t.subject") == F.col("fo.subject")) & (
-        F.col("t.url") == F.col("fo.url")
-    )
+    focus = focus_nodes(fr, closed)
+    viol_cond = (F.col("t.subject") == F.col("fo.focus")) & (F.col("t.url") == F.col("fo.url"))
     return (
-        data.alias("t")
+        fr.data.alias("t")
         .join(focus.alias("fo"), viol_cond)
         .filter(~F.array_contains(F.col("fo.allowed"), F.col("t.predicate")))
         .select(
@@ -492,7 +546,7 @@ def closed_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     )
 
 
-def pair_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
+def pair_constraint_violations(fr: ShapeFrames) -> DataFrame:
     """Focus-node pair constraints (W3C §4.6): sh:equals, sh:disjoint,
     sh:lessThan, sh:lessThanOrEquals — the extracted-as-metadata parameters
     (ShaclPropertyAnalyzer.php:27-30) executed as value-set comparisons
@@ -507,40 +561,34 @@ def pair_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
     per-focus verdicts (full-outer on value for equals so asymmetric
     differences surface).
     """
-    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
-    typed = _typed_subjects(data)
+    # one row per (property shape, pair parameter it sets): one explode
+    # over the four parameters, not a union of four rule-table scans
+    pairs = F.array(*[
+        F.struct(F.lit(c).alias("constraint"), F.col(f"ps.{c}").alias("other_path"))
+        for c in ("equals", "disjoint", "lessThan", "lessThanOrEquals")
+    ])
+    pair_rules = fr.rules.filter(F.col("ps.path_type") == "predicate").select(
+        "url",
+        "shape_uri",
+        "target_class",
+        F.col("ps.path").alias("path"),
+        F.explode(F.filter(pairs, lambda p: p["other_path"].isNotNull())).alias("pr"),
+    ).select("url", "shape_uri", "target_class", "path", "pr.other_path", "pr.constraint")
 
-    pair_rules = None
-    ps = shapes.select(
-        F.col("url").alias("shape_url"),
-        F.col("uri").alias("shape_uri"),
-        F.col("deactivated").alias("shape_deactivated"),
-        F.explode("target_classes").alias("target_class"),
-        F.explode("property_shapes").alias("ps"),
-    ).filter(~F.col("shape_deactivated") & (F.col("ps.path_type") == "predicate"))
-    for cname in ("equals", "disjoint", "lessThan", "lessThanOrEquals"):
-        r = ps.filter(F.col(f"ps.{cname}").isNotNull()).select(
-            "shape_url",
-            "shape_uri",
-            "target_class",
-            F.col("ps.path").alias("path"),
-            F.col(f"ps.{cname}").alias("other_path"),
-            F.lit(cname).alias("constraint"),
-        )
-        pair_rules = r if pair_rules is None else pair_rules.unionByName(r)
-
-    # focus nodes of each rule
-    focus_cond = (typed.cls == pair_rules.target_class) & (typed.url == pair_rules.shape_url)
-    focus = typed.join(pair_rules, focus_cond).select(
-        "url", "subject", "shape_uri", "path", "other_path", "constraint"
+    focus = focus_nodes(fr, pair_rules).select(
+        "url", "focus", "shape_uri", "path", "other_path", "constraint"
     )
-
-    vals = data.select("url", "subject", "predicate", F.col("object.value").alias("val"))
-    lhs_cond = (F.col("fo.subject") == F.col("lv.subject")) & (F.col("fo.path") == F.col("lv.predicate"))
-    rhs_cond = (F.col("fo.subject") == F.col("rv.subject")) & (F.col("fo.other_path") == F.col("rv.predicate"))
-    lhs_cond = lhs_cond & (F.col("fo.url") == F.col("lv.url"))
-    rhs_cond = rhs_cond & (F.col("fo.url") == F.col("rv.url"))
-
+    vals = fr.values.select("url", "subject", "predicate", "val")
+    lhs_cond = (
+        (F.col("fo.focus") == F.col("lv.subject"))
+        & (F.col("fo.path") == F.col("lv.predicate"))
+        & (F.col("fo.url") == F.col("lv.url"))
+    )
+    rhs_cond = (
+        (F.col("fo.focus") == F.col("rv.subject"))
+        & (F.col("fo.other_path") == F.col("rv.predicate"))
+        & (F.col("fo.url") == F.col("rv.url"))
+    )
     lhs = focus.alias("fo").join(vals.alias("lv"), lhs_cond, "left").select(
         "fo.*", F.col("lv.val").alias("lval")
     )
@@ -548,18 +596,15 @@ def pair_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         "fo.*", F.col("rv.val").alias("rval")
     )
 
-    def num(c):
-        return F.when(c.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"), c.cast("double"))
-
-    agg = both.groupBy("url", "subject", "shape_uri", "path", "other_path", "constraint").agg(
+    agg = both.groupBy("url", "focus", "shape_uri", "path", "other_path", "constraint").agg(
         # equals: value sets must be identical — any lhs value absent from
         # rhs (or vice versa) violates; compare via per-side distinct sets
         F.collect_set("lval").alias("lset"),
         F.collect_set("rval").alias("rset"),
         # lessThan(/OrEquals): EVERY (lhs, rhs) cross pair must satisfy;
         # max lhs vs min rhs decides (numeric when both parse, else string)
-        F.max(num(F.col("lval"))).alias("lmax_n"),
-        F.min(num(F.col("rval"))).alias("rmin_n"),
+        F.max(_numeric(F.col("lval"))).alias("lmax_n"),
+        F.min(_numeric(F.col("rval"))).alias("rmin_n"),
         F.max("lval").alias("lmax_s"),
         F.min("rval").alias("rmin_s"),
         F.count("lval").alias("n_l"),
@@ -590,7 +635,7 @@ def pair_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         agg.filter(_violated())
         .select(
             "url",
-            "subject",
+            F.col("focus").alias("subject"),
             "path",
             "other_path",
             "constraint",
@@ -600,7 +645,7 @@ def pair_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
     )
 
 
-def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
+def qualified_rules(fr: ShapeFrames) -> DataFrame:
     """Executable qualified-cardinality rules, one row per (shape, property
     shape, target class), derived from the parsed stage. The shape records
     carry ``sh:qualifiedValueShape`` only as a node id, so its row-local
@@ -608,17 +653,15 @@ def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     same url's triples, lowest ``seq`` first. Deactivated shapes,
     non-predicate paths and rules with neither count an integer are
     dropped (``try_cast``: a malformed count must not abort the run). A
-    disjoint rule carries its executable siblings, ordered by ``ps_idx``.
-    ``shacl.extractor.extract_qualified_rules`` is the per-document
-    reference. Plan: one aggregate over the value-shape triples, one join on
-    (url, node), one window per (url, shape_uri) for the sibling set."""
-    from pyspark.sql import Window
-
+    disjoint rule carries its executable siblings, ordered by ``ps_idx``;
+    siblings are the qualified property shapes of an active shape,
+    deactivated or not. ``shacl.extractor.extract_qualified_rules`` is the
+    per-document reference. Plan: one aggregate over the value-shape
+    triples, one join on (url, node), one window per (url, shape_uri,
+    target) for the sibling set."""
     fields = {"q_class": "class", "q_datatype": "datatype", "q_nodeKind": "nodeKind"}
     params = (
-        triples.filter(
-            (F.col("status") == "ok") & F.col("predicate").isin(*[SH + f for f in fields.values()])
-        )
+        fr.data.filter(F.col("predicate").isin(*[SH + f for f in fields.values()]))
         .groupBy("url", F.col("subject").alias("qvs"))
         .agg(*[
             F.min(
@@ -631,14 +674,7 @@ def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
         ])
     )
     qps = (
-        shapes.filter(~F.col("deactivated"))
-        .select(
-            "url",
-            F.col("uri").alias("shape_uri"),
-            "target_classes",
-            F.posexplode("property_shapes").alias("ps_idx", "ps"),
-        )
-        .filter(F.col("ps.qualifiedValueShape").isNotNull())
+        fr.all_rules.filter(F.col("shape_active") & F.col("ps.qualifiedValueShape").isNotNull())
         .withColumn("qvs", F.col("ps.qualifiedValueShape"))
         .join(params, ["url", "qvs"], "left")
     )
@@ -647,7 +683,7 @@ def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     # vacuously exclude every value
     executable = F.coalesce(*fields).isNotNull()
     value_shapes = F.collect_list(F.when(executable, F.struct("ps_idx", *fields))).over(
-        Window.partitionBy("url", "shape_uri")
+        Window.partitionBy("url", "shape_uri", "t_idx")
     )
     q_min = F.col("ps.qualifiedMinCount").try_cast("int")
     q_max = F.col("ps.qualifiedMaxCount").try_cast("int")
@@ -655,19 +691,19 @@ def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
         F.lower(F.col("ps.qualifiedValueShapesDisjoint")).isin("true", "1"), F.lit(False)
     )
     rules = qps.select(
-        "url", "shape_uri", "ps_idx", "target_classes", "ps", *fields,
+        "url", "shape_uri", "ps_idx", "target_class", "active", "ps", *fields,
         value_shapes.alias("value_shapes"),
     ).filter(
-        (F.col("ps.path_type") == "predicate")
-        & (F.col("ps.deactivated").isNull() | ~F.col("ps.deactivated").isin("true", "1"))
+        F.col("active")
+        & F.col("target_class").isNotNull()
+        & (F.col("ps.path_type") == "predicate")
         & (q_min.isNotNull() | q_max.isNotNull())
     )
     siblings = F.array_sort(
         F.filter("value_shapes", lambda s: disjoint & (s["ps_idx"] != F.col("ps_idx")))
     )
     return rules.select(
-        "url", "shape_uri", "ps_idx",
-        F.explode("target_classes").alias("target_class"),
+        "url", "shape_uri", "ps_idx", "target_class",
         F.col("ps.path").alias("path"),
         *fields,
         q_min.alias("q_min"),
@@ -679,7 +715,7 @@ def qualified_rules(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     )
 
 
-def qualified_cardinality_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
+def qualified_cardinality_violations(fr: ShapeFrames) -> DataFrame:
     """sh:qualifiedValueShape + qualifiedMin/MaxCount execution (W3C §4.5.3)
     for the row-local-checkable value-shape subset (sh:class / sh:datatype /
     sh:nodeKind — covers the reference fixture pattern).
@@ -693,36 +729,20 @@ def qualified_cardinality_violations(triples: DataFrame, shapes: DataFrame) -> D
     if it conforms to THIS qualified shape and to NO sibling qualified
     shape (the rule rows carry their executable siblings' row-local fields
     as an array; see ``qualified_rules``)."""
-    qrules = qualified_rules(triples, shapes)
-    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
-    typed = _typed_subjects(data)
-
-    focus_cond = (typed.cls == qrules.target_class) & (typed.url == qrules.url)
-    focus = typed.alias("ty").join(qrules.alias("qr"), focus_cond).select(
-        F.col("ty.url").alias("url"),
-        F.col("ty.subject").alias("subject"),
-        "qr.shape_uri", "qr.ps_idx", "qr.path", "qr.q_class", "qr.q_datatype", "qr.q_nodeKind",
-        "qr.q_min", "qr.q_max", "qr.siblings",
-    )
-
-    vals = data.select(
-        "url", "subject", "predicate",
-        F.col("object.value").alias("val"),
-        F.col("object.kind").alias("val_kind"),
-        F.coalesce(
-            F.when(F.col("object.datatype") != "", F.col("object.datatype")), F.lit(XSD + "string")
-        ).alias("val_dt"),
+    focus = focus_nodes(fr, qualified_rules(fr)).select(
+        "url", "focus", "shape_uri", "ps_idx", "path", "q_class", "q_datatype", "q_nodeKind",
+        "q_min", "q_max", "siblings",
     )
     v_cond = (
-        (F.col("fo.subject") == F.col("v.subject"))
+        (F.col("fo.focus") == F.col("v.subject"))
         & (F.col("fo.path") == F.col("v.predicate"))
         & (F.col("fo.url") == F.col("v.url"))
     )
-    with_vals = focus.alias("fo").join(vals.alias("v"), v_cond, "left")
+    with_vals = focus.alias("fo").join(fr.values.alias("v"), v_cond, "left")
 
     # per-value class SET (one small agg over rdf:type triples) — serves
     # both this rule's sh:class conformance and every sibling's
-    vt = typed.groupBy("url", "subject").agg(F.collect_set("cls").alias("val_classes"))
+    vt = fr.typed.groupBy("url", "subject").agg(F.collect_set("cls").alias("val_classes"))
     vt = vt.select(
         F.col("url").alias("vt_url"), F.col("subject").alias("vt_subject"), "val_classes"
     )
@@ -750,7 +770,7 @@ def qualified_cardinality_violations(triples: DataFrame, shapes: DataFrame) -> D
         & ~sib_conforms  # siblings array is empty unless disjoint is set
     )
     agg = with_types.groupBy(
-        "fo.url", "fo.subject", "fo.shape_uri", "fo.ps_idx", "fo.path", "fo.q_min", "fo.q_max"
+        "fo.url", "fo.focus", "fo.shape_uri", "fo.ps_idx", "fo.path", "fo.q_min", "fo.q_max"
     ).agg(F.sum(F.when(conforms, 1).otherwise(0)).alias("n_conforming"))
     return (
         agg.filter(
@@ -758,7 +778,8 @@ def qualified_cardinality_violations(triples: DataFrame, shapes: DataFrame) -> D
             | (F.col("q_max").isNotNull() & (F.col("n_conforming") > F.col("q_max")))
         )
         .select(
-            "url", "subject", "path", "shape_uri", "ps_idx", "n_conforming", "q_min", "q_max",
+            "url", F.col("focus").alias("subject"), "path", "shape_uri", "ps_idx",
+            "n_conforming", "q_min", "q_max",
             F.array(
                 F.when(
                     F.col("q_min").isNotNull() & (F.col("n_conforming") < F.col("q_min")),
@@ -769,7 +790,7 @@ def qualified_cardinality_violations(triples: DataFrame, shapes: DataFrame) -> D
     )
 
 
-def node_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
+def node_shape_violations(fr: ShapeFrames) -> DataFrame:
     """sh:node execution (W3C §4.5.1, one level): values of a property shape
     carrying ``sh:node <S>`` must conform to shape S — S's predicate-path
     property constraints (datatype / nodeKind / min/maxCount subset) are
@@ -779,58 +800,35 @@ def node_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     extracts sh:node as a URI only (URI_CONSTRAINTS,
     ShaclPropertyAnalyzer.php:232-237; fixture node-001.ttl).
     """
-    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
-    typed = _typed_subjects(data)
-
+    predicate_rules = fr.rules.filter(F.col("ps.path_type") == "predicate")
     # (url, parent target_class, parent path, referenced shape)
-    refs = (
-        shapes.select(
-            F.col("url").alias("shape_url"),
-            F.explode("target_classes").alias("target_class"),
-            F.explode("property_shapes").alias("ps"),
-        )
-        .filter(F.col("ps.node").isNotNull() & (F.col("ps.path_type") == "predicate"))
-        .select("shape_url", "target_class", F.col("ps.path").alias("parent_path"), F.col("ps.node").alias("node_shape"))
+    refs = predicate_rules.filter(F.col("ps.node").isNotNull()).select(
+        "url", "target_class",
+        F.col("ps.path").alias("parent_path"), F.col("ps.node").alias("node_shape"),
     )
     # the referenced shape's own predicate-path constraints
-    child = (
-        shapes.select(
-            F.col("url").alias("c_url"),
-            F.col("uri").alias("c_shape_uri"),
-            F.explode("property_shapes").alias("cps"),
-        )
-        .filter(F.col("cps.path_type") == "predicate")
-        .select(
-            "c_url",
-            "c_shape_uri",
-            F.col("cps.path").alias("child_path"),
-            F.col("cps.datatype").alias("cc_datatype"),
-            F.col("cps.nodeKind").alias("cc_nodeKind"),
-            F.col("cps.minCount").cast("int").alias("cc_minCount"),
-            F.col("cps.maxCount").cast("int").alias("cc_maxCount"),
-        )
+    child = _by_shape(predicate_rules).select(
+        "url",
+        F.col("shape_uri").alias("node_shape"),
+        F.col("ps.path").alias("child_path"),
+        F.col("ps.datatype").alias("cc_datatype"),
+        F.col("ps.nodeKind").alias("cc_nodeKind"),
+        F.col("ps.minCount").cast("int").alias("cc_minCount"),
+        F.col("ps.maxCount").cast("int").alias("cc_maxCount"),
     )
-    ref_cond = (refs.node_shape == child.c_shape_uri) & (refs.shape_url == child.c_url)
-    rules = refs.join(child, ref_cond).select(
-        "shape_url", "target_class", "parent_path", "node_shape",
-        "child_path", "cc_datatype", "cc_nodeKind", "cc_minCount", "cc_maxCount",
-    )
+    rules = refs.join(child, ["url", "node_shape"])
 
     # child focus nodes: values of parent_path on subjects typed target_class
-    f_cond = (typed.cls == rules.target_class) & (typed.url == rules.shape_url)
-    focus_parents = typed.alias("ty").join(rules.alias("ru"), f_cond).select(
-        F.col("ty.url").alias("url"), F.col("ty.subject").alias("parent"), "ru.*"
-    )
     pv_cond = (
-        (F.col("fp.parent") == F.col("pv.subject"))
+        (F.col("fp.focus") == F.col("pv.subject"))
         & (F.col("fp.parent_path") == F.col("pv.predicate"))
         & (F.col("fp.url") == F.col("pv.url"))
     )
     child_focus = (
-        focus_parents.alias("fp")
-        .join(data.alias("pv"), pv_cond)
-        .filter(F.col("pv.object.kind").isin("iri", "bnode"))
-        .select("fp.*", F.col("pv.object.value").alias("value_node"))
+        focus_nodes(fr, rules).alias("fp")
+        .join(fr.values.alias("pv"), pv_cond)
+        .filter(F.col("pv.val_kind").isin("iri", "bnode"))
+        .select("fp.*", F.col("pv.val").alias("value_node"))
     )
 
     # child facts: triples of the value node on child_path (left join keeps
@@ -840,17 +838,14 @@ def node_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
         & (F.col("cf.child_path") == F.col("cd.predicate"))
         & (F.col("cf.url") == F.col("cd.url"))
     )
-    joined = child_focus.alias("cf").join(data.alias("cd"), cf_cond, "left")
+    joined = child_focus.alias("cf").join(fr.values.alias("cd"), cf_cond, "left")
 
-    o_val = F.col("cd.object.value")
-    o_kind = F.col("cd.object.kind")
-    o_dt = F.coalesce(
-        F.when(F.col("cd.object.datatype") != "", F.col("cd.object.datatype")), F.lit(XSD + "string")
-    )
+    o_val = F.col("cd.val")
+    o_kind = F.col("cd.val_kind")
     row_viol = F.when(
         o_val.isNotNull()
         & F.col("cf.cc_datatype").isNotNull()
-        & ((o_kind != "literal") | (o_dt != F.col("cf.cc_datatype"))),
+        & ((o_kind != "literal") | (F.col("cd.val_dt") != F.col("cf.cc_datatype"))),
         F.lit("datatype"),
     ).when(
         o_val.isNotNull()
@@ -881,7 +876,7 @@ def node_shape_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     )
 
 
-def node_logical_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
+def node_logical_violations(fr: ShapeFrames) -> DataFrame:
     """Execute NODE-level logical combinators — sh:and / sh:or / sh:xone /
     sh:not referencing OTHER shapes (W3C §4.6; the reference extracts them
     as URI lists only, constraints.and/or/xone/not).
@@ -891,95 +886,73 @@ def node_logical_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     min-maxCount — the same executable subset as ``node_shape_violations``);
     a member with no such constraints conforms vacuously. Then per focus:
     and = all members conform, or = at least one, xone = exactly one,
-    not = the member must NOT conform.
+    not = the member must NOT conform. Member rules are looked up in
+    ``all_rules``, deactivated members included.
 
     Plan shape: combinator rules and member rules are shape METADATA
     (small); the only corpus-sized work is one join from focus nodes to
     their candidate values and three layered aggregates (rule -> member ->
     combinator), all codegen HashAggregates over ints.
     """
-    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
-    typed = _typed_subjects(data)
-
-    base = (
-        shapes.filter(~F.col("deactivated"))
-        .select(
-            F.col("url").alias("shape_url"),
-            F.col("uri").alias("shape_uri"),
-            F.explode("target_classes").alias("target_class"),
-            F.col("constraints"),
-        )
-    )
-    combs = None
-    for name in ("and", "or", "xone"):
-        r = base.filter(F.size(F.col(f"constraints.{name}")) > 0).select(
-            "shape_url",
-            "shape_uri",
-            "target_class",
-            F.lit(name).alias("comb"),
-            F.col(f"constraints.{name}").alias("members"),
-        )
-        combs = r if combs is None else combs.unionByName(r)
-    combs = combs.unionByName(
-        base.filter(F.col("constraints.not").isNotNull()).select(
-            "shape_url",
-            "shape_uri",
-            "target_class",
+    # one row per (shape, target, combinator it sets); sh:not has one member
+    members = F.array(
+        *[
+            F.struct(F.lit(name).alias("comb"), F.col(f"constraints.{name}").alias("members"))
+            for name in ("and", "or", "xone")
+        ],
+        F.struct(
             F.lit("not").alias("comb"),
-            F.array(F.col("constraints.not")).alias("members"),
-        )
+            F.when(
+                F.col("constraints.not").isNotNull(), F.array(F.col("constraints.not"))
+            ).alias("members"),
+        ),
+    )
+    combs = fr.targets.select(
+        "url",
+        "shape_uri",
+        "target_class",
+        F.explode(F.filter(members, lambda c: F.size(c["members"]) > 0)).alias("cb"),
+    ).select("url", "shape_uri", "target_class", "cb.comb", "cb.members")
+
+    member_rules = _by_shape(fr.all_rules).filter(F.col("ps.path_type") == "predicate").select(
+        F.col("url").alias("m_url"),
+        F.col("shape_uri").alias("m_uri"),
+        F.col("ps_idx").alias("m_ps_idx"),
+        F.col("ps.path").alias("m_path"),
+        F.col("ps.datatype").alias("m_datatype"),
+        F.col("ps.nodeKind").alias("m_nodeKind"),
+        F.col("ps.minCount").cast("int").alias("m_minCount"),
+        F.col("ps.maxCount").cast("int").alias("m_maxCount"),
     )
 
-    member_rules = (
-        shapes.select(
-            F.col("url").alias("m_url"),
-            F.col("uri").alias("m_uri"),
-            F.posexplode("property_shapes").alias("m_ps_idx", "mps"),
-        )
-        .filter(F.col("mps.path_type") == "predicate")
-        .select(
-            "m_url",
-            "m_uri",
-            "m_ps_idx",
-            F.col("mps.path").alias("m_path"),
-            F.col("mps.datatype").alias("m_datatype"),
-            F.col("mps.nodeKind").alias("m_nodeKind"),
-            F.col("mps.minCount").cast("int").alias("m_minCount"),
-            F.col("mps.maxCount").cast("int").alias("m_maxCount"),
-        )
-    )
-
-    f_cond = (typed.cls == combs.target_class) & (typed.url == combs.shape_url)
-    focus = typed.alias("ty").join(combs.alias("cb"), f_cond).select(
-        F.col("ty.url").alias("url"),
-        F.col("ty.subject").alias("focus"),
-        "cb.shape_uri",
-        "cb.comb",
-        F.size("cb.members").alias("n_members"),
-        F.explode("cb.members").alias("member"),
+    focus = focus_nodes(fr, combs).select(
+        "url",
+        "focus",
+        "shape_uri",
+        "comb",
+        F.size("members").alias("n_members"),
+        F.explode("members").alias("member"),
     )
 
     mr_cond = (F.col("fm.member") == F.col("mr.m_uri")) & (F.col("fm.url") == F.col("mr.m_url"))
     # left: members with no executable property constraints conform vacuously
     with_rules = focus.alias("fm").join(member_rules.alias("mr"), mr_cond, "left")
 
-    v_cond = (F.col("d.subject") == F.col("fm.focus")) & (
-        F.col("d.predicate") == F.col("mr.m_path")
+    v_cond = (
+        (F.col("d.subject") == F.col("fm.focus"))
+        & (F.col("d.predicate") == F.col("mr.m_path"))
+        & (F.col("d.url") == F.col("fm.url"))
     )
-    v_cond = v_cond & (F.col("d.url") == F.col("fm.url"))
-    with_vals = with_rules.join(data.alias("d"), v_cond, "left")
+    with_vals = with_rules.join(fr.values.alias("d"), v_cond, "left")
 
-    o_val = F.col("d.object.value")
-    o_kind = F.col("d.object.kind")
-    o_dt = F.coalesce(
-        F.when(F.col("d.object.datatype") != "", F.col("d.object.datatype")), F.lit(XSD + "string")
-    )
+    o_val = F.col("d.val")
+    o_kind = F.col("d.val_kind")
     row_bad = (
         o_val.isNotNull()
         & (
             (
                 F.col("mr.m_datatype").isNotNull()
-                & ((o_kind != "literal") | (o_dt != F.col("mr.m_datatype")))
+                & ((o_kind != "literal") | (F.col("d.val_dt") != F.col("mr.m_datatype")))
             )
             | (
                 F.col("mr.m_nodeKind").isNotNull()
@@ -1051,7 +1024,7 @@ def node_logical_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
 MAX_CLOSURE_HOPS = 10
 
 
-def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFrame:
+def path_constraint_violations(fr: ShapeFrames) -> DataFrame:
     """Execute property shapes with NON-predicate paths — sh:inversePath,
     sequence, sh:alternativePath, and sh:zeroOrOnePath (W3C §2.3.1) —
     extending the executable subset beyond ``path_type == 'predicate'``
@@ -1083,49 +1056,30 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
     Returns one row per (focus, rule) violation with a ``violations`` array,
     composable with validate_triples like the other focus-level executors.
     """
-    data = triples.filter(F.col("status") == "ok").filter(F.col("subject").isNotNull())
-    typed = _typed_subjects(data)
-
-    base_rules = (
-        shapes.select(
-            F.col("url").alias("shape_url"),
-            F.col("uri").alias("shape_uri"),
-            F.col("deactivated").alias("shape_deactivated"),
-            F.explode("target_classes").alias("target_class"),
-            F.posexplode("property_shapes").alias("ps_idx", "ps"),
+    base_rules = fr.rules.filter(
+        F.col("ps.path_type").isin(
+            "inverse", "sequence", "alternative", "zeroOrOne", "zeroOrMore", "oneOrMore"
         )
-        .filter(~F.col("shape_deactivated"))
-        .filter(
-            F.col("ps.path_type").isin(
-                "inverse", "sequence", "alternative", "zeroOrOne", "zeroOrMore", "oneOrMore"
-            )
-        )
-        .select(
-            "shape_url",
-            "shape_uri",
-            "ps_idx",
-            "target_class",
-            F.col("ps.path_type").alias("path_type"),
-            F.col("ps.path").alias("path"),
-            F.col("ps.paths").alias("paths"),
-            F.col("ps.datatype").alias("c_datatype"),
-            F.col("ps.class").alias("c_class"),
-            F.col("ps.nodeKind").alias("c_nodeKind"),
-            F.col("ps.minCount").cast("int").alias("c_minCount"),
-            F.col("ps.maxCount").cast("int").alias("c_maxCount"),
-        )
+    ).select(
+        "url",
+        "shape_uri",
+        "ps_idx",
+        "target_class",
+        F.col("ps.path_type").alias("path_type"),
+        F.col("ps.path").alias("path"),
+        F.col("ps.paths").alias("paths"),
+        F.col("ps.datatype").alias("c_datatype"),
+        F.col("ps.class").alias("c_class"),
+        F.col("ps.nodeKind").alias("c_nodeKind"),
+        F.col("ps.minCount").cast("int").alias("c_minCount"),
+        F.col("ps.maxCount").cast("int").alias("c_maxCount"),
     )
-
-    def focus_of(rules):
-        cond = (typed.cls == rules.target_class) & (typed.url == rules.shape_url)
-        return typed.alias("ty").join(rules.alias("ru"), cond).select(
-            F.col("ty.url").alias("url"), F.col("ty.subject").alias("focus"), "ru.*"
-        )
+    data = fr.values
 
     def value_checks(vals):
         """vals: focus rows left-joined with their value nodes (value struct
         columns v_value/v_kind/v_dt nullable for zero-value focus nodes)."""
-        vt = typed.select(
+        vt = fr.typed.select(
             F.col("url").alias("vt_url"),
             F.col("subject").alias("vt_subject"),
             F.col("cls").alias("vt_cls"),
@@ -1194,10 +1148,10 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
 
     # ---- inverse: value nodes are SUBJECTS pointing at the focus ----------
     if "inverse" in types_present:
-        inv_focus = focus_of(base_rules.filter(F.col("path_type") == "inverse"))
-        iv_cond = (F.col("d.object.value") == F.col("fo.focus")) & (
+        inv_focus = focus_nodes(fr, base_rules.filter(F.col("path_type") == "inverse"))
+        iv_cond = (F.col("d.val") == F.col("fo.focus")) & (
             F.col("d.predicate") == F.col("fo.path")
-        ) & F.col("d.object.kind").isin("iri", "bnode")
+        ) & F.col("d.val_kind").isin("iri", "bnode")
         iv_cond = iv_cond & (F.col("d.url") == F.col("fo.url"))
         inv_vals = inv_focus.alias("fo").join(data.alias("d"), iv_cond, "left").select(
             "fo.*",
@@ -1213,8 +1167,8 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
     # (W3C §2.3.1: values are reachable through ANY member; counts are per
     # RULE, so the per-member left joins aggregate together in value_checks)
     if "alternative" in types_present:
-        alt_focus = focus_of(
-            base_rules.filter((F.col("path_type") == "alternative") & F.col("paths").isNotNull())
+        alt_focus = focus_nodes(
+            fr, base_rules.filter((F.col("path_type") == "alternative") & F.col("paths").isNotNull())
         )
         alt_m = alt_focus.select("*", F.explode("paths").alias("member")).alias("fo")
         am_cond = (F.col("d.subject") == F.col("fo.focus")) & (
@@ -1223,19 +1177,16 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         am_cond = am_cond & (F.col("d.url") == F.col("fo.url"))
         alt_vals = alt_m.join(data.alias("d"), am_cond, "left").select(
             "fo.*",
-            F.col("d.object.value").alias("v_value"),
-            F.col("d.object.kind").alias("v_kind"),
-            F.coalesce(
-                F.when(F.col("d.object.datatype") != "", F.col("d.object.datatype")),
-                F.lit(XSD + "string"),
-            ).alias("v_dt"),
+            F.col("d.val").alias("v_value"),
+            F.col("d.val_kind").alias("v_kind"),
+            F.col("d.val_dt").alias("v_dt"),
         ).drop("member")
         outs.append(value_checks(alt_vals))
 
     # ---- zeroOrOne: the focus node itself (zero hops) UNION one hop -------
     if "zeroOrOne" in types_present:
-        zo_focus = focus_of(
-            base_rules.filter((F.col("path_type") == "zeroOrOne") & F.col("path").isNotNull())
+        zo_focus = focus_nodes(
+            fr, base_rules.filter((F.col("path_type") == "zeroOrOne") & F.col("path").isNotNull())
         )
         zo_cond = (F.col("d.subject") == F.col("fo.focus")) & (
             F.col("d.predicate") == F.col("fo.path")
@@ -1243,12 +1194,9 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         zo_cond = zo_cond & (F.col("d.url") == F.col("fo.url"))
         zo_hop = zo_focus.alias("fo").join(data.alias("d"), zo_cond, "inner").select(
             "fo.*",
-            F.col("d.object.value").alias("v_value"),
-            F.col("d.object.kind").alias("v_kind"),
-            F.coalesce(
-                F.when(F.col("d.object.datatype") != "", F.col("d.object.datatype")),
-                F.lit(XSD + "string"),
-            ).alias("v_dt"),
+            F.col("d.val").alias("v_value"),
+            F.col("d.val_kind").alias("v_kind"),
+            F.col("d.val_dt").alias("v_dt"),
         )
         zo_zero = zo_focus.select(
             "*",
@@ -1264,7 +1212,7 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         F.col("path_type").isin("zeroOrMore", "oneOrMore") & F.col("path").isNotNull()
     )
     if types_present & {"zeroOrMore", "oneOrMore"}:  # branch on collected metadata, no extra job
-        tc_focus = focus_of(tc_rules)
+        tc_focus = focus_nodes(fr, tc_rules)
         group_keys = [
             "url", "focus", "shape_uri", "ps_idx", "target_class", "path_type", "path",
             "c_datatype", "c_class", "c_nodeKind", "c_minCount", "c_maxCount",
@@ -1280,12 +1228,14 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         # exprs), so cache-matching is sound — and localCheckpoint trips a
         # Spark attribute-rewrite bug on this mapInPandas+aliased-join plan
         # shape ("key not found" in AttributeMap during checkpoint planning)
-        seed = tc_focus.select(
-            *group_keys,
-            F.col("focus").alias("v_value"),
-            _resource_kind(F.col("focus")).alias("v_kind"),
-            F.lit(None).cast("string").alias("v_dt"),
-        ).distinct().persist()
+        seed = persist(
+            tc_focus.select(
+                *group_keys,
+                F.col("focus").alias("v_value"),
+                _resource_kind(F.col("focus")).alias("v_kind"),
+                F.lit(None).cast("string").alias("v_dt"),
+            ).distinct()
+        )
         reached = seed  # depth-0 nodes (the focus itself)
         plus = None  # depth >= 1 values (the oneOrMore set)
         frontier = seed
@@ -1294,17 +1244,14 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
                 F.col("d.predicate") == F.col("fr.path")
             ) & F.col("fr.v_kind").isin("iri", "bnode")
             h_cond = h_cond & (F.col("d.url") == F.col("fr.url"))
-            nxt = (
+            nxt = persist(
                 frontier.alias("fr")
                 .join(data.alias("d"), h_cond, "inner")
                 .select(
                     *[F.col(f"fr.{c}") for c in group_keys],
-                    F.col("d.object.value").alias("v_value"),
-                    F.col("d.object.kind").alias("v_kind"),
-                    F.coalesce(
-                        F.when(F.col("d.object.datatype") != "", F.col("d.object.datatype")),
-                        F.lit(XSD + "string"),
-                    ).alias("v_dt"),
+                    F.col("d.val").alias("v_value"),
+                    F.col("d.val_kind").alias("v_kind"),
+                    F.col("d.val_dt").alias("v_dt"),
                 )
                 .distinct()
                 # cycle guard: only genuinely new (rule, focus, value) rows
@@ -1313,11 +1260,10 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
                     rule_keys + ["v_value"],
                     "left_anti",
                 )
-                .persist()
             )
             if nxt.limit(1).count() == 0:
                 break
-            reached = reached.unionByName(nxt).persist()
+            reached = persist(reached.unionByName(nxt))
             plus = nxt if plus is None else plus.unionByName(nxt)
             frontier = nxt
         star_vals = reached.filter(F.col("path_type") == "zeroOrMore")
@@ -1342,7 +1288,7 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         {r["L"] for r in meta if r["path_type"] == "sequence" and r["L"] is not None and r["L"] > 0}
     )
     for L in lengths:
-        fo = focus_of(seq_rules.filter(F.size("paths") == L)).alias("fo")
+        fo = focus_nodes(fr, seq_rules.filter(F.size("paths") == L)).alias("fo")
         cur = fo
         for i in range(L):
             # hop source: the focus node for hop 0, else the previous hop's
@@ -1351,8 +1297,7 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
                 F.col("fo.focus")
                 if i == 0
                 else F.when(
-                    F.col(f"d{i - 1}.object.kind").isin("iri", "bnode"),
-                    F.col(f"d{i - 1}.object.value"),
+                    F.col(f"d{i - 1}.val_kind").isin("iri", "bnode"), F.col(f"d{i - 1}.val")
                 )
             )
             cond = (F.col(f"d{i}.subject") == prev) & (
@@ -1364,12 +1309,9 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         last = f"d{L - 1}"
         seq_vals = cur.select(
             *[F.col(f"fo.{c}") for c in fo.columns],
-            F.col(f"{last}.object.value").alias("v_value"),
-            F.col(f"{last}.object.kind").alias("v_kind"),
-            F.coalesce(
-                F.when(F.col(f"{last}.object.datatype") != "", F.col(f"{last}.object.datatype")),
-                F.lit(XSD + "string"),
-            ).alias("v_dt"),
+            F.col(f"{last}.val").alias("v_value"),
+            F.col(f"{last}.val_kind").alias("v_kind"),
+            F.col(f"{last}.val_dt").alias("v_dt"),
         )
         outs.append(value_checks(seq_vals))
 
@@ -1379,7 +1321,7 @@ def path_constraint_violations(triples: DataFrame, shapes: DataFrame) -> DataFra
         # whole function then contributes nothing to the reports plan)
         from pyspark.sql import types as T
 
-        return triples.sparkSession.createDataFrame(
+        return fr.data.sparkSession.createDataFrame(
             [],
             T.StructType(
                 [

@@ -29,6 +29,7 @@ from ..operators.validate import (
     pair_constraint_violations,
     path_constraint_violations,
     qualified_cardinality_violations,
+    shape_frames,
     split_validated,
     validate_triples,
 )
@@ -43,28 +44,31 @@ def constraint_reports(triples: DataFrame, shapes: DataFrame) -> DataFrame:
     row (url, subject, source, shape_uri, violations). These are REPORTS,
     not a partition of the triple stream: each verdict concerns a focus
     node's whole value set, so they ride alongside accepted/rejected rather
-    than subtracting triples from them."""
+    than subtracting triples from them. The executors share one set of
+    frames (``shape_frames``): one rule table, one typed-subject table,
+    one value table."""
+    fr = shape_frames(triples, shapes)
     reports = [
-        pair_constraint_violations(triples, shapes).select(
+        pair_constraint_violations(fr).select(
             "url", "subject", F.lit("pair").alias("source"), "shape_uri", "violations"
         ),
-        qualified_cardinality_violations(triples, shapes).select(
+        qualified_cardinality_violations(fr).select(
             "url", "subject", F.lit("qualified").alias("source"), "shape_uri", "violations"
         ),
-        node_shape_violations(triples, shapes).select(
+        node_shape_violations(fr).select(
             "url",
             "subject",
             F.lit("node_shape").alias("source"),
             F.col("node_shape_uri").alias("shape_uri"),
             "violations",
         ),
-        node_logical_violations(triples, shapes).select(
+        node_logical_violations(fr).select(
             "url", "subject", F.lit("node_logical").alias("source"), "shape_uri", "violations"
         ),
-        path_constraint_violations(triples, shapes).select(
+        path_constraint_violations(fr).select(
             "url", "subject", F.lit("path").alias("source"), "shape_uri", "violations"
         ),
-        sparql_constraint_violations(triples, shapes).select(
+        sparql_constraint_violations(fr).select(
             "url", "subject", F.lit("sparql").alias("source"), "shape_uri", "violations"
         ),
     ]

@@ -270,10 +270,10 @@ def test_node_not_nonexecutable_member_skipped(spark):
     predicate-path rules must be skipped (it used to flag every focus
     node); a member WITH executable rules still fires when the focus
     conforms to it."""
-    from kgforge.operators.validate import node_logical_violations
+    from kgforge.operators.validate import node_logical_violations, shape_frames
 
     pages = _page(spark, NODE_NOT_TTL)
-    out = node_logical_violations(*split_parsed(parse_combined(pages)))
+    out = node_logical_violations(shape_frames(*split_parsed(parse_combined(pages))))
     got = {(r["subject"], r["constraint"]) for r in out.collect()}
     assert ("http://example.org/a1", "not") not in got  # opaque member: skipped
     assert ("http://example.org/b1", "not") in got      # conforms => 'not' violated
@@ -305,10 +305,10 @@ def test_inverse_path_bnode_nodekind(spark):
     """ADVICE r2: inverse-path value nodes were hardcoded v_kind='iri', so
     sh:nodeKind sh:BlankNode on a blank-node subject always violated and
     sh:IRI never did. Kind now derives from the '_:' label."""
-    from kgforge.operators.validate import path_constraint_violations
+    from kgforge.operators.validate import path_constraint_violations, shape_frames
 
     pages = _page(spark, BNODE_KIND_TTL)
-    out = path_constraint_violations(*split_parsed(parse_combined(pages)))
+    out = path_constraint_violations(shape_frames(*split_parsed(parse_combined(pages))))
     got = {(r["subject"], tuple(sorted(r["violations"]))) for r in out.collect()}
     # bnode subject satisfies sh:BlankNode: no violation for ex:t
     assert not any(s == "http://example.org/t" for s, _v in got)
@@ -334,8 +334,8 @@ def test_union_nodekinds_in_path_executor(spark):
     """ADVICE r2: the path/node-logical executors enumerated only 4 of 6
     sh:nodeKind values — sh:IRIOrLiteral (and BlankNodeOrLiteral) always
     violated. Literal and IRI values must both now conform."""
-    from kgforge.operators.validate import path_constraint_violations
+    from kgforge.operators.validate import path_constraint_violations, shape_frames
 
     pages = _page(spark, UNION_KIND_TTL)
-    out = path_constraint_violations(*split_parsed(parse_combined(pages)))
+    out = path_constraint_violations(shape_frames(*split_parsed(parse_combined(pages))))
     assert not any("nodeKind" in r["violations"] for r in out.collect())

@@ -15,6 +15,7 @@ from kgforge.html import extract_text
 from kgforge.operators.parse import parse_combined, split_parsed
 from kgforge.operators.validate import (
     path_constraint_violations,
+    shape_frames,
     split_validated,
     validate_triples,
 )
@@ -122,7 +123,7 @@ ex:bad a ex:Resource ; ex:value "text" .
 
 def _path_viols(spark, ttl):
     pages = _page(spark, ttl, url="https://ex.example.org/paths")
-    out = path_constraint_violations(*split_parsed(parse_combined(pages)))
+    out = path_constraint_violations(shape_frames(*split_parsed(parse_combined(pages))))
     return {(r["subject"], r["path_type"]): sorted(r["violations"]) for r in out.collect()}
 
 
@@ -213,7 +214,7 @@ def _node_logical(spark, ttl):
     from kgforge.operators.validate import node_logical_violations
 
     pages = _page(spark, ttl, url="https://ex.example.org/nodelogic")
-    out = node_logical_violations(*split_parsed(parse_combined(pages)))
+    out = node_logical_violations(shape_frames(*split_parsed(parse_combined(pages))))
     return {(r["subject"], r["constraint"]): r["violations"] for r in out.collect()}
 
 

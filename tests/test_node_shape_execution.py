@@ -8,7 +8,7 @@ import datetime as dt
 
 from kgforge.html import extract_text
 from kgforge.operators.parse import parse_combined, split_parsed
-from kgforge.operators.validate import node_shape_violations
+from kgforge.operators.validate import node_shape_violations, shape_frames
 from kgforge.schema import PAGES_SCHEMA
 
 TTL = """\
@@ -48,7 +48,7 @@ def test_node_shape_execution(spark):
     )
     triples, shapes = split_parsed(parse_combined(pages))
 
-    viol = node_shape_violations(triples, shapes)
+    viol = node_shape_violations(shape_frames(triples, shapes))
     got = {r["subject"].rsplit("/", 1)[-1]: sorted(r["violations"]) for r in viol.collect()}
     assert got == {
         "noStreet": ["minCount"],   # no ex:street at all

@@ -9,7 +9,7 @@ import datetime as dt
 
 from kgforge.html import extract_text
 from kgforge.operators.parse import parse_combined, split_parsed
-from kgforge.operators.validate import pair_constraint_violations
+from kgforge.operators.validate import pair_constraint_violations, shape_frames
 from kgforge.schema import PAGES_SCHEMA
 
 TTL = """\
@@ -60,7 +60,7 @@ def test_pair_constraints(spark):
     )
     triples, shapes = split_parsed(parse_combined(pages))
 
-    viol = pair_constraint_violations(triples, shapes)
+    viol = pair_constraint_violations(shape_frames(triples, shapes))
     got = {(r["subject"].rsplit("/", 1)[-1], r["constraint"]) for r in viol.collect()}
     assert got == {
         ("bad", "equals"),

@@ -10,7 +10,11 @@ import pytest
 
 from kgforge.html import extract_text
 from kgforge.operators.parse import parse_combined, parse_document, split_parsed
-from kgforge.operators.validate import qualified_cardinality_violations, qualified_rules
+from kgforge.operators.validate import (
+    qualified_cardinality_violations,
+    qualified_rules,
+    shape_frames,
+)
 from kgforge.pipeline.run import constraint_reports
 from kgforge.schema import PAGES_SCHEMA
 from kgforge.shacl.extractor import extract_qualified_rules
@@ -57,20 +61,38 @@ def _pages(spark, *ttls, url="https://ex.example.org/qual"):
     )
 
 
-def test_qualified_cardinality(spark):
-    triples, shapes = split_parsed(parse_combined(_pages(spark, TTL)))
-    qrules = qualified_rules(triples, shapes)
-    assert qrules.count() == 1
-    r = qrules.collect()[0]
-    assert r["q_class"] == "http://example.org/HomeAddress"
-    assert (r["q_min"], r["q_max"]) == (1, 2)
+UNSHAPED_PERSON_TTL = PREFIXES + """
+ex:stranger a ex:Person ; ex:address ex:w1 .
+ex:w1 a ex:WorkAddress .
+"""
 
-    viol = qualified_cardinality_violations(triples, shapes)
-    got = {r["subject"].rsplit("/", 1)[-1]: (r["violations"][0], r["n_conforming"]) for r in viol.collect()}
-    assert got == {
-        "none": ("qualifiedMinCount", 0),
-        "toomany": ("qualifiedMaxCount", 3),
+
+def test_qualified_cardinality(spark):
+    """Second input: an ex:Person with no HomeAddress on a page without
+    shapes. The shape on the first page must not reach it."""
+    inputs = {
+        "one_page": _pages(spark, TTL),
+        "cross_page": _pages(spark, TTL).unionByName(
+            _pages(spark, UNSHAPED_PERSON_TTL, url="https://ex.example.org/unshaped")
+        ),
     }
+    for name, pages in inputs.items():
+        fr = shape_frames(*split_parsed(parse_combined(pages)))
+        qrules = qualified_rules(fr)
+        assert qrules.count() == 1, name
+        r = qrules.collect()[0]
+        assert r["q_class"] == "http://example.org/HomeAddress"
+        assert (r["q_min"], r["q_max"]) == (1, 2)
+
+        viol = qualified_cardinality_violations(fr)
+        got = {
+            (r["url"], r["subject"].rsplit("/", 1)[-1]): (r["violations"][0], r["n_conforming"])
+            for r in viol.collect()
+        }
+        assert got == {
+            ("https://ex.example.org/qual", "none"): ("qualifiedMinCount", 0),
+            ("https://ex.example.org/qual", "toomany"): ("qualifiedMaxCount", 3),
+        }, name
 
 
 DISJOINT_TTL = """\
@@ -109,11 +131,11 @@ def test_qualified_disjoint(spark):
     while ex:okkid (disjoint parents) conforms to both rules."""
     pages = _pages(spark, DISJOINT_TTL, url="https://ex.example.org/disj")
     triples, shapes = split_parsed(parse_combined(pages))
-    rows = qualified_rules(triples, shapes).collect()
+    rows = qualified_rules(shape_frames(triples, shapes)).collect()
     assert len(rows) == 2 and all(r["disjoint"] for r in rows)
     assert all(len(r["siblings"]) == 1 for r in rows)
 
-    viol = qualified_cardinality_violations(triples, shapes)
+    viol = qualified_cardinality_violations(shape_frames(triples, shapes))
     got = {
         (r["subject"].rsplit("/", 1)[-1], r["ps_idx"]): (r["violations"][0], r["n_conforming"])
         for r in viol.collect()
@@ -214,7 +236,7 @@ def test_qualified_rules_match_reference(spark, case):
     url = f"https://ex.example.org/{case}"
     pages = _pages(spark, *EDGE_CASES[case], url=url)
     triples, shapes = split_parsed(parse_combined(pages))
-    got = [r.asDict(recursive=True) for r in qualified_rules(triples, shapes).collect()]
+    got = [r.asDict(recursive=True) for r in qualified_rules(shape_frames(triples, shapes)).collect()]
 
     want = []
     for p in pages.collect():
@@ -259,17 +281,46 @@ def test_qualified_rules_edge_semantics(spark):
     ]
 
 
+DEACTIVATED_PROBES = PREFIXES + """
+ex:PairOn a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path ex:nick ; sh:disjoint ex:name ] .
+ex:PairOff a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path ex:alias ; sh:disjoint ex:name ; sh:deactivated true ] .
+ex:PathOff a sh:NodeShape ; sh:targetClass ex:A ;
+    sh:property [ sh:path [ sh:inversePath ex:knows ] ; sh:minCount 1 ; sh:deactivated true ] .
+ex:Addr a sh:NodeShape ; sh:property [ sh:path ex:street ; sh:minCount 1 ] .
+ex:NodeOff a sh:NodeShape ; sh:targetClass ex:A ; sh:deactivated true ;
+    sh:property [ sh:path ex:home ; sh:node ex:Addr ] .
+ex:a ex:name "x" ; ex:nick "x" ; ex:alias "x" ; ex:home ex:h .
+ex:h ex:city "Utrecht" .
+"""
+
+
 def test_deactivated_shapes_report_nothing(spark):
     """sh:deactivated on the node shape or on the property shape switches
-    the qualified-cardinality check off, as for every other executor."""
+    the check off (W3C SHACL §2.1.5), for the qualified-cardinality
+    executor and for every report source: a deactivated sh:disjoint
+    property shape, a deactivated sh:inversePath property shape and a
+    deactivated sh:node parent report nothing, while the active
+    sh:disjoint on the same focus node still reports."""
     data = """
 ex:a a ex:A ; ex:p ex:v .
 ex:v a ex:D .
 """
-    pages = _pages(spark, EDGE_CASES["deactivated"][0] + data)
+    pages = _pages(spark, EDGE_CASES["deactivated"][0] + data + DEACTIVATED_PROBES)
     triples, shapes = split_parsed(parse_combined(pages))
-    got = {(r["shape_uri"], r["ps_idx"]) for r in qualified_cardinality_violations(triples, shapes).collect()}
+    got = {
+        (r["shape_uri"], r["ps_idx"])
+        for r in qualified_cardinality_violations(shape_frames(triples, shapes)).collect()
+    }
     assert got == set()
+    reports = {
+        (r["subject"], r["source"], r["shape_uri"], tuple(r["violations"]))
+        for r in constraint_reports(triples, shapes).collect()
+    }
+    assert reports == {
+        ("http://example.org/a", "pair", "http://example.org/PairOn", ("disjoint",))
+    }
 
 
 def test_malformed_counts_do_not_abort_reports(spark):

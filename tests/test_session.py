@@ -2,7 +2,7 @@
 
 import pytest
 
-from kgforge.session import default_shuffle_partitions
+from kgforge.session import default_driver_memory, default_shuffle_partitions
 
 
 @pytest.mark.parametrize(
@@ -27,3 +27,16 @@ def test_local_star_falls_back_to_env(monkeypatch):
     assert default_shuffle_partitions("local[*]") == 12
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert default_shuffle_partitions("local[*]") == 64
+
+
+@pytest.mark.parametrize(
+    "mem_total_kb, want",
+    [
+        (16479424, "6g"),  # a 15.7 GiB host: 40% is 6.3 GiB
+        (64 * 1024 * 1024, "16g"),  # capped at 16g
+        (2 * 1024 * 1024, "1g"),  # floor of 1g
+        (None, "16g"),  # MemTotal unreadable: the old default
+    ],
+)
+def test_driver_memory_from_mem_total(mem_total_kb, want):
+    assert default_driver_memory(mem_total_kb) == want

@@ -18,6 +18,7 @@ from kgforge.operators.sparql import (
     parse_sparql_constraint,
     sparql_constraint_violations,
 )
+from kgforge.operators.validate import shape_frames
 from kgforge.schema import PAGES_SCHEMA
 
 EX = "http://example.org/"
@@ -45,7 +46,7 @@ def _violations(spark, ttl, url="https://ex.example.org/sparql"):
              extract_text(html.decode()), "en")]
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
     out = sparql_constraint_violations(
-        *split_parsed(parse_combined(pages)), strict=True
+        shape_frames(*split_parsed(parse_combined(pages))), strict=True
     )
     return {(r["subject"], r["constraint"]) for r in out.collect()}
 
