@@ -334,11 +334,8 @@ def sparql_constraint_violations(fr: ShapeFrames, strict: bool = False) -> DataF
             & (F.col("q_ask").eqNullSafe(row["q_ask"]))
             & (F.col("pfx_key") == row["pfx_key"])
         )
-        focus = (
-            focus_nodes(fr, carriers)
-            .select(F.col("url").alias("f_url"), "focus", "shape_uri")
-            .distinct()
-        )
+        # one focus row per (focus node, shape): the carriers hold one query
+        focus = focus_nodes(fr, carriers).select(F.col("url").alias("f_url"), "focus", "shape_uri")
         try:
             matched = _constraint_solutions(focus, data, q)
         except SparqlUnsupported:

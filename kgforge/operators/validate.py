@@ -24,13 +24,27 @@ executor reads — the ok-triples table, the typed-subject table, the value
 table (xsd:string default applied there), the active shape-target table
 and the rule table (target class × property shape, ``ps_idx`` from one
 posexplode, one deactivation filter for the shape and the property
-shape); ``focus_nodes`` is the one focus join (typed subjects × rules on
-url and target class). Each executor is a function of the frames and
-holds only its verdict logic; ``pipeline.run.constraint_reports`` builds
-the frames once for all of them. Deactivated shapes and property shapes
-yield no results (W3C SHACL §2.1.5), with one exception kept as before:
-the member shapes of node-level sh:and/or/xone/not are evaluated whether
-or not they are deactivated.
+shape). ``pipeline.run.constraint_reports`` builds the frames once for
+all executors. The focus-level executors are
+built from four shared pieces and keep only their rule selection and
+final verdict:
+
+- ``focus_nodes``: the one focus join (typed subjects × rules on url and
+  target class), one row per (focus node, rule) however many of the
+  rule's target classes the focus node has;
+- ``value_hop``: focus rows left-joined to their values over one
+  predicate, zero-value focus nodes kept — every one-hop, parent / child,
+  member and path-step join;
+- ``value_violation``: a value node's first datatype / nodeKind / class
+  violation (the class from ``with_value_classes``), also the qualified
+  value-shape conformance test;
+- ``focus_verdicts``: the per-(focus, rule) aggregate that adds
+  minCount / maxCount.
+
+Deactivated shapes and property shapes yield no results (W3C SHACL
+§2.1.5), with one exception kept as before: the member shapes of
+node-level sh:and/or/xone/not are evaluated whether or not they are
+deactivated.
 
 Scale design:
 - the rule table joins against the triples fact table with AQE choosing
@@ -163,15 +177,96 @@ def shape_frames(triples: DataFrame, shapes: DataFrame) -> ShapeFrames:
 
 
 def focus_nodes(fr: ShapeFrames, rules: DataFrame) -> DataFrame:
-    """(url, focus, <rule columns but url>): the subjects typed with a
-    rule's target class on the rule's own page. Both sides are aliased, so
-    the page condition compares the two tables' urls even though both
-    derive from one parsed table."""
+    """(url, focus, <rule columns but url, target_class, t_idx>): one row per
+    subject typed with a rule's target class on the rule's own page and per
+    rule, however many of the rule's target classes the subject has. Both
+    sides of the join are aliased, so the page condition compares the two
+    tables' urls even though both derive from one parsed table."""
     cond = (F.col("ty.url") == F.col("ru.url")) & (F.col("ty.cls") == F.col("ru.target_class"))
-    return fr.typed.alias("ty").join(rules.alias("ru"), cond).select(
-        F.col("ty.url").alias("url"),
-        F.col("ty.subject").alias("focus"),
-        *[F.col(f"ru.{c}") for c in rules.columns if c != "url"],
+    keep = [c for c in rules.columns if c not in ("url", "target_class", "t_idx")]
+    return (
+        fr.typed.alias("ty")
+        .join(rules.alias("ru"), cond)
+        .select(
+            F.col("ty.url").alias("url"),
+            F.col("ty.subject").alias("focus"),
+            *[F.col(f"ru.{c}") for c in keep],
+        )
+        .distinct()
+    )
+
+
+# the value columns of ``ShapeFrames.values`` that a hop adds to its rows
+VALUE_COLUMNS = ("val", "val_kind", "val_dt")
+
+
+def value_hop(fr: ShapeFrames, rows: DataFrame, path: str, src: str = "focus") -> DataFrame:
+    """``rows`` left-joined to the values of the node in column ``src`` over
+    the predicate in column ``path``, on the row's page: one row per value,
+    and one row with NULL ``val``/``val_kind``/``val_dt`` when there is none,
+    so zero-value focus nodes survive for minCount. With ``src="val"`` the
+    hop continues from an earlier hop's value, through resources only; the
+    new value columns replace the old."""
+    start = F.col(f"h.{src}")
+    if src == "val":
+        start = F.when(F.col("h.val_kind").isin("iri", "bnode"), start)
+    cond = (
+        (F.col("v.subject") == start)
+        & (F.col("v.predicate") == F.col(f"h.{path}"))
+        & (F.col("v.url") == F.col("h.url"))
+    )
+    return rows.alias("h").join(fr.values.alias("v"), cond, "left").select(
+        *[F.col(f"h.{c}") for c in rows.columns if c not in VALUE_COLUMNS],
+        *[F.col(f"v.{c}") for c in VALUE_COLUMNS],
+    )
+
+
+def with_value_classes(fr: ShapeFrames, rows: DataFrame) -> DataFrame:
+    """``rows`` + ``val_classes``: the rdf:type set of the row's value node
+    on its page (NULL for an untyped value), from one per-(url, subject)
+    class set."""
+    classes = fr.typed.groupBy("url", "subject").agg(F.collect_set("cls").alias("classes"))
+    cond = (F.col("c.subject") == F.col("r.val")) & (F.col("c.url") == F.col("r.url"))
+    return rows.alias("r").join(classes.alias("c"), cond, "left").select(
+        "r.*", F.col("c.classes").alias("val_classes")
+    )
+
+
+def value_violation(datatype, node_kind, cls=None):
+    """The first violation of the row's value node (``val``, ``val_kind``,
+    ``val_dt``) against a rule's sh:datatype, sh:nodeKind and sh:class
+    columns, tested in that order; NULL when the value conforms or there is
+    no value. ``cls=None`` checks no class; otherwise the rows need
+    ``val_classes`` (``with_value_classes``)."""
+    kind = F.col("val_kind")
+    bad = F.when(
+        datatype.isNotNull() & ((kind != "literal") | (F.col("val_dt") != datatype)),
+        F.lit("datatype"),
+    ).when(node_kind.isNotNull() & ~_nodekind_conforms(node_kind, kind), F.lit("nodeKind"))
+    if cls is not None:
+        classes = F.coalesce(F.col("val_classes"), F.array().cast("array<string>"))
+        bad = bad.when(cls.isNotNull() & ~F.array_contains(classes, cls), F.lit("class"))
+    return F.when(F.col("val").isNotNull(), bad)
+
+
+def focus_verdicts(rows: DataFrame, keys: list[str], violation) -> DataFrame:
+    """One row per (focus, rule) group of value rows, ``keys`` plus
+    ``violations``: the distinct value-node ``violation``s, then minCount /
+    maxCount over the number of values against the rows' ``c_minCount`` /
+    ``c_maxCount``. Empty ``violations`` = the focus node conforms."""
+    agg = rows.groupBy(*keys, "c_minCount", "c_maxCount").agg(
+        F.count("val").alias("n_vals"),
+        F.array_distinct(F.collect_list(violation)).alias("row_violations"),
+    )
+    card = F.when(
+        F.col("c_minCount").isNotNull() & (F.col("n_vals") < F.col("c_minCount")),
+        F.lit("minCount"),
+    ).when(
+        F.col("c_maxCount").isNotNull() & (F.col("n_vals") > F.col("c_maxCount")),
+        F.lit("maxCount"),
+    )
+    return agg.select(
+        *keys, F.array_compact(F.concat("row_violations", F.array(card))).alias("violations")
     )
 
 
@@ -556,10 +651,9 @@ def pair_constraint_violations(fr: ShapeFrames) -> DataFrame:
     (url, subject, path, other_path, constraint, shape_uri).
 
     Plan shape: the rule table is exploded to (target_class, path,
-    constraint, other_path); focus values of both predicates join on
-    (url, subject) — two AQE-managed equi-joins, aggregation collapses to
-    per-focus verdicts (full-outer on value for equals so asymmetric
-    differences surface).
+    constraint, other_path); one ``value_hop`` per predicate brings the
+    focus node's values of each side, and one aggregate per (focus, rule)
+    compares the two value sets.
     """
     # one row per (property shape, pair parameter it sets): one explode
     # over the four parameters, not a union of four rule-table scans
@@ -575,26 +669,10 @@ def pair_constraint_violations(fr: ShapeFrames) -> DataFrame:
         F.explode(F.filter(pairs, lambda p: p["other_path"].isNotNull())).alias("pr"),
     ).select("url", "shape_uri", "target_class", "path", "pr.other_path", "pr.constraint")
 
-    focus = focus_nodes(fr, pair_rules).select(
-        "url", "focus", "shape_uri", "path", "other_path", "constraint"
+    lhs = value_hop(fr, focus_nodes(fr, pair_rules), "path").select(
+        "url", "focus", "shape_uri", "path", "other_path", "constraint", F.col("val").alias("lval")
     )
-    vals = fr.values.select("url", "subject", "predicate", "val")
-    lhs_cond = (
-        (F.col("fo.focus") == F.col("lv.subject"))
-        & (F.col("fo.path") == F.col("lv.predicate"))
-        & (F.col("fo.url") == F.col("lv.url"))
-    )
-    rhs_cond = (
-        (F.col("fo.focus") == F.col("rv.subject"))
-        & (F.col("fo.other_path") == F.col("rv.predicate"))
-        & (F.col("fo.url") == F.col("rv.url"))
-    )
-    lhs = focus.alias("fo").join(vals.alias("lv"), lhs_cond, "left").select(
-        "fo.*", F.col("lv.val").alias("lval")
-    )
-    both = lhs.alias("fo").join(vals.alias("rv"), rhs_cond, "left").select(
-        "fo.*", F.col("rv.val").alias("rval")
-    )
+    both = value_hop(fr, lhs, "other_path").withColumnRenamed("val", "rval")
 
     agg = both.groupBy("url", "focus", "shape_uri", "path", "other_path", "constraint").agg(
         # equals: value sets must be identical — any lhs value absent from
@@ -729,49 +807,20 @@ def qualified_cardinality_violations(fr: ShapeFrames) -> DataFrame:
     if it conforms to THIS qualified shape and to NO sibling qualified
     shape (the rule rows carry their executable siblings' row-local fields
     as an array; see ``qualified_rules``)."""
-    focus = focus_nodes(fr, qualified_rules(fr)).select(
-        "url", "focus", "shape_uri", "ps_idx", "path", "q_class", "q_datatype", "q_nodeKind",
-        "q_min", "q_max", "siblings",
-    )
-    v_cond = (
-        (F.col("fo.focus") == F.col("v.subject"))
-        & (F.col("fo.path") == F.col("v.predicate"))
-        & (F.col("fo.url") == F.col("v.url"))
-    )
-    with_vals = focus.alias("fo").join(fr.values.alias("v"), v_cond, "left")
+    vals = with_value_classes(fr, value_hop(fr, focus_nodes(fr, qualified_rules(fr)), "path"))
 
-    # per-value class SET (one small agg over rdf:type triples) — serves
-    # both this rule's sh:class conformance and every sibling's
-    vt = fr.typed.groupBy("url", "subject").agg(F.collect_set("cls").alias("val_classes"))
-    vt = vt.select(
-        F.col("url").alias("vt_url"), F.col("subject").alias("vt_subject"), "val_classes"
-    )
-    t_cond = (F.col("v.val") == F.col("vt_subject")) & (F.col("fo.url") == F.col("vt_url"))
-    with_types = with_vals.join(vt, t_cond, "left")
-    classes = F.coalesce(F.col("val_classes"), F.array())
+    def _conforms(q):
+        return value_violation(q["q_datatype"], q["q_nodeKind"], q["q_class"]).isNull()
 
-    def _qvs_conforms(q_class, q_datatype, q_nodeKind):
-        return (
-            (q_class.isNull() | F.array_contains(classes, q_class))
-            & (
-                q_datatype.isNull()
-                | ((F.col("v.val_kind") == "literal") & (F.col("v.val_dt") == q_datatype))
-            )
-            & (q_nodeKind.isNull() | _nodekind_conforms(q_nodeKind, F.col("v.val_kind")))
-        )
-
-    sib_conforms = F.exists(
-        F.coalesce(F.col("fo.siblings"), F.array()),
-        lambda s: _qvs_conforms(s["q_class"], s["q_datatype"], s["q_nodeKind"]),
-    )
     conforms = (
-        F.col("v.val").isNotNull()
-        & _qvs_conforms(F.col("fo.q_class"), F.col("fo.q_datatype"), F.col("fo.q_nodeKind"))
-        & ~sib_conforms  # siblings array is empty unless disjoint is set
+        F.col("val").isNotNull()
+        & _conforms(F.struct("q_class", "q_datatype", "q_nodeKind"))
+        # siblings array is empty unless disjoint is set
+        & ~F.exists(F.coalesce(F.col("siblings"), F.array()), _conforms)
     )
-    agg = with_types.groupBy(
-        "fo.url", "fo.focus", "fo.shape_uri", "fo.ps_idx", "fo.path", "fo.q_min", "fo.q_max"
-    ).agg(F.sum(F.when(conforms, 1).otherwise(0)).alias("n_conforming"))
+    agg = vals.groupBy("url", "focus", "shape_uri", "ps_idx", "path", "q_min", "q_max").agg(
+        F.sum(F.when(conforms, 1).otherwise(0)).alias("n_conforming")
+    )
     return (
         agg.filter(
             (F.col("q_min").isNotNull() & (F.col("n_conforming") < F.col("q_min")))
@@ -804,70 +853,34 @@ def node_shape_violations(fr: ShapeFrames) -> DataFrame:
     # (url, parent target_class, parent path, referenced shape)
     refs = predicate_rules.filter(F.col("ps.node").isNotNull()).select(
         "url", "target_class",
-        F.col("ps.path").alias("parent_path"), F.col("ps.node").alias("node_shape"),
+        F.col("ps.path").alias("path"), F.col("ps.node").alias("node_shape"),
     )
     # the referenced shape's own predicate-path constraints
     child = _by_shape(predicate_rules).select(
         "url",
         F.col("shape_uri").alias("node_shape"),
+        F.col("ps_idx").alias("child_idx"),
         F.col("ps.path").alias("child_path"),
-        F.col("ps.datatype").alias("cc_datatype"),
-        F.col("ps.nodeKind").alias("cc_nodeKind"),
-        F.col("ps.minCount").cast("int").alias("cc_minCount"),
-        F.col("ps.maxCount").cast("int").alias("cc_maxCount"),
+        F.col("ps.datatype").alias("c_datatype"),
+        F.col("ps.nodeKind").alias("c_nodeKind"),
+        F.col("ps.minCount").cast("int").alias("c_minCount"),
+        F.col("ps.maxCount").cast("int").alias("c_maxCount"),
     )
     rules = refs.join(child, ["url", "node_shape"])
 
-    # child focus nodes: values of parent_path on subjects typed target_class
-    pv_cond = (
-        (F.col("fp.focus") == F.col("pv.subject"))
-        & (F.col("fp.parent_path") == F.col("pv.predicate"))
-        & (F.col("fp.url") == F.col("pv.url"))
+    # the parent hop's resource values are the child focus nodes: one row
+    # per (value node, child rule), however many parents reach the node
+    parent = value_hop(fr, focus_nodes(fr, rules), "path")
+    child_focus = parent.filter(F.col("val_kind").isin("iri", "bnode")).select(
+        "url", F.col("val").alias("value_node"), *child.columns[1:]
+    ).distinct()
+    keys = ["url", "value_node", "node_shape", "child_idx", "child_path"]
+    verdicts = focus_verdicts(
+        value_hop(fr, child_focus, "child_path", src="value_node"),
+        keys,
+        value_violation(F.col("c_datatype"), F.col("c_nodeKind")),
     )
-    child_focus = (
-        focus_nodes(fr, rules).alias("fp")
-        .join(fr.values.alias("pv"), pv_cond)
-        .filter(F.col("pv.val_kind").isin("iri", "bnode"))
-        .select("fp.*", F.col("pv.val").alias("value_node"))
-    )
-
-    # child facts: triples of the value node on child_path (left join keeps
-    # zero-value nodes for minCount)
-    cf_cond = (
-        (F.col("cf.value_node") == F.col("cd.subject"))
-        & (F.col("cf.child_path") == F.col("cd.predicate"))
-        & (F.col("cf.url") == F.col("cd.url"))
-    )
-    joined = child_focus.alias("cf").join(fr.values.alias("cd"), cf_cond, "left")
-
-    o_val = F.col("cd.val")
-    o_kind = F.col("cd.val_kind")
-    row_viol = F.when(
-        o_val.isNotNull()
-        & F.col("cf.cc_datatype").isNotNull()
-        & ((o_kind != "literal") | (F.col("cd.val_dt") != F.col("cf.cc_datatype"))),
-        F.lit("datatype"),
-    ).when(
-        o_val.isNotNull()
-        & F.col("cf.cc_nodeKind").isNotNull()
-        & ~_nodekind_conforms(F.col("cf.cc_nodeKind"), o_kind),
-        F.lit("nodeKind"),
-    )
-    agg = joined.groupBy(
-        "cf.url", "cf.value_node", "cf.node_shape", "cf.child_path", "cf.cc_minCount", "cf.cc_maxCount"
-    ).agg(
-        F.count(o_val).alias("n_vals"),
-        F.array_compact(F.array_distinct(F.collect_list(row_viol))).alias("row_violations"),
-    )
-    card = F.when(
-        F.col("cc_minCount").isNotNull() & (F.col("n_vals") < F.col("cc_minCount")), F.lit("minCount")
-    ).when(
-        F.col("cc_maxCount").isNotNull() & (F.col("n_vals") > F.col("cc_maxCount")), F.lit("maxCount")
-    )
-    out = agg.withColumn(
-        "violations", F.array_compact(F.concat("row_violations", F.array(card)))
-    ).filter(F.size("violations") > 0)
-    return out.select(
+    return verdicts.filter(F.size("violations") > 0).select(
         "url",
         F.col("value_node").alias("subject"),
         F.col("child_path").alias("predicate"),
@@ -890,9 +903,9 @@ def node_logical_violations(fr: ShapeFrames) -> DataFrame:
     ``all_rules``, deactivated members included.
 
     Plan shape: combinator rules and member rules are shape METADATA
-    (small); the only corpus-sized work is one join from focus nodes to
-    their candidate values and three layered aggregates (rule -> member ->
-    combinator), all codegen HashAggregates over ints.
+    (small); the only corpus-sized work is one ``value_hop`` from focus
+    nodes to their candidate values and three layered aggregates (rule ->
+    member -> combinator); the rule layer is the shared ``focus_verdicts``.
     """
     # one row per (shape, target, combinator it sets); sh:not has one member
     members = F.array(
@@ -918,11 +931,11 @@ def node_logical_violations(fr: ShapeFrames) -> DataFrame:
         F.col("url").alias("m_url"),
         F.col("shape_uri").alias("m_uri"),
         F.col("ps_idx").alias("m_ps_idx"),
-        F.col("ps.path").alias("m_path"),
-        F.col("ps.datatype").alias("m_datatype"),
-        F.col("ps.nodeKind").alias("m_nodeKind"),
-        F.col("ps.minCount").cast("int").alias("m_minCount"),
-        F.col("ps.maxCount").cast("int").alias("m_maxCount"),
+        F.col("ps.path").alias("path"),
+        F.col("ps.datatype").alias("c_datatype"),
+        F.col("ps.nodeKind").alias("c_nodeKind"),
+        F.col("ps.minCount").cast("int").alias("c_minCount"),
+        F.col("ps.maxCount").cast("int").alias("c_maxCount"),
     )
 
     focus = focus_nodes(fr, combs).select(
@@ -936,29 +949,8 @@ def node_logical_violations(fr: ShapeFrames) -> DataFrame:
 
     mr_cond = (F.col("fm.member") == F.col("mr.m_uri")) & (F.col("fm.url") == F.col("mr.m_url"))
     # left: members with no executable property constraints conform vacuously
-    with_rules = focus.alias("fm").join(member_rules.alias("mr"), mr_cond, "left")
-
-    v_cond = (
-        (F.col("d.subject") == F.col("fm.focus"))
-        & (F.col("d.predicate") == F.col("mr.m_path"))
-        & (F.col("d.url") == F.col("fm.url"))
-    )
-    with_vals = with_rules.join(fr.values.alias("d"), v_cond, "left")
-
-    o_val = F.col("d.val")
-    o_kind = F.col("d.val_kind")
-    row_bad = (
-        o_val.isNotNull()
-        & (
-            (
-                F.col("mr.m_datatype").isNotNull()
-                & ((o_kind != "literal") | (F.col("d.val_dt") != F.col("mr.m_datatype")))
-            )
-            | (
-                F.col("mr.m_nodeKind").isNotNull()
-                & ~_nodekind_conforms(F.col("mr.m_nodeKind"), o_kind)
-            )
-        )
+    with_rules = focus.alias("fm").join(member_rules.alias("mr"), mr_cond, "left").select(
+        "fm.*", *[F.col(f"mr.{c}") for c in member_rules.columns[2:]]
     )
     # a member rule is EXECUTABLE when it carries at least one enforced
     # field; a member with no executable rules conforms vacuously, which is
@@ -966,34 +958,24 @@ def node_logical_violations(fr: ShapeFrames) -> DataFrame:
     # for sh:not — 'not' over such a member must be SKIPPED, not fired on
     # every focus node (ADVICE r2)
     rule_exec = (
-        F.col("mr.m_datatype").isNotNull()
-        | F.col("mr.m_nodeKind").isNotNull()
-        | F.col("mr.m_minCount").isNotNull()
-        | F.col("mr.m_maxCount").isNotNull()
-    )
-    # layer 1: per (focus, combinator, member, member-rule) -> rule_ok
-    per_rule = with_vals.groupBy(
-        "fm.url", "fm.focus", "fm.shape_uri", "fm.comb", "fm.n_members", "fm.member",
-        "mr.m_ps_idx", "mr.m_minCount", "mr.m_maxCount",
-    ).agg(
-        F.count(o_val).alias("n_vals"),
-        F.max(F.when(row_bad, 1).otherwise(0)).alias("any_row_bad"),
-        F.max(F.when(rule_exec, 1).otherwise(0)).alias("rule_exec"),
-    ).withColumn(
-        "rule_ok",
-        F.when(
-            (F.col("any_row_bad") == 1)
-            | (F.col("m_minCount").isNotNull() & (F.col("n_vals") < F.col("m_minCount")))
-            | (F.col("m_maxCount").isNotNull() & (F.col("n_vals") > F.col("m_maxCount"))),
-            0,
-        ).otherwise(1),
+        F.col("c_datatype").isNotNull()
+        | F.col("c_nodeKind").isNotNull()
+        | F.col("c_minCount").isNotNull()
+        | F.col("c_maxCount").isNotNull()
+    ).cast("int")
+    # layer 1: per (focus, combinator, member, member rule): the rule holds
+    # when it has no violations
+    per_rule = focus_verdicts(
+        value_hop(fr, with_rules.withColumn("rule_exec", rule_exec), "path"),
+        ["url", "focus", "shape_uri", "comb", "n_members", "member", "m_ps_idx", "rule_exec"],
+        value_violation(F.col("c_datatype"), F.col("c_nodeKind")),
     )
     # layer 2: member conforms iff every rule ok (vacuous when no rules);
     # member_exec tracks whether ANY of its rules is executable
     per_member = per_rule.groupBy(
         "url", "focus", "shape_uri", "comb", "n_members", "member"
     ).agg(
-        F.min("rule_ok").alias("member_ok"),
+        F.min(F.when(F.size("violations") == 0, 1).otherwise(0)).alias("member_ok"),
         F.max("rule_exec").alias("member_exec"),
     )
     # layer 3: combinator verdict
@@ -1031,30 +1013,33 @@ def path_constraint_violations(fr: ShapeFrames) -> DataFrame:
     (the reference extracts all seven path types as structured metadata
     only, ShaclPropertyAnalyzer.php:326-437; fixtures path-*-001.ttl).
 
-    Value-node semantics:
+    Value-node semantics, over one focus table for all these rules:
     - inverse ^p : values(f) = { s | (s, p, f) }   — one reversed equi-join
     - sequence (p1..pL) : values(f) = { o | f -p1-> x1 ... -pL-> o } — L
-      chained equi-joins, built per distinct L (the rule table is shape
+      chained ``value_hop``s, built per distinct L (the rule table is shape
       METADATA — tiny and bounded — so collecting the length set is O(1);
       each chain is a static plan, unioned)
     - alternative (p1|..|pk) : union of the members' one-hop value sets,
-      counted per RULE (explode members, left join, shared aggregate)
+      counted per RULE (explode members, one ``value_hop``)
     - zeroOrOne p? : { f } ∪ { o | (f, p, o) } — the focus node itself is
       always a value (so minCount 1 is vacuous, per spec)
     - zeroOrMore p* / oneOrMore p+ : transitive closure via a bounded
       iterative frontier loop (the same driver-loop pattern as
       connected_components and the reference's own ≤10/≤100 iteration
-      caps): each round one equi-join extends the frontier, an anti-join
-      against the reached set guarantees termination on cycles,
-      ``localCheckpoint`` cuts lineage per round (``MAX_CLOSURE_HOPS``
-      bounds depth). Traversal continues through resources; literal
-      objects are values but not traversable, per spec.
+      caps): each round one ``value_hop`` extends the frontier, an
+      anti-join against the reached set guarantees termination on cycles,
+      and the round's new rows are ``persist``-ed so later rounds read
+      them instead of recomputing the chain (``MAX_CLOSURE_HOPS`` bounds
+      depth; the caller's ``released`` block frees them). Traversal
+      continues through resources; literal objects are values but not
+      traversable, per spec.
 
     Executed constraints on the value nodes: sh:datatype, sh:nodeKind,
-    sh:class (one typing join), sh:minCount / sh:maxCount (per focus node,
-    counting zero-value focus nodes via the left side of the final join).
-    Returns one row per (focus, rule) violation with a ``violations`` array,
-    composable with validate_triples like the other focus-level executors.
+    sh:class (``value_violation``), sh:minCount / sh:maxCount (per focus
+    node, counting zero-value focus nodes), in one ``focus_verdicts``
+    aggregate over the value rows of every path type. Returns one row per
+    (focus, rule) violation with a ``violations`` array, composable with
+    validate_triples like the other focus-level executors.
     """
     base_rules = fr.rules.filter(
         F.col("ps.path_type").isin(
@@ -1074,63 +1059,6 @@ def path_constraint_violations(fr: ShapeFrames) -> DataFrame:
         F.col("ps.minCount").cast("int").alias("c_minCount"),
         F.col("ps.maxCount").cast("int").alias("c_maxCount"),
     )
-    data = fr.values
-
-    def value_checks(vals):
-        """vals: focus rows left-joined with their value nodes (value struct
-        columns v_value/v_kind/v_dt nullable for zero-value focus nodes)."""
-        vt = fr.typed.select(
-            F.col("url").alias("vt_url"),
-            F.col("subject").alias("vt_subject"),
-            F.col("cls").alias("vt_cls"),
-        )
-        t_cond = (F.col("v_value") == F.col("vt_subject")) & (
-            F.col("c_class") == F.col("vt_cls")
-        )
-        t_cond = t_cond & (F.col("url") == F.col("vt_url"))
-        with_types = vals.join(vt, t_cond, "left")
-        row_viol = F.when(
-            F.col("v_value").isNotNull()
-            & F.col("c_datatype").isNotNull()
-            & ((F.col("v_kind") != "literal") | (F.col("v_dt") != F.col("c_datatype"))),
-            F.lit("datatype"),
-        ).when(
-            F.col("v_value").isNotNull()
-            & F.col("c_nodeKind").isNotNull()
-            & ~_nodekind_conforms(F.col("c_nodeKind"), F.col("v_kind")),
-            F.lit("nodeKind"),
-        ).when(
-            F.col("v_value").isNotNull()
-            & F.col("c_class").isNotNull()
-            & F.col("vt_cls").isNull(),
-            F.lit("class"),
-        )
-        agg = with_types.groupBy(
-            "url", "focus", "shape_uri", "ps_idx", "target_class", "path_type",
-            "c_minCount", "c_maxCount",
-        ).agg(
-            F.count("v_value").alias("n_vals"),
-            F.array_compact(F.array_distinct(F.collect_list(row_viol))).alias("row_violations"),
-        )
-        card = F.when(
-            F.col("c_minCount").isNotNull() & (F.col("n_vals") < F.col("c_minCount")),
-            F.lit("minCount"),
-        ).when(
-            F.col("c_maxCount").isNotNull() & (F.col("n_vals") > F.col("c_maxCount")),
-            F.lit("maxCount"),
-        )
-        return (
-            agg.withColumn("violations", F.array_compact(F.concat("row_violations", F.array(card))))
-            .filter(F.size("violations") > 0)
-            .select(
-                "url",
-                F.col("focus").alias("subject"),
-                "shape_uri",
-                "ps_idx",
-                "path_type",
-                "violations",
-            )
-        )
 
     # ONE driver-side probe of the tiny rule-metadata table, persisted so
     # the shape-extraction plan executes once — not once per branch probe
@@ -1143,179 +1071,110 @@ def path_constraint_violations(fr: ShapeFrames) -> DataFrame:
     base_rules = persist(base_rules)
     meta = base_rules.select("path_type", F.size("paths").alias("L")).distinct().collect()
     types_present = {r["path_type"] for r in meta}
+    focus = focus_nodes(fr, base_rules)
 
-    outs = []
+    def of_type(*path_types):
+        return focus.filter(F.col("path_type").isin(*path_types))
+
+    def at_focus(rows):
+        """zero hops: the focus node itself is the value (a resource)."""
+        return rows.select(
+            "*",
+            F.col("focus").alias("val"),
+            _resource_kind(F.col("focus")).alias("val_kind"),
+            F.lit(None).cast("string").alias("val_dt"),
+        )
+
+    parts = []
 
     # ---- inverse: value nodes are SUBJECTS pointing at the focus ----------
     if "inverse" in types_present:
-        inv_focus = focus_nodes(fr, base_rules.filter(F.col("path_type") == "inverse"))
-        iv_cond = (F.col("d.val") == F.col("fo.focus")) & (
-            F.col("d.predicate") == F.col("fo.path")
-        ) & F.col("d.val_kind").isin("iri", "bnode")
-        iv_cond = iv_cond & (F.col("d.url") == F.col("fo.url"))
-        inv_vals = inv_focus.alias("fo").join(data.alias("d"), iv_cond, "left").select(
-            "fo.*",
-            F.col("d.subject").alias("v_value"),
-            # subjects are resources (iri OR bnode — '_:'-prefixed labels);
-            # literal-only constraints can't hold on them
-            _resource_kind(F.col("d.subject")).alias("v_kind"),
-            F.lit(None).cast("string").alias("v_dt"),
+        iv_cond = (
+            (F.col("d.val") == F.col("fo.focus"))
+            & (F.col("d.predicate") == F.col("fo.path"))
+            & F.col("d.val_kind").isin("iri", "bnode")
+            & (F.col("d.url") == F.col("fo.url"))
         )
-        outs.append(value_checks(inv_vals))
+        parts.append(
+            of_type("inverse").alias("fo").join(fr.values.alias("d"), iv_cond, "left").select(
+                "fo.*",
+                F.col("d.subject").alias("val"),
+                # subjects are resources (iri OR bnode — '_:'-prefixed
+                # labels); literal-only constraints can't hold on them
+                _resource_kind(F.col("d.subject")).alias("val_kind"),
+                F.lit(None).cast("string").alias("val_dt"),
+            )
+        )
 
     # ---- alternative: union of one-hop value sets over the member paths ---
     # (W3C §2.3.1: values are reachable through ANY member; counts are per
-    # RULE, so the per-member left joins aggregate together in value_checks)
+    # RULE, so the per-member hops aggregate together)
     if "alternative" in types_present:
-        alt_focus = focus_nodes(
-            fr, base_rules.filter((F.col("path_type") == "alternative") & F.col("paths").isNotNull())
-        )
-        alt_m = alt_focus.select("*", F.explode("paths").alias("member")).alias("fo")
-        am_cond = (F.col("d.subject") == F.col("fo.focus")) & (
-            F.col("d.predicate") == F.col("fo.member")
-        )
-        am_cond = am_cond & (F.col("d.url") == F.col("fo.url"))
-        alt_vals = alt_m.join(data.alias("d"), am_cond, "left").select(
-            "fo.*",
-            F.col("d.val").alias("v_value"),
-            F.col("d.val_kind").alias("v_kind"),
-            F.col("d.val_dt").alias("v_dt"),
-        ).drop("member")
-        outs.append(value_checks(alt_vals))
+        members = of_type("alternative").withColumn("member", F.explode("paths"))
+        parts.append(value_hop(fr, members, "member").drop("member"))
 
     # ---- zeroOrOne: the focus node itself (zero hops) UNION one hop -------
     if "zeroOrOne" in types_present:
-        zo_focus = focus_nodes(
-            fr, base_rules.filter((F.col("path_type") == "zeroOrOne") & F.col("path").isNotNull())
-        )
-        zo_cond = (F.col("d.subject") == F.col("fo.focus")) & (
-            F.col("d.predicate") == F.col("fo.path")
-        )
-        zo_cond = zo_cond & (F.col("d.url") == F.col("fo.url"))
-        zo_hop = zo_focus.alias("fo").join(data.alias("d"), zo_cond, "inner").select(
-            "fo.*",
-            F.col("d.val").alias("v_value"),
-            F.col("d.val_kind").alias("v_kind"),
-            F.col("d.val_dt").alias("v_dt"),
-        )
-        zo_zero = zo_focus.select(
-            "*",
-            F.col("focus").alias("v_value"),
-            # focus nodes are resources (iri or '_:'-prefixed bnode)
-            _resource_kind(F.col("focus")).alias("v_kind"),
-            F.lit(None).cast("string").alias("v_dt"),
-        )
-        outs.append(value_checks(zo_hop.unionByName(zo_zero)))
+        zo_focus = of_type("zeroOrOne").filter(F.col("path").isNotNull())
+        parts += [value_hop(fr, zo_focus, "path"), at_focus(zo_focus)]
 
     # ---- zeroOrMore / oneOrMore: bounded transitive-closure frontier loop -
-    tc_rules = base_rules.filter(
-        F.col("path_type").isin("zeroOrMore", "oneOrMore") & F.col("path").isNotNull()
-    )
     if types_present & {"zeroOrMore", "oneOrMore"}:  # branch on collected metadata, no extra job
-        tc_focus = focus_nodes(fr, tc_rules)
-        group_keys = [
-            "url", "focus", "shape_uri", "ps_idx", "target_class", "path_type", "path",
-            "c_datatype", "c_class", "c_nodeKind", "c_minCount", "c_maxCount",
-        ]
+        tc_focus = of_type("zeroOrMore", "oneOrMore").filter(F.col("path").isNotNull())
         # rule identity for equi-joins: ONLY the non-null columns — the c_*
         # constraint columns are nullable and NULL join keys never match
         # (which would both break the cycle-guard anti-join and orphan
         # zero-value focus nodes); they are functionally determined by this
         # subset anyway
-        rule_keys = ["url", "focus", "shape_uri", "ps_idx", "target_class", "path_type", "path"]
+        rule_keys = ["url", "focus", "shape_uri", "ps_idx", "path_type", "path"]
         # persist (not localCheckpoint) as the per-round materialization
         # barrier: these plans are fully deterministic (no id-assignment
         # exprs), so cache-matching is sound — and localCheckpoint trips a
         # Spark attribute-rewrite bug on this mapInPandas+aliased-join plan
         # shape ("key not found" in AttributeMap during checkpoint planning)
-        seed = persist(
-            tc_focus.select(
-                *group_keys,
-                F.col("focus").alias("v_value"),
-                _resource_kind(F.col("focus")).alias("v_kind"),
-                F.lit(None).cast("string").alias("v_dt"),
-            ).distinct()
-        )
+        seed = persist(at_focus(tc_focus))
         reached = seed  # depth-0 nodes (the focus itself)
         plus = None  # depth >= 1 values (the oneOrMore set)
         frontier = seed
         for _hop in range(MAX_CLOSURE_HOPS):
-            h_cond = (F.col("d.subject") == F.col("fr.v_value")) & (
-                F.col("d.predicate") == F.col("fr.path")
-            ) & F.col("fr.v_kind").isin("iri", "bnode")
-            h_cond = h_cond & (F.col("d.url") == F.col("fr.url"))
             nxt = persist(
-                frontier.alias("fr")
-                .join(data.alias("d"), h_cond, "inner")
-                .select(
-                    *[F.col(f"fr.{c}") for c in group_keys],
-                    F.col("d.val").alias("v_value"),
-                    F.col("d.val_kind").alias("v_kind"),
-                    F.col("d.val_dt").alias("v_dt"),
-                )
+                value_hop(fr, frontier, "path", src="val")
+                .filter(F.col("val").isNotNull())
                 .distinct()
                 # cycle guard: only genuinely new (rule, focus, value) rows
-                .join(
-                    reached.select(*rule_keys, "v_value"),
-                    rule_keys + ["v_value"],
-                    "left_anti",
-                )
+                .join(reached.select(*rule_keys, "val"), rule_keys + ["val"], "left_anti")
             )
             if nxt.limit(1).count() == 0:
                 break
             reached = persist(reached.unionByName(nxt))
             plus = nxt if plus is None else plus.unionByName(nxt)
             frontier = nxt
-        star_vals = reached.filter(F.col("path_type") == "zeroOrMore")
-        outs.append(value_checks(star_vals))
-        if plus is not None:
-            plus_vals = plus.filter(F.col("path_type") == "oneOrMore")
-        else:
-            plus_vals = seed.filter(F.lit(False))
+        parts.append(reached.filter(F.col("path_type") == "zeroOrMore"))
         # oneOrMore focus nodes with ZERO reachable values must still appear
         # (minCount): left-join the focus set against its values
-        plus_focus = tc_focus.filter(F.col("path_type") == "oneOrMore").select(*group_keys).distinct()
-        plus_all = plus_focus.join(
-            plus_vals.select(*rule_keys, "v_value", "v_kind", "v_dt"), rule_keys, "left"
+        plus_vals = seed.filter(F.lit(False)) if plus is None else plus
+        parts.append(
+            tc_focus.filter(F.col("path_type") == "oneOrMore").join(
+                plus_vals.select(*rule_keys, *VALUE_COLUMNS), rule_keys, "left"
+            )
         )
-        outs.append(value_checks(plus_all))
 
-    # ---- sequence: one static join chain per distinct path length ---------
-    seq_rules = base_rules.filter(
-        (F.col("path_type") == "sequence") & F.col("paths").isNotNull()
-    )
+    # ---- sequence: one static hop chain per distinct path length ----------
     lengths = sorted(
         {r["L"] for r in meta if r["path_type"] == "sequence" and r["L"] is not None and r["L"] > 0}
     )
     for L in lengths:
-        fo = focus_nodes(fr, seq_rules.filter(F.size("paths") == L)).alias("fo")
-        cur = fo
+        cur = of_type("sequence").filter(F.size("paths") == L)
         for i in range(L):
-            # hop source: the focus node for hop 0, else the previous hop's
-            # object — which must be a RESOURCE to be traversable
-            prev = (
-                F.col("fo.focus")
-                if i == 0
-                else F.when(
-                    F.col(f"d{i - 1}.val_kind").isin("iri", "bnode"), F.col(f"d{i - 1}.val")
-                )
-            )
-            cond = (F.col(f"d{i}.subject") == prev) & (
-                F.col(f"d{i}.predicate") == F.col("fo.paths")[i]
-            )
-            cond = cond & (F.col(f"d{i}.url") == F.col("fo.url"))
-            # every hop is LEFT so zero-value focus nodes survive for minCount
-            cur = cur.join(data.alias(f"d{i}"), cond, "left")
-        last = f"d{L - 1}"
-        seq_vals = cur.select(
-            *[F.col(f"fo.{c}") for c in fo.columns],
-            F.col(f"{last}.val").alias("v_value"),
-            F.col(f"{last}.val_kind").alias("v_kind"),
-            F.col(f"{last}.val_dt").alias("v_dt"),
-        )
-        outs.append(value_checks(seq_vals))
+            # hop 0 starts at the focus node, every later hop at the previous
+            # hop's value; every hop is LEFT so zero-value focus nodes
+            # survive for minCount
+            cur = value_hop(
+                fr, cur.withColumn("step", F.col("paths")[i]), "step", "focus" if i == 0 else "val"
+            ).drop("step")
+        parts.append(cur)
 
-    if not outs:
+    if not parts:
         # no non-predicate path rules anywhere in the shape catalog: return
         # a schema-stable empty report (the common web-corpus case — the
         # whole function then contributes nothing to the reports plan)
@@ -1334,10 +1193,18 @@ def path_constraint_violations(fr: ShapeFrames) -> DataFrame:
                 ]
             ),
         )
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+
+    rows = parts[0]
+    for p in parts[1:]:
+        rows = rows.unionByName(p)
+    verdicts = focus_verdicts(
+        with_value_classes(fr, rows),
+        ["url", "focus", "shape_uri", "ps_idx", "path_type"],
+        value_violation(F.col("c_datatype"), F.col("c_nodeKind"), F.col("c_class")),
+    )
+    return verdicts.filter(F.size("violations") > 0).select(
+        "url", F.col("focus").alias("subject"), "shape_uri", "ps_idx", "path_type", "violations"
+    )
 
 
 def split_validated(validated: DataFrame) -> tuple[DataFrame, DataFrame]:

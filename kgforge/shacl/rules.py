@@ -33,9 +33,12 @@ triple.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
+
+log = logging.getLogger(__name__)
 
 SH = "http://www.w3.org/ns/shacl#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -384,13 +387,14 @@ def delta_rules(
     If ``rules`` contains a SPARQLRule the dependency analysis above does
     not apply (a CONSTRUCT body can read any triple); the function falls
     back to a full ``apply_rules`` recomputation — correct, just not
-    incremental — and says so in one driver-log line rather than silently.
+    incremental — and says so in one INFO record of this module's logger
+    rather than silently.
 
     Exactness contract (pytest-pinned): output set-equals
     ``apply_rules(asserted_after, rules)``.
     """
     if any(isinstance(r, SparqlRule) for r in rules):
-        print("delta_rules: SPARQLRule present -> full recomputation fallback")
+        log.info("delta_rules: SPARQLRule present -> full recomputation fallback")
         return apply_rules(asserted_after, rules, max_iterations=max_iterations)
 
     relevant = _rule_relevant_classes(rules)

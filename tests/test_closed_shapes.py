@@ -79,3 +79,22 @@ def test_closed_shape_violations(spark):
     )
     pages_ok = _page(spark, ttl_ok)
     assert closed_shape_violations(*split_parsed(parse_combined(pages_ok))).count() == 0
+
+
+def test_closed_shape_with_two_target_classes_rejects_once(spark):
+    """A focus node typed with both target classes of a closed shape is one
+    focus node: ``verdicts`` rejects its ex:age triple once, and accepted
+    and rejected still partition the triples."""
+    from kgforge.persist import released
+    from kgforge.pipeline.run import verdicts
+
+    ttl = TTL.replace("sh:targetClass ex:Person", "sh:targetClass ex:Person , ex:Agent").replace(
+        "ex:alice a ex:Person", "ex:alice a ex:Person , ex:Agent"
+    )
+    triples, shapes = split_parsed(parse_combined(_page(spark, ttl)))
+    with released():
+        accepted, rejected = verdicts(triples, shapes)
+        age = F.col("predicate") == "http://example.org/age"
+        assert rejected.filter(age).count() == 1
+        assert accepted.filter(age).count() == 0
+        assert accepted.count() + rejected.count() == triples.filter("status = 'ok'").count()

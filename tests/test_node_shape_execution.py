@@ -35,10 +35,10 @@ ex:carol a ex:Person ; ex:address ex:intStreet .
 """
 
 
-def test_node_shape_execution(spark):
+def _violations(spark, ttl):
     html = (
         "<html><head><title>t</title></head><body>"
-        f'<script type="text/turtle">\n{TTL}\n</script>'
+        f'<script type="text/turtle">\n{ttl}\n</script>'
         "</body></html>"
     ).encode()
     pages = spark.createDataFrame(
@@ -47,10 +47,41 @@ def test_node_shape_execution(spark):
         PAGES_SCHEMA,
     )
     triples, shapes = split_parsed(parse_combined(pages))
+    viol = node_shape_violations(shape_frames(triples, shapes)).collect()
+    return [(r["subject"].rsplit("/", 1)[-1], sorted(r["violations"])) for r in viol]
 
-    viol = node_shape_violations(shape_frames(triples, shapes))
-    got = {r["subject"].rsplit("/", 1)[-1]: sorted(r["violations"]) for r in viol.collect()}
+
+def test_node_shape_execution(spark):
+    got = dict(_violations(spark, TTL))
     assert got == {
         "noStreet": ["minCount"],   # no ex:street at all
         "intStreet": ["datatype"],  # ex:street is an integer literal
     }
+
+
+SHARED_TTL = """\
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://example.org/> .
+
+ex:AddressShape a sh:NodeShape ; sh:property [ sh:path ex:street ; sh:maxCount 1 ] .
+
+ex:PersonShape
+    a sh:NodeShape ;
+    sh:targetClass ex:Person ;
+    sh:property [ sh:path ex:address ; sh:node ex:AddressShape ] ;
+    sh:property [ sh:path ex:home ; sh:node ex:AddressShape ] .
+
+ex:shared ex:street "Main St 1" .
+ex:twoStreets ex:street "A" , "B" .
+
+ex:alice a ex:Person ; ex:address ex:shared ; ex:home ex:shared .
+ex:bob a ex:Person ; ex:address ex:shared .
+ex:carol a ex:Person ; ex:address ex:twoStreets .
+"""
+
+
+def test_value_node_reached_twice_is_checked_once(spark):
+    """A value node reached from two focus nodes, or over two parent
+    property shapes, is one focus node of the referenced shape: its one
+    ex:street meets sh:maxCount 1, and ex:twoStreets is reported once."""
+    assert _violations(spark, SHARED_TTL) == [("twoStreets", ["maxCount"])]

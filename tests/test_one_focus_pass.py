@@ -1,4 +1,5 @@
-"""Guard: the constraint executors share one derivation of their inputs.
+"""Guard: the constraint executors share one derivation of their inputs
+and one value-node verdict.
 
 ``operators.validate.shape_frames`` is the one place that builds the
 typed-subject table (``_typed_subjects``) and explodes ``property_shapes``
@@ -6,6 +7,10 @@ into the rule table; every executor in ``operators/validate.py`` and
 ``operators/sparql.py`` reads those frames. A second derivation is how the
 executors drifted apart before (four different ``sh:deactivated``
 policies), so adding one should be a deliberate change to this test.
+
+Likewise ``value_violation`` is the one datatype / nodeKind / class test of
+a value node for the focus-level executors; only the row-local
+``validate_triples`` tests sh:nodeKind on its own.
 """
 
 from __future__ import annotations
@@ -50,6 +55,13 @@ def _sites(match) -> set[tuple[str, str]]:
 
 def test_typed_subjects_built_once():
     assert _sites(lambda c: _called(c) == "_typed_subjects") == SHARED
+
+
+def test_nodekind_tested_by_one_verdict():
+    assert _sites(lambda c: _called(c) == "_nodekind_conforms") == {
+        (os.path.join("kgforge", "operators", "validate.py"), "validate_triples"),
+        (os.path.join("kgforge", "operators", "validate.py"), "value_violation"),
+    }
 
 
 def test_property_shapes_exploded_once():

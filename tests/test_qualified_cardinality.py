@@ -337,3 +337,41 @@ ex:c2 a ex:C .
     assert [(r["subject"], r["violations"]) for r in rows] == [
         ("http://example.org/a", ["qualifiedMaxCount"])
     ]
+
+
+TWO_TARGETS = PREFIXES + """
+ex:S a sh:NodeShape ; sh:targetClass ex:A , ex:B ;
+    sh:property [ sh:path ex:addr ; sh:qualifiedValueShape [ sh:class ex:Home ] ;
+                  sh:qualifiedMaxCount 1 ] ;
+    sh:property [ sh:path ex:addr ; sh:node ex:Addr ] ;
+    sh:property [ sh:path [ sh:inversePath ex:boss ] ; sh:maxCount 1 ] .
+ex:Addr a sh:NodeShape ; sh:property [ sh:path ex:street ; sh:maxCount 1 ] .
+ex:T a sh:NodeShape ; sh:targetClass ex:A , ex:B ; sh:and ( ex:M ) .
+ex:M a sh:NodeShape ; sh:property [ sh:path ex:name ; sh:maxCount 1 ] .
+ex:s a ex:A , ex:B ; ex:addr ex:h ; ex:name "s" .
+ex:h a ex:Home ; ex:street "Main" .
+ex:x ex:boss ex:s .
+ex:y ex:boss ex:s .
+"""
+
+
+def test_two_target_classes_count_once(spark):
+    """A focus node typed with two target classes of one shape is one focus
+    node: its values are counted once per rule, so the qualified maximum,
+    the sh:node child's maxCount and the node-level sh:and hold, and the
+    two ex:boss subjects give one path maxCount row, exactly as when the
+    shapes target ex:A alone."""
+    reports = {}
+    for name, ttl in {
+        "two_targets": TWO_TARGETS,
+        "one_target": TWO_TARGETS.replace("sh:targetClass ex:A , ex:B", "sh:targetClass ex:A"),
+    }.items():
+        triples, shapes = split_parsed(parse_combined(_pages(spark, ttl)))
+        reports[name] = sorted(
+            (r["subject"], r["source"], r["shape_uri"], tuple(r["violations"]))
+            for r in constraint_reports(triples, shapes).collect()
+        )
+    assert reports["one_target"] == [
+        ("http://example.org/s", "path", "http://example.org/S", ("maxCount",))
+    ]
+    assert reports["two_targets"] == reports["one_target"]

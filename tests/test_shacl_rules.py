@@ -366,17 +366,46 @@ def test_dred_object_this_rule(spark):
     assert _spo_set(got) == {(EX + "index", EX + "lists", EX + "r2", "iri")}
 
 
-def test_dred_sparqlrule_fallback(spark, capsys):
-    from kgforge.shacl.rules import SparqlRule, retract_rules
+KNOWN_BY = SparqlRule(
+    [], "CONSTRUCT { ?o <http://example.org/knownBy> ?s } WHERE { ?s <http://example.org/knows> ?o }"
+)
 
-    rules = [
-        SparqlRule([], "CONSTRUCT { ?o <http://example.org/knownBy> ?s } WHERE { ?s <http://example.org/knows> ?o }")
-    ]
+
+def _fallback_logged(caplog) -> bool:
+    return any(
+        r.name == "kgforge.shacl.rules" and r.levelname == "INFO" and "fallback" in r.getMessage()
+        for r in caplog.records
+    )
+
+
+def test_dred_sparqlrule_fallback(spark, caplog):
+    from kgforge.shacl.rules import retract_rules
+
+    caplog.set_level("INFO", logger="kgforge.shacl.rules")
     after = _corpus(spark)
-    got = retract_rules(after, rules, after.limit(0), after.limit(0))
-    want = apply_rules(after, rules)
+    got = retract_rules(after, [KNOWN_BY], after.limit(0), after.limit(0))
+    want = apply_rules(after, [KNOWN_BY])
     assert _spo_set(got) == _spo_set(want)
-    assert "fallback" in capsys.readouterr().out
+    assert _fallback_logged(caplog)
+
+
+def test_delta_rules_sparqlrule_fallback_is_logged(spark, caplog):
+    """With a SPARQLRule, delta_rules recomputes in full: it logs one INFO
+    record saying so, and its output set-equals apply_rules over the graph
+    after the change."""
+    from kgforge.shacl.rules import delta_rules
+
+    caplog.set_level("INFO", logger="kgforge.shacl.rules")
+    before = _corpus(spark)
+    added = spark.createDataFrame(
+        [(EX + "bob", EX + "knows", _obj(EX + "carol"))], before.schema
+    )
+    after = before.unionByName(added)
+    rules = [KNOWN_BY]
+    got = delta_rules(after, rules, apply_rules(before, rules), added=added, removed=added.limit(0))
+    assert _fallback_logged(caplog)
+    assert _spo_set(got) == _spo_set(apply_rules(after, rules))
+    assert (EX + "carol", EX + "knownBy", EX + "bob", "iri") in _spo_set(got)
 
 
 def test_delta_rules_addition_and_rename(spark):

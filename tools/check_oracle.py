@@ -28,6 +28,21 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
+def columns_match(a: pd.Series, b: pd.Series) -> bool:
+    """Do two normalized columns agree cell for cell? Numbers must be within
+    1e-9 and carry the same sign bit, so -0.0 and 0.0 differ as they do in a
+    hash of the values (NaN matches NaN whatever its sign); other cells
+    compare by their string form."""
+    if np.issubdtype(a.dtype, np.number) and np.issubdtype(b.dtype, np.number):
+        av, bv = a.astype(float).to_numpy(), b.astype(float).to_numpy()
+        both_nan = np.isnan(av) & np.isnan(bv)
+        return bool(
+            np.allclose(av, bv, rtol=0, atol=1e-9, equal_nan=True)
+            and ((np.signbit(av) == np.signbit(bv)) | both_nan).all()
+        )
+    return bool((a.astype(str) == b.astype(str)).all())
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -72,15 +87,7 @@ def main():
             failures.append(name)
             print(f"FAIL  {name}: columns {list(a.columns)} vs {list(b.columns)}")
             continue
-        diff_cols = []
-        for c in a.columns:
-            av, bv = a[c], b[c]
-            if np.issubdtype(av.dtype, np.number) and np.issubdtype(bv.dtype, np.number):
-                ok = np.allclose(av.astype(float), bv.astype(float), rtol=0, atol=1e-9, equal_nan=True)
-            else:
-                ok = (av.astype(str) == bv.astype(str)).all()
-            if not ok:
-                diff_cols.append(c)
+        diff_cols = [c for c in a.columns if not columns_match(a[c], b[c])]
         if diff_cols:
             failures.append(name)
             print(f"FAIL  {name}: value mismatch in {diff_cols}")
