@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..persist import persist
+
 OWL_SAME_AS = "http://www.w3.org/2002/07/owl#sameAs"
 
 
@@ -221,11 +223,19 @@ def lsh_candidate_pairs(
 
 
 def _ngram_set(col, n: int = 3):
+    """Distinct character n-grams of the whitespace-collapsed, lowercased
+    text, in order of first occurrence; a text shorter than n (the empty
+    text included) is one gram, a NULL text the one gram NULL.
+
+    The normalized text is computed once per row, and one regex pass emits
+    every n-gram: the lookahead captures the n code points at each position
+    and the trailing ``.`` consumes one code point (a surrogate pair whole),
+    so the pass is linear in the text. Keep the normalization out of any
+    per-window lambda: Spark evaluates a captured expression once per
+    window, which makes the kernel quadratic in the text."""
     lowered = F.lower(F.regexp_replace(col, r"\s+", " "))
-    cnt = F.greatest(F.length(lowered) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), cnt), lambda i: lowered.substr(i, F.lit(n)))
-    )
+    grams = F.regexp_extract_all(lowered, F.lit(f"(?s)(?=(.{{{n}}}))."), F.lit(1))
+    return F.array_distinct(F.when(F.size(grams) > 0, grams).otherwise(F.array(lowered)))
 
 
 def _hashed_ngram_set(col, n: int = 3):
@@ -242,13 +252,20 @@ def _token_shingle_set(col, n: int = 4):
     detection (Lee et al. dedup; Broder shingling): character n-grams are
     DEGENERATE for asymmetric containment — any short text's char-trigram
     set is near-certainly a subset of a long text's, because both draw
-    from the same small trigram vocabulary of the language."""
+    from the same small trigram vocabulary of the language.
+
+    The token array is split once per row and bound to the outer lambda's
+    variable; the per-window lambda only slices it (linear in the tokens)."""
     toks = F.split(F.lower(F.trim(col)), r"\s+")
-    cnt = F.greatest(F.size(toks) - (n - 1), F.lit(1))
     return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), cnt),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        F.flatten(
+            F.transform(
+                F.array(toks),
+                lambda t: F.transform(
+                    F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1))),
+                    lambda i: F.array_join(F.slice(t, i, n), " "),
+                ),
+            )
         )
     )
 
@@ -272,8 +289,9 @@ def verified_similar_pairs(
     cands = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=num_hashes // bands)
     # candidate-pruned gram sets (same reasoning as minhash_duplicate_pairs:
     # verify cost must scale with |candidates|, not |corpus|); cands is
-    # referenced 3x below — persist so banding runs once
-    cands = cands.persist()
+    # referenced 3x below — persist so banding runs once (both persisted
+    # tables are released by the caller's ``released()`` block)
+    cands = persist(cands)
     cand_ids = (
         cands.select(F.col("a").alias("cid"))
         .union(cands.select(F.col("b").alias("cid")))
@@ -283,9 +301,9 @@ def verified_similar_pairs(
     # persisted: the verify join reads it through TWO aliases, and each
     # unpersisted alias re-runs the semi-join + gram expression over the
     # candidate texts (same measured 2x as dedup.minhash_duplicate_pairs)
-    texts = pruned.select(
+    texts = persist(pruned.select(
         F.col(id_col).alias("id"), _hashed_ngram_set(F.col(text_col)).alias("grams")
-    ).persist()
+    ))
     a = texts.alias("ta")
     b = texts.alias("tb")
     joined = (
@@ -340,7 +358,9 @@ def connected_components(
     # strings per row — bounded MBs) and a union-find with path compression
     # produces the identical (node, component=min-uri-member) output in
     # microseconds; bigger graphs keep the distributed loop untouched
-    # (tests force it with driver_cap=0).
+    # (tests force it with driver_cap=0). The mapping goes back to the JVM
+    # as Arrow record batches: a list of Row tuples would be pickled and
+    # converted by a Python-worker job.
     if n_edges_in <= driver_cap:
         rows = edges.select("src", "dst").collect()
         edges.unpersist()
@@ -364,8 +384,13 @@ def connected_components(
         for r in rows:
             for x in (r["src"], r["dst"]):
                 members[x] = find(x)
-        out_rows = sorted(members.items())
-        return spark.createDataFrame(out_rows, "node string, component string")
+        import pyarrow as pa
+
+        nodes = sorted(members)
+        return spark.createDataFrame(
+            pa.table({"node": nodes, "component": [members[x] for x in nodes]}),
+            "node string, component string",
+        )
     # floor of 8, NOT defaultParallelism: each CC iteration is ~8 serial
     # shuffle stages, so a 50k-edge graph on 32 partitions pays 32-task
     # scheduling latency per stage for ~1.5k rows/task; 8 partitions keeps

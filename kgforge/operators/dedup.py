@@ -78,7 +78,8 @@ def minhash_duplicate_pairs(
     The persisted tables are released by the caller's ``released()`` block
     (kgforge.persist) once the returned pairs are consumed.
     """
-    docs = rebalance(docs)
+    # the signature table is rebalanced and carries the text, so the
+    # candidate gram sets below read it too: one rebalance per call
     sigs = minhash_signatures(docs, id_col, text_col, num_hashes=num_hashes)
     if sig_prefilter:
         sigs = persist(sigs)
@@ -119,15 +120,13 @@ def minhash_duplicate_pairs(
         .union(cands.select(F.col("b").alias("cid")))
         .distinct()
     )
-    cand_docs = docs.join(cand_ids, F.col(id_col) == F.col("cid"), "left_semi")
+    cand_docs = sigs.join(cand_ids, F.col("id") == F.col("cid"), "left_semi")
     # persisted because the verify join consumes it TWICE (a-side and
     # b-side aliases): unpersisted, each alias re-runs the semi-join AND
     # the gram expression over the candidate docs' full text — measured
     # 16.2 s -> 6.9 s for the verify stage at 19k pages / 11k candidates
     # (at cluster scale, write the gram table to a stage table instead)
-    grams = persist(cand_docs.select(
-        F.col(id_col).alias("id"), _hashed_ngram_set(F.col(text_col), 3).alias("grams")
-    ))
+    grams = persist(cand_docs.select("id", _hashed_ngram_set(F.col("text"), 3).alias("grams")))
     return (
         cands.join(grams.alias("ga"), cands.a == F.col("ga.id"))
         .join(grams.alias("gb"), cands.b == F.col("gb.id"))
@@ -335,14 +334,13 @@ def jaccard_similarity_join(
     # persisted: the gram table feeds FOUR lineages (the rank-dict agg,
     # the prefix build, and BOTH verify join sides) — unpersisted, each
     # re-runs the hashed-gram expression over the full corpus text (at
-    # cluster scale, write it to a stage table instead)
-    grams = (
-        rebalance(docs)
-        .select(
+    # cluster scale, write it to a stage table instead); released by the
+    # caller's ``released()`` block once the returned pairs are consumed
+    grams = persist(
+        rebalance(docs).select(
             F.col(id_col).alias("id"),
             _hashed_ngram_set(F.col(text_col), n).alias("grams"),
         )
-        .persist()
     )
     bc = _collect_gram_rank(grams, gram_rank_cap)
 

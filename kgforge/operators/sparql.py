@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..rdf.terms import RDF_TYPE
+from .util import empty_frame
 from .validate import ShapeFrames, focus_nodes
 
 # bound on the distinct constraint query texts compiled per call; the tail
@@ -362,8 +363,8 @@ def sparql_constraint_violations(fr: ShapeFrames, strict: bool = False) -> DataF
     if not outs:
         from pyspark.sql import types as T
 
-        return fr.data.sparkSession.createDataFrame(
-            [],
+        return empty_frame(
+            fr.data.sparkSession,
             T.StructType(
                 [
                     T.StructField("url", T.StringType()),

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def rebalance(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -21,3 +23,14 @@ def rebalance(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A typed, empty DataFrame of ``schema`` (nullable fields) planned in
+    the JVM: a zero-row limit over a one-row range, which the optimizer
+    folds to an empty local relation, so a union with it runs no task.
+    ``createDataFrame([], schema)`` instead converts the empty list in a
+    Python-worker job."""
+    return spark.range(1).limit(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )

@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 
 from ..persist import persist
 from ..rdf.terms import RDF_TYPE, SH
+from .util import empty_frame
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
@@ -899,8 +900,11 @@ def node_logical_violations(fr: ShapeFrames) -> DataFrame:
     min-maxCount — the same executable subset as ``node_shape_violations``);
     a member with no such constraints conforms vacuously. Then per focus:
     and = all members conform, or = at least one, xone = exactly one,
-    not = the member must NOT conform. Member rules are looked up in
-    ``all_rules``, deactivated members included.
+    not = the member must NOT conform. Members are the combinator's list
+    ENTRIES, indexed by list position: a shape listed twice is two members,
+    so ``sh:and ( ex:M ex:M )`` holds when ex:M does, and ``sh:xone
+    ( ex:M ex:M )`` never holds (a conforming ex:M counts twice). Member
+    rules are looked up in ``all_rules``, deactivated members included.
 
     Plan shape: combinator rules and member rules are shape METADATA
     (small); the only corpus-sized work is one ``value_hop`` from focus
@@ -944,7 +948,7 @@ def node_logical_violations(fr: ShapeFrames) -> DataFrame:
         "shape_uri",
         "comb",
         F.size("members").alias("n_members"),
-        F.explode("members").alias("member"),
+        F.posexplode("members").alias("m_pos", "member"),
     )
 
     mr_cond = (F.col("fm.member") == F.col("mr.m_uri")) & (F.col("fm.url") == F.col("mr.m_url"))
@@ -963,17 +967,18 @@ def node_logical_violations(fr: ShapeFrames) -> DataFrame:
         | F.col("c_minCount").isNotNull()
         | F.col("c_maxCount").isNotNull()
     ).cast("int")
-    # layer 1: per (focus, combinator, member, member rule): the rule holds
-    # when it has no violations
+    # layer 1: per (focus, combinator, member entry, member rule): the rule
+    # holds when it has no violations
     per_rule = focus_verdicts(
         value_hop(fr, with_rules.withColumn("rule_exec", rule_exec), "path"),
-        ["url", "focus", "shape_uri", "comb", "n_members", "member", "m_ps_idx", "rule_exec"],
+        ["url", "focus", "shape_uri", "comb", "n_members", "m_pos", "member", "m_ps_idx",
+         "rule_exec"],
         value_violation(F.col("c_datatype"), F.col("c_nodeKind")),
     )
     # layer 2: member conforms iff every rule ok (vacuous when no rules);
     # member_exec tracks whether ANY of its rules is executable
     per_member = per_rule.groupBy(
-        "url", "focus", "shape_uri", "comb", "n_members", "member"
+        "url", "focus", "shape_uri", "comb", "n_members", "m_pos", "member"
     ).agg(
         F.min(F.when(F.size("violations") == 0, 1).otherwise(0)).alias("member_ok"),
         F.max("rule_exec").alias("member_exec"),
@@ -1180,8 +1185,8 @@ def path_constraint_violations(fr: ShapeFrames) -> DataFrame:
         # whole function then contributes nothing to the reports plan)
         from pyspark.sql import types as T
 
-        return fr.data.sparkSession.createDataFrame(
-            [],
+        return empty_frame(
+            fr.data.sparkSession,
             T.StructType(
                 [
                     T.StructField("url", T.StringType()),

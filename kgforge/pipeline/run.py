@@ -5,6 +5,13 @@ Every stage boundary writes a manifest; re-running with the same run_id
 skips completed stages (exact resume). Intermediate tables persist under
 ``work_root`` so a resumed run never recomputes parsing.
 
+The page-filter stages (``host_filter``, ``dedup``) store their decision,
+not a copy of the crawl: each writes the kept ``url`` keys only, and every
+later stage reads ``pages`` left-semi-joined to them. ``pages`` is
+therefore read again after each filter stage, on a resume too, and must be
+a re-readable table (a scan, or persisted). ``span_dedup`` rewrites text,
+so its stage stores the rewritten pages.
+
 This module is the one definition of the stage chain: its validate step
 (``verdicts``) and canonicalize step (``canonicalized``) are what streaming
 validation and the incremental merge run too.
@@ -149,23 +156,28 @@ def dedup_pages(pages: DataFrame, mode: str = "near", threshold: float = 0.9) ->
     from ..operators.canonicalize import connected_components
     from ..operators.dedup import exact_dedup, minhash_duplicate_pairs
 
-    exact = exact_dedup(pages, id_col="url", text_col="text")
-    if mode == "exact":
-        return exact
-    # the exact-dedup output is a full-text shuffle aggregation and feeds
-    # FOUR lineages below (signatures, candidate-gram semi-join, the CC edge
-    # materialization, and the final anti-join) — without a persist each one
-    # re-runs the whole text shuffle
-    exact = persist(exact)
-    pairs = minhash_duplicate_pairs(
-        exact, id_col="url", text_col="text", threshold=threshold, sig_prefilter=True
-    )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    comp = connected_components(edges)
-    # component = min(node): non-representatives are dropped; pages in no
-    # duplicate component never appear in comp and survive the anti-join
-    drop = comp.filter(F.col("node") != F.col("component")).select(F.col("node").alias("url"))
-    return exact.join(drop, "url", "left_anti")
+    # keep/drop is decided per url from (url, text) alone; the kept pages
+    # are ``pages`` semi-joined to the kept urls
+    kept = exact_dedup(pages.select("url", "text"), id_col="url", text_col="text")
+    if mode != "exact":
+        # the exact-dedup output is a full-text shuffle aggregation and
+        # feeds FOUR lineages below (signatures, candidate-gram semi-join,
+        # the CC edge materialization, and the final anti-join) — without a
+        # persist each one re-runs the whole text shuffle
+        kept = persist(kept)
+        pairs = minhash_duplicate_pairs(
+            kept, id_col="url", text_col="text", threshold=threshold, sig_prefilter=True
+        )
+        edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        comp = connected_components(edges)
+        # component = min(node): non-representatives are dropped; pages in
+        # no duplicate component never appear in comp and survive the
+        # anti-join
+        drop = comp.filter(F.col("node") != F.col("component")).select(
+            F.col("node").alias("url")
+        )
+        kept = kept.join(drop, "url", "left_anti")
+    return pages.join(kept.select("url"), "url", "left_semi")
 
 
 def span_dedup_pages(pages: DataFrame, k: int = 8, min_freq: int = 2) -> DataFrame:
@@ -211,10 +223,14 @@ def run_pipeline(
 ) -> dict:
     """Returns dict of stage DataFrames + metrics. All heavy stages write
     through ``write_stage`` (repartitionByRange + per-file stats + manifest).
-    ``extended_checks=True`` additionally materializes the focus-node
-    constraint-report stream (see ``constraint_reports``); ``dedup`` in
-    {'exact', 'near'} inserts a page-dedup stage before parsing (manifest
-    row counts record kept pages; input minus kept = collapsed dupes);
+    ``pages`` must be a re-readable table (a scan, or persisted): the
+    filter stages store only the kept urls, and parse, mentions and
+    ``span_dedup`` read ``pages`` semi-joined to them, as does the returned
+    ``pages``. ``extended_checks=True`` additionally materializes the
+    focus-node constraint-report stream (see ``constraint_reports``);
+    ``dedup`` in {'exact', 'near'} inserts a page-dedup stage before
+    parsing (its table holds the kept urls, range-clustered; manifest row
+    counts record kept pages; input minus kept = collapsed dupes);
     ``span_dedup=True`` additionally rewrites surviving pages' text with
     duplicated spans removed (``span_dedup_pages``) before parse/mentions;
     ``infer_rules`` (a list from ``kgforge.shacl.rules.extract_rules``)
@@ -226,7 +242,9 @@ def run_pipeline(
     ER evidence to canonicalization — subjects sharing an IFP value merge
     into one component even without an explicit owl:sameAs assertion
     (``ifp_sameas_candidates``' block-cleaned pairs union into the CC
-    edge set)."""
+    edge set). ``host_filter=True`` drops whole hosts that fail the
+    domain-level curation rollup before any other stage; its table holds
+    the kept urls, like the dedup stage's."""
     manifests = ManifestStore(os.path.join(work_root, "_manifests"))
     gazetteer = gazetteer if gazetteer is not None else gazetteer_rows()
 
@@ -244,18 +262,21 @@ def run_pipeline(
         bad = hosts.filter(F.col("keep") == False).select(  # noqa: E712
             F.col("host").alias("__host")
         )
-        pages = write_stage(
-            withhost.join(bad, "__host", "left_anti").drop("__host"),
+        kept = write_stage(
+            withhost.join(bad, "__host", "left_anti").select("url"),
             os.path.join(work_root, "pages_host_filter"),
             "host_filter", run_id, manifests, range_cols=["url"],
         )
+        pages = pages.join(kept, "url", "left_semi")
     if dedup is not None:
         # dedup_pages' plan reads tables it persisted; free them once written
         with released():
-            pages = write_stage(
-                dedup_pages(pages, mode=dedup), os.path.join(work_root, "pages_dedup"),
+            kept = write_stage(
+                dedup_pages(pages, mode=dedup).select("url"),
+                os.path.join(work_root, "pages_dedup"),
                 "dedup", run_id, manifests, range_cols=["url"],
             )
+        pages = pages.join(kept, "url", "left_semi")
     if span_dedup:
         pages = write_stage(
             span_dedup_pages(pages), os.path.join(work_root, "pages_span_dedup"),

@@ -296,3 +296,29 @@ ex:lonely a ex:Node .
     assert (EX + "a", "oneOrMore") not in v
     assert (EX + "b", "oneOrMore") not in v
     assert v[(EX + "lonely", "oneOrMore")] == ["minCount"]
+
+
+def test_node_level_member_listed_twice(spark):
+    """Members are list entries: a shape listed twice is two members. A
+    focus node conforming to ex:HasName satisfies sh:and ( ex:HasName
+    ex:HasName ) — no report row — and violates sh:xone over the same list,
+    where it conforms to two entries."""
+    from kgforge.pipeline.run import constraint_reports
+
+    pages = _page(spark, NODE_MEMBERS + """\
+ex:AndTwice a sh:NodeShape ; sh:targetClass ex:P5 ; sh:and ( ex:HasName ex:HasName ) .
+ex:XoneTwice a sh:NodeShape ; sh:targetClass ex:P6 ; sh:xone ( ex:HasName ex:HasName ) .
+
+ex:named5 a ex:P5 ; ex:name "Ada" .
+ex:unnamed5 a ex:P5 ; ex:other "x" .
+ex:named6 a ex:P6 ; ex:name "Ada" .
+""", url="https://ex.example.org/twice")
+    reports = constraint_reports(*split_parsed(parse_combined(pages)))
+    rows = {
+        (r["subject"], r["shape_uri"]): r["violations"]
+        for r in reports.filter(F.col("source") == "node_logical").collect()
+    }
+    assert (EX + "named5", EX + "AndTwice") not in rows
+    assert rows[(EX + "unnamed5", EX + "AndTwice")] == ["and"]
+    assert rows[(EX + "named6", EX + "XoneTwice")] == ["xone"]
+    assert reports.filter(F.col("subject") == EX + "named5").count() == 0

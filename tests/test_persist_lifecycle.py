@@ -7,6 +7,8 @@ import pytest
 
 from kgforge.fixtures import pages_df
 from kgforge.html import extract_text
+from kgforge.operators.canonicalize import verified_similar_pairs
+from kgforge.operators.dedup import jaccard_similarity_join
 from kgforge.persist import persist, released
 from kgforge.pipeline.run import run_pipeline
 from kgforge.schema import PAGES_SCHEMA
@@ -74,3 +76,32 @@ def test_run_pipeline_leaves_no_persisted_rdds(spark, tmp_path, corpus, options)
     if corpus == "closure":
         # ex:c is no ex:Node, and ex:next reaches it from every focus node
         assert out["reports"].filter("source = 'path'").count() == 2
+
+
+NEAR_DUP_TEXTS = [
+    "the quick brown fox jumps over the lazy dog near the river bank",
+    "the quick brown fox jumps over the lazy dog near the river bend",
+    "a completely different sentence about graph construction at scale",
+    "a completely different sentence about graph construction at scala",
+    "nothing alike here",
+]
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        lambda docs: verified_similar_pairs(docs, "doc_id", "text", threshold=0.5),
+        lambda docs: jaccard_similarity_join(docs, threshold=0.5),
+    ],
+    ids=["verified_similar_pairs", "jaccard_similarity_join"],
+)
+def test_gram_operators_release_their_persisted_tables(spark, pairs):
+    docs = spark.createDataFrame(
+        [(f"d{i}", t) for i, t in enumerate(NEAR_DUP_TEXTS)], "doc_id string, text string"
+    )
+    base = _persistent_rdds(spark)
+    with released():
+        found = {(r["a"], r["b"]) for r in pairs(docs).collect()}
+        assert _persistent_rdds(spark) > base
+    assert _persistent_rdds(spark) == base
+    assert {("d0", "d1"), ("d2", "d3")} <= found
