@@ -297,10 +297,10 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations as DuckDB CTEs (the q_host_communities/q_host_node2vec
     idiom): each round re-derives the pair argmax — (count desc, a desc,
     b desc), the max(struct) ordering — and replays the leftmost-
-    non-overlapping fold as a delimiter-joined string double-replace
-    (matches overlap only by the shared delimiter, so two replace passes
-    are exactly the fold). Also value-pinned against a pure-Python
-    reference in tests/test_bpe.py."""
+    non-overlapping fold as one replace over a string in which every
+    symbol sits in its own delimiter pair (matches never share a
+    delimiter, so the replace is exactly the fold). Also value-pinned
+    against a pure-Python reference in tests/test_bpe.py."""
     from kgforge.operators.bpe import bpe_learn, merges_df
 
     docs = _t(spark, sf_dir, "documents")
@@ -310,11 +310,11 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_merges_sql(k: int = 10) -> str:
     """Unrolled-k-iteration DuckDB twin of ``bpe_learn``. Per round:
     pair counts from the symbol lists, argmax by (cnt, a, b) struct
-    order, then the merge applied via chr(31)-delimited string
-    replacement run twice (pass 1 takes the leftmost non-overlapping
-    matches; the only blocked matches are isolated pairs whose leading
-    delimiter was consumed, which pass 2 completes — equivalent to the
-    engine's left fold)."""
+    order, then the merge applied as one string replace: every symbol is
+    wrapped in its own chr(31) pair, so a pair (a, b) is the text
+    ``chr(31)||a||chr(31)||chr(31)||b||chr(31)``. Two matches never share
+    a delimiter, so replace's leftmost non-overlapping matches are exactly
+    the engine's left fold, runs of identical symbols included."""
     d = "chr(31)"
     parts = [
         r"""WITH w AS (
@@ -333,7 +333,7 @@ def _bpe_merges_sql(k: int = 10) -> str:
     ]
     for r in range(1, k + 1):
         prev = f"s{r - 1}"
-        pat = f"{d} || m.a || {d} || m.b || {d}"
+        pat = f"{d} || m.a || {d} || {d} || m.b || {d}"
         rep = f"{d} || m.a || m.b || {d}"
         parts.append(
             f"""p{r} AS (SELECT s[i] AS a, s[i+1] AS b, sum(cnt) AS pc
@@ -345,10 +345,9 @@ def _bpe_merges_sql(k: int = 10) -> str:
             parts.append(
                 f"""s{r} AS (
             SELECT cnt,
-                   string_split(substr(r2, 2, length(r2) - 2), {d}) AS s
+                   string_split(substr(r2, 2, length(r2) - 2), {d} || {d}) AS s
             FROM (SELECT cnt,
-                         replace(replace({d} || array_to_string(s, {d}) || {d},
-                                         {pat}, {rep}),
+                         replace({d} || array_to_string(s, {d} || {d}) || {d},
                                  {pat}, {rep}) AS r2
                   FROM {prev}, m{r} m))"""
             )

@@ -1,10 +1,10 @@
 """Stage 06: entity canonicalization.
 
-Two edge sources feed one connected-components pass:
-1. explicit ``owl:sameAs`` triples (exact evidence)
-2. MinHash-LSH blocking over entity *names*: shingle -> minhash signature ->
-   band buckets -> candidate pairs within a bucket -> verified by n-gram
-   Jaccard >= threshold (approximate evidence)
+Explicit ``owl:sameAs`` triples, plus any caller-supplied equivalence edges
+(inverse-functional shared keys), feed one connected-components pass. The
+MinHash-LSH machinery here (shingle -> minhash signature -> band buckets ->
+candidate pairs within a bucket) is shared with page near-dup detection
+(``operators.dedup``).
 
 Connected components is the alternating **large-star / small-star** algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
@@ -31,10 +31,8 @@ not strings — 8-byte shuffles instead of URI-length ones at 10^12 scale.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..persist import persist
 
 OWL_SAME_AS = "http://www.w3.org/2002/07/owl#sameAs"
 
@@ -56,6 +54,13 @@ def sameas_edges(triples: DataFrame) -> DataFrame:
 
 
 _MERSENNE61 = (1 << 61) - 1
+
+# MinHash-LSH shape: 32 signature slots in 8 bands of 4 rows, over byte
+# 3-grams
+NUM_HASHES = 32
+BANDS = 8
+ROWS_PER_BAND = NUM_HASHES // BANDS
+SHINGLE = 3
 
 
 def _minhash_params(num_hashes: int):
@@ -88,7 +93,7 @@ def _mulmod61(x, y):
     return (shifted + lo) % p
 
 
-def minhash_sig_col(text_col, num_hashes: int = 32, shingle: int = 3):
+def minhash_sig_col(text_col, num_hashes: int = NUM_HASHES):
     """MinHash signature (array<bigint>) as a vectorized Arrow UDF.
 
     The per-doc work is numpy end-to-end: byte n-grams packed to integer
@@ -101,7 +106,7 @@ def minhash_sig_col(text_col, num_hashes: int = 32, shingle: int = 3):
     from pyspark.sql.functions import pandas_udf
 
     a, b = _minhash_params(num_hashes)
-    # Shingles are BYTE n-grams packed into 8*shingle-bit integer codes —
+    # Shingles are BYTE n-grams packed into 8*SHINGLE-bit integer codes —
     # pure numpy (frombuffer + shifts + np.unique), replacing the former
     # per-position Python set comprehension and per-shingle zlib.crc32 loop.
     # The packed code is then avalanched to 32 bits with a vectorized
@@ -127,13 +132,13 @@ def minhash_sig_col(text_col, num_hashes: int = 32, shingle: int = 3):
         for text in texts:
             t = " ".join((text or "").lower().split())
             data = t.encode("utf-8")
-            if len(data) < shingle:
-                data = data.ljust(shingle, b" ")
+            if len(data) < SHINGLE:
+                data = data.ljust(SHINGLE, b" ")
             arr = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-            m = len(arr) - (shingle - 1)
+            m = len(arr) - (SHINGLE - 1)
             codes = np.zeros(m, dtype=np.uint64)
-            for k in range(shingle):
-                codes |= arr[k : m + k] << np.uint64(8 * (shingle - 1 - k))
+            for k in range(SHINGLE):
+                codes |= arr[k : m + k] << np.uint64(8 * (SHINGLE - 1 - k))
             hs = _mix32(np.unique(codes))
             prod = (_mulmod61(a[:, None], hs[None, :]) + b[:, None]) % p64
             out.append(prod.min(axis=1).astype(np.int64))
@@ -142,21 +147,17 @@ def minhash_sig_col(text_col, num_hashes: int = 32, shingle: int = 3):
     return _sig(text_col)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, shingle: int = 3
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from .util import rebalance
 
     return rebalance(df).select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("text"),
-        minhash_sig_col(F.col(text_col), num_hashes, shingle).alias("sig"),
+        minhash_sig_col(F.col(text_col)).alias("sig"),
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, bands: int = 8, rows_per_band: int = 4, max_bucket: int = 64
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int = 64) -> DataFrame:
     """Band the signatures, bucket-join, emit candidate id pairs (a < b).
 
     ``max_bucket`` caps pathological buckets (all-identical boilerplate
@@ -185,10 +186,10 @@ def lsh_candidate_pairs(
             F.array(
                 *[
                     F.xxhash64(
-                        F.concat_ws("_", *[F.col("sig")[b * rows_per_band + r].cast("string") for r in range(rows_per_band)]),
+                        F.concat_ws("_", *[F.col("sig")[b * ROWS_PER_BAND + r].cast("string") for r in range(ROWS_PER_BAND)]),
                         F.lit(b),
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("band", "bucket"),
@@ -276,69 +277,22 @@ def _hashed_token_shingle_set(col, n: int = 4):
     )
 
 
-def verified_similar_pairs(
-    entities: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """MinHash-LSH blocked + exact n-gram Jaccard verified pairs (a, b, jaccard)."""
-    sigs = minhash_signatures(entities, id_col, text_col, num_hashes=num_hashes)
-    cands = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=num_hashes // bands)
-    # candidate-pruned gram sets (same reasoning as minhash_duplicate_pairs:
-    # verify cost must scale with |candidates|, not |corpus|); cands is
-    # referenced 3x below — persist so banding runs once (both persisted
-    # tables are released by the caller's ``released()`` block)
-    cands = persist(cands)
-    cand_ids = (
-        cands.select(F.col("a").alias("cid"))
-        .union(cands.select(F.col("b").alias("cid")))
-        .distinct()
-    )
-    pruned = entities.join(cand_ids, F.col(id_col) == F.col("cid"), "left_semi")
-    # persisted: the verify join reads it through TWO aliases, and each
-    # unpersisted alias re-runs the semi-join + gram expression over the
-    # candidate texts (same measured 2x as dedup.minhash_duplicate_pairs)
-    texts = persist(pruned.select(
-        F.col(id_col).alias("id"), _hashed_ngram_set(F.col(text_col)).alias("grams")
-    ))
-    a = texts.alias("ta")
-    b = texts.alias("tb")
-    joined = (
-        cands.join(a, cands.a == F.col("ta.id"))
-        .join(b, cands.b == F.col("tb.id"))
-        .select(
-            "a",
-            "b",
-            (
-                F.size(F.array_intersect("ta.grams", "tb.grams"))
-                / F.size(F.array_union("ta.grams", "tb.grams"))
-            ).alias("jaccard"),
-        )
-    )
-    return joined.filter(F.col("jaccard") >= threshold)
-
-
 # ------------------------------------------------- connected components (CC)
 
 
-def connected_components(
-    edges: DataFrame,
-    spark: SparkSession | None = None,
-    max_iterations: int = 20,
-    num_partitions: int | None = None,
-    driver_cap: int = 100_000,
-) -> DataFrame:
+# large/small-star rounds before the distributed CC loop gives up
+# converging; each round is ~8 shuffle stages
+MAX_ITERATIONS = 20
+
+
+def connected_components(edges: DataFrame, driver_cap: int = 100_000) -> DataFrame:
     """(src: string, dst: string) -> (node: string, component: string).
 
     Large-star/small-star on int64 surrogate ids; component id is the
     lexicographically-smallest member URI (deterministic, human-stable).
     """
-    spark = spark or edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
+    spark = edges.sparkSession
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
 
     # Size the whole CC job's partitioning from the measured edge count:
     # each iteration is ~8 shuffle stages, so task-scheduling overhead (not
@@ -463,7 +417,7 @@ def connected_components(
         )
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    for _it in range(max_iterations):
+    for _it in range(MAX_ITERATIONS):
         e2 = large_star(e)
         # no repartition before checkpoint: the next iteration's first op is
         # a groupBy that reshuffles anyway, so co-locating here is a wasted
@@ -510,23 +464,13 @@ def connected_components(
     return out
 
 
-def canonicalize_entities(
-    triples: DataFrame,
-    entity_names: DataFrame | None = None,
-    name_threshold: float = 0.9,
-    extra_edges: DataFrame | None = None,
-) -> DataFrame:
-    """Full stage: sameAs edges (+ optional name-similarity edges,
-    + optional caller-supplied equivalence edges (a, b) — e.g.
-    inverse-functional shared-key pairs from
+def canonicalize_entities(triples: DataFrame, extra_edges: DataFrame | None = None) -> DataFrame:
+    """Full stage: sameAs edges (+ optional caller-supplied equivalence
+    edges (a, b) — e.g. inverse-functional shared-key pairs from
     ``inference.ifp_sameas_candidates``) -> CC -> (node, component)
     canonical mapping. All edge sources union into ONE component
-    computation, so key-based and similarity-based evidence merge
-    transitively."""
+    computation, so key-based and sameAs evidence merge transitively."""
     edges = sameas_edges(triples)
-    if entity_names is not None:
-        sim = verified_similar_pairs(entity_names, "uri", "name", threshold=name_threshold)
-        edges = edges.union(sim.select(F.col("a").alias("src"), F.col("b").alias("dst")))
     if extra_edges is not None:
         edges = edges.union(
             extra_edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))

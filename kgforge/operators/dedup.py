@@ -27,6 +27,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..persist import persist
 from .canonicalize import (
+    NUM_HASHES,
     _hashed_ngram_set,
     _hashed_token_shingle_set,
     _ngram_set,
@@ -56,8 +57,6 @@ def minhash_duplicate_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 8,
     sig_prefilter: bool = False,
 ) -> DataFrame:
     """(a, b, jaccard) near-duplicate pairs via MinHash-LSH + exact verify.
@@ -65,11 +64,11 @@ def minhash_duplicate_pairs(
     ``sig_prefilter=True`` inserts a signature-agreement filter between
     candidate generation and the exact gram verify: the estimated Jaccard
     (fraction of agreeing minhash slots, an unbiased estimator) must reach
-    ``threshold - 3*sqrt(t(1-t)/num_hashes)``. Why: the verify join ships
+    ``threshold - 3*sqrt(t(1-t)/NUM_HASHES)``. Why: the verify join ships
     each candidate's full hashed-gram array (~KBs/row); on corpora with a
     mid-similarity crowd (boilerplate at j≈0.5-0.7) LSH emits orders of
     magnitude more candidates than survivors, and the gram shuffle dominates
-    the whole stage. The signature is 8*num_hashes bytes and already
+    the whole stage. The signature is 8*NUM_HASHES bytes and already
     computed, so the estimate costs a narrow join. The 3-sigma margin bounds
     the drop probability for a TRUE >=threshold pair at ~0.1%% (normal
     tail); exact-recall callers (the q_minhash oracle path) leave it off.
@@ -80,15 +79,15 @@ def minhash_duplicate_pairs(
     """
     # the signature table is rebalanced and carries the text, so the
     # candidate gram sets below read it too: one rebalance per call
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes=num_hashes)
+    sigs = minhash_signatures(docs, id_col, text_col)
     if sig_prefilter:
         sigs = persist(sigs)
-    cands = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=num_hashes // bands)
+    cands = lsh_candidate_pairs(sigs)
     if sig_prefilter:
         import math
 
         cutoff = max(
-            0.0, threshold - 3.0 * math.sqrt(threshold * (1.0 - threshold) / num_hashes)
+            0.0, threshold - 3.0 * math.sqrt(threshold * (1.0 - threshold) / NUM_HASHES)
         )
         sa = sigs.select(F.col("id").alias("a"), F.col("sig").alias("sig_a"))
         sb = sigs.select(F.col("id").alias("b"), F.col("sig").alias("sig_b"))
@@ -100,7 +99,7 @@ def minhash_duplicate_pairs(
         cands = (
             cands.join(sa, "a")
             .join(sb, "b")
-            .filter(agree / F.lit(num_hashes) >= F.lit(cutoff))
+            .filter(agree / F.lit(NUM_HASHES) >= F.lit(cutoff))
             .select("a", "b")
         )
     # pin the surviving candidate set: it is referenced FIVE times below

@@ -35,6 +35,11 @@ from pyspark.sql import functions as F
 from ..schema import MENTIONS_SCHEMA
 
 EMB_DIM = 16
+# characters of text on each side of a mention that its context embedding
+# reads
+CONTEXT_WINDOW = 80
+# mentions scoring below this yield no candidate triple
+MIN_SCORE = 0.25
 
 
 # md5 is ~20x costlier than the trigram loop around it, but the distinct-
@@ -267,10 +272,9 @@ class GazetteerMatcher:
         return out
 
 
-def detect_mentions(
-    pages: DataFrame, gazetteer: list[tuple[str, str, str, float]], context_window: int = 80
-) -> DataFrame:
-    """pages -> mentions DF. score = prior * (0.5 + 0.5 * cosine(context, entity))."""
+def detect_mentions(pages: DataFrame, gazetteer: list[tuple[str, str, str, float]]) -> DataFrame:
+    """pages -> mentions DF. score = prior * (0.5 + 0.5 * cosine(context, entity)),
+    the context being the ``CONTEXT_WINDOW`` characters around the span."""
     spark: SparkSession = pages.sparkSession
     bc = spark.sparkContext.broadcast(GazetteerMatcher(gazetteer))
 
@@ -285,7 +289,7 @@ def detect_mentions(
                     starts.append(s)
                     ends.append(e)
                     eids.append(eid)
-                    ctxs.append((text or "")[max(0, s - context_window) : e + context_window])
+                    ctxs.append((text or "")[max(0, s - CONTEXT_WINDOW) : e + CONTEXT_WINDOW])
             if not urls:
                 yield pd.DataFrame(
                     {"url": [], "surface": [], "start": [], "end": [], "entity_id": [], "score": []}
@@ -311,10 +315,11 @@ def detect_mentions(
     return pages.select("url", "text").mapInPandas(fn, schema=MENTIONS_SCHEMA)
 
 
-def mention_triples(mentions: DataFrame, min_score: float = 0.25) -> DataFrame:
-    """mentions -> candidate KG triples (TRIPLES_SCHEMA-compatible columns)."""
+def mention_triples(mentions: DataFrame) -> DataFrame:
+    """mentions scoring at least ``MIN_SCORE`` -> candidate KG triples
+    (TRIPLES_SCHEMA-compatible columns)."""
     return (
-        mentions.filter(F.col("score") >= min_score)
+        mentions.filter(F.col("score") >= MIN_SCORE)
         .select(
             "url",
             F.col("start").cast("long").alias("seq"),
@@ -390,7 +395,7 @@ def detect_mention_candidates(pages: DataFrame, gazetteer: list[tuple[str, str, 
 def link_mentions(
     pages: DataFrame,
     gazetteer: list[tuple[str, str, str, float]],
-    context_window: int = 80,
+    context_window: int = CONTEXT_WINDOW,
 ) -> DataFrame:
     """Disambiguating entity linker: per detected span, score every
     candidate entity sharing the surface with

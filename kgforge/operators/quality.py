@@ -138,24 +138,25 @@ def gopher_filter(
     return docs.join(keep_ids, on=id_col, how="left_semi")
 
 
-def host_curation(
-    docs: DataFrame,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_mean_tokens: float = 20.0,
-    max_dup_share: float = 0.3,
-    min_docs: int = 3,
-) -> DataFrame:
+# host_curation's keep rule: at least HOST_MIN_DOCS pages (else no
+# verdict), a mean of at least HOST_MIN_MEAN_TOKENS tokens per page, and at
+# most HOST_MAX_DUP_SHARE of its pages exact duplicates within the host
+HOST_MIN_DOCS = 3
+HOST_MIN_MEAN_TOKENS = 20.0
+HOST_MAX_DUP_SHARE = 0.3
+
+
+def host_curation(docs: DataFrame, host_col: str = "host") -> DataFrame:
     """Domain-level curation rollup (the RefinedWeb / FineWeb move:
     filter at the HOST, not only the document — a host whose pages are
     mostly near-empty or mostly duplicated is spam/template farm, and
-    dropping it wholesale beats scoring its pages one by one). Per host:
-    page count, mean token count, the share of pages whose exact text
+    dropping it wholesale beats scoring its pages one by one). Per host
+    (``host_col``), over the pages' ``text``: page count, mean token
+    count, the share of pages whose exact text
     recurs within the host, and the keep/drop decision.
 
     Output: (host, n_docs, mean_tokens, dup_share, keep) — keep is
-    NULL for hosts below ``min_docs`` (too little evidence to damn a
+    NULL for hosts below ``HOST_MIN_DOCS`` pages (too little evidence to damn a
     domain; route those to per-document filters instead).
 
     Scale shape: token counts are codegen in the scan; the dup share is
@@ -170,8 +171,8 @@ def host_curation(
 
     per_text = docs.select(
         F.col(host_col).alias("host"),
-        F.col(text_col).alias("__t"),
-        token_count_col(F.col(text_col)).alias("__tok"),
+        F.col("text").alias("__t"),
+        token_count_col(F.col("text")).alias("__tok"),
     ).groupBy("host", "__t").agg(
         F.count(F.lit(1)).alias("n_copies"),
         F.sum("__tok").alias("tok_sum"),
@@ -195,9 +196,9 @@ def host_curation(
         mean_tokens.alias("mean_tokens"),
         dup_share.alias("dup_share"),
         F.when(
-            F.col("n_docs") >= min_docs,
-            (mean_tokens >= F.lit(min_mean_tokens))
-            & (dup_share <= F.lit(max_dup_share)),
+            F.col("n_docs") >= HOST_MIN_DOCS,
+            (mean_tokens >= F.lit(HOST_MIN_MEAN_TOKENS))
+            & (dup_share <= F.lit(HOST_MAX_DUP_SHARE)),
         ).alias("keep"),
     )
 

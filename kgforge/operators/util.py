@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def rebalance(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def rebalance(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the input has fewer partitions than
     the cluster has cores.
 
@@ -18,8 +18,7 @@ def rebalance(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     the scan already yields >= cores partitions and this is a no-op — so the
     shuffle cost is only ever paid on inputs small enough for it to be cheap.
     """
-    spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

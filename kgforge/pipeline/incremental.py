@@ -83,7 +83,7 @@ def merge_increment(
     )
     prev_accepted = spark.read.parquet(os.path.join(prev_work_root, "accepted"))
     accepted = write_stage(
-        prev_accepted.unionByName(inc["accepted"]),
+        lambda: prev_accepted.unionByName(inc["accepted"]),
         os.path.join(work_root, "accepted_merged"),
         "merge_accept",
         run_id,
@@ -111,17 +111,14 @@ def merge_increment(
         )
         after = canonical.select(spo_cols).distinct()
         prev_entailed = spark.read.parquet(os.path.join(prev_work_root, "entailed"))
-        delta = delta_rules(
-            after,
-            infer_rules,
-            prev_entailed.select(spo_cols),
-            added=after.join(before, spo_cols, "left_anti"),
-            removed=before.join(after, spo_cols, "left_anti"),
-        )
         entailed = write_stage(
-            delta.select(
-                F.lit("urn:kgforge:entailed").alias("url"), *spo_cols
-            ),
+            lambda: delta_rules(
+                after,
+                infer_rules,
+                prev_entailed.select(spo_cols),
+                added=after.join(before, spo_cols, "left_anti"),
+                removed=before.join(after, spo_cols, "left_anti"),
+            ).select(F.lit("urn:kgforge:entailed").alias("url"), *spo_cols),
             os.path.join(work_root, "entailed"), "infer_rules", run_id, manifests,
             range_cols=["subject", "predicate"],
         )

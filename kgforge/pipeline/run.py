@@ -2,8 +2,12 @@
 materialized S/P/O graph (SURVEY §7.1), resumable per stage.
 
 Every stage boundary writes a manifest; re-running with the same run_id
-skips completed stages (exact resume). Intermediate tables persist under
-``work_root`` so a resumed run never recomputes parsing.
+skips completed stages (exact resume). Each stage hands ``write_stage`` its
+plan as a zero-argument builder, so a completed stage's plan is never
+built: a resumed run submits no Spark job for it, not even the eager
+counts and collects of near-dup detection or connected components.
+Intermediate tables persist under ``work_root`` so a resumed run never
+recomputes parsing.
 
 The page-filter stages (``host_filter``, ``dedup``) store their decision,
 not a copy of the crawl: each writes the kept ``url`` keys only, and every
@@ -121,17 +125,20 @@ def canonicalized(
     """(mapping, canonical): writes the ``canonicalize`` stage (node ->
     component over the sameAs edges of ``accepted``) and rewrites
     ``accepted`` onto it."""
-    # key-based ER (owl:InverseFunctionalProperty shared values) feeds
-    # the CC canonicalizer as extra equivalence edges: subjects sharing
-    # an email/ISBN-style key merge even without an explicit sameAs
-    ifp_edges = None
-    if ifp_props:
-        from ..operators.inference import ifp_sameas_candidates
 
-        ifp_edges = ifp_sameas_candidates(accepted, ifp_props).select("a", "b")
+    def build() -> DataFrame:
+        # key-based ER (owl:InverseFunctionalProperty shared values) feeds
+        # the CC canonicalizer as extra equivalence edges: subjects sharing
+        # an email/ISBN-style key merge even without an explicit sameAs
+        ifp_edges = None
+        if ifp_props:
+            from ..operators.inference import ifp_sameas_candidates
+
+            ifp_edges = ifp_sameas_candidates(accepted, ifp_props).select("a", "b")
+        return canonicalize_entities(accepted, extra_edges=ifp_edges)
+
     mapping = write_stage(
-        canonicalize_entities(accepted, extra_edges=ifp_edges),
-        os.path.join(work_root, "canonical_map"), "canonicalize", run_id, manifests,
+        build, os.path.join(work_root, "canonical_map"), "canonicalize", run_id, manifests,
         range_cols=["node"],
     )
     return mapping, rewrite_to_canonical(accepted, mapping)
@@ -180,10 +187,10 @@ def dedup_pages(pages: DataFrame, mode: str = "near", threshold: float = 0.9) ->
     return pages.join(kept.select("url"), "url", "left_semi")
 
 
-def span_dedup_pages(pages: DataFrame, k: int = 8, min_freq: int = 2) -> DataFrame:
+def span_dedup_pages(pages: DataFrame) -> DataFrame:
     """Span-level text rewrite stage (Lee et al. ExactSubstr): every page's
     ``text`` is replaced by its duplicated-span-removed rewrite — tokens
-    inside any k-token gram occurring >= ``min_freq`` times corpus-wide are
+    inside any 8-token gram occurring twice or more corpus-wide are
     dropped (site boilerplate, shared banners, quoted passages), all other
     columns pass through. Page-LEVEL dedup collapses whole near-identical
     pages; this stage removes the duplicated PASSAGES that survive it, the
@@ -198,9 +205,7 @@ def span_dedup_pages(pages: DataFrame, k: int = 8, min_freq: int = 2) -> DataFra
     op see the cleaned corpus."""
     from ..operators.corpus_mining import remove_duplicate_spans
 
-    rewritten = remove_duplicate_spans(
-        pages, k=k, min_freq=min_freq, id_col="url", text_col="text"
-    )
+    rewritten = remove_duplicate_spans(pages, id_col="url", text_col="text")
     return (
         pages.drop("text")
         .join(rewritten.select(F.col("doc_id").alias("url"), "text"), "url")
@@ -256,14 +261,12 @@ def run_pipeline(
         from ..operators.urlops import host_col
 
         withhost = pages.withColumn("__host", host_col(F.col("url")))
-        hosts = host_curation(
-            withhost, host_col="__host", id_col="url", text_col="text"
-        )
+        hosts = host_curation(withhost, host_col="__host")
         bad = hosts.filter(F.col("keep") == False).select(  # noqa: E712
             F.col("host").alias("__host")
         )
         kept = write_stage(
-            withhost.join(bad, "__host", "left_anti").select("url"),
+            lambda: withhost.join(bad, "__host", "left_anti").select("url"),
             os.path.join(work_root, "pages_host_filter"),
             "host_filter", run_id, manifests, range_cols=["url"],
         )
@@ -272,14 +275,14 @@ def run_pipeline(
         # dedup_pages' plan reads tables it persisted; free them once written
         with released():
             kept = write_stage(
-                dedup_pages(pages, mode=dedup).select("url"),
+                lambda: dedup_pages(pages, mode=dedup).select("url"),
                 os.path.join(work_root, "pages_dedup"),
                 "dedup", run_id, manifests, range_cols=["url"],
             )
         pages = pages.join(kept, "url", "left_semi")
     if span_dedup:
         pages = write_stage(
-            span_dedup_pages(pages), os.path.join(work_root, "pages_span_dedup"),
+            lambda: span_dedup_pages(pages), os.path.join(work_root, "pages_span_dedup"),
             "span_dedup", run_id, manifests, range_cols=["url"],
         )
 
@@ -289,13 +292,13 @@ def run_pipeline(
     # the scan and the wide ``shape`` struct column is pruned from triple
     # reads, so downstream stages pay only for the columns they touch.
     combined = write_stage(
-        parse_combined(pages), os.path.join(work_root, "parsed"), "parse", run_id, manifests,
-        range_cols=["url", "seq"],
+        lambda: parse_combined(pages), os.path.join(work_root, "parsed"), "parse",
+        run_id, manifests, range_cols=["url", "seq"],
     )
     triples, shapes = split_parsed(combined)
     mentions = write_stage(
-        detect_mentions(pages, gazetteer), os.path.join(work_root, "mentions"), "mentions",
-        run_id, manifests, range_cols=["url", "start"],
+        lambda: detect_mentions(pages, gazetteer), os.path.join(work_root, "mentions"),
+        "mentions", run_id, manifests, range_cols=["url", "start"],
     )
 
     all_triples = triples.filter(F.col("subject").isNotNull()).unionByName(
@@ -304,21 +307,21 @@ def run_pipeline(
     # the verdict streams are persisted for the accept AND the reject write
     # and released right after the second
     with released():
-        accepted, rejected = verdicts(all_triples, shapes)
+        verdict = verdicts(all_triples, shapes)
         accepted = write_stage(
-            accepted, os.path.join(work_root, "accepted"), "validate_accept", run_id,
-            manifests, range_cols=["subject", "predicate"],
+            lambda: verdict[0], os.path.join(work_root, "accepted"), "validate_accept",
+            run_id, manifests, range_cols=["subject", "predicate"],
         )
         rejected = write_stage(
-            rejected, os.path.join(work_root, "rejected"), "validate_reject", run_id,
-            manifests, range_cols=["subject", "predicate"],
+            lambda: verdict[1], os.path.join(work_root, "rejected"), "validate_reject",
+            run_id, manifests, range_cols=["subject", "predicate"],
         )
 
     reports = None
     if extended_checks:
         with released():
             reports = write_stage(
-                constraint_reports(all_triples, shapes),
+                lambda: constraint_reports(all_triples, shapes),
                 os.path.join(work_root, "reports"), "constraint_reports", run_id, manifests,
                 range_cols=["subject"],
             )
@@ -333,20 +336,15 @@ def run_pipeline(
     if infer_rules:
         from ..shacl.rules import apply_rules
 
-        delta = apply_rules(
-            canonical.select("subject", "predicate", "object"), infer_rules
-        )
+        spo_cols = ["subject", "predicate", "object"]
         entailed = write_stage(
-            delta.select(
-                F.lit("urn:kgforge:entailed").alias("url"),
-                "subject", "predicate", "object",
+            lambda: apply_rules(canonical.select(spo_cols), infer_rules).select(
+                F.lit("urn:kgforge:entailed").alias("url"), *spo_cols
             ),
             os.path.join(work_root, "entailed"), "infer_rules", run_id, manifests,
             range_cols=["subject", "predicate"],
         )
-        graph_in = canonical.select("url", "subject", "predicate", "object").unionByName(
-            entailed
-        )
+        graph_in = canonical.select("url", *spo_cols).unionByName(entailed)
     else:
         graph_in = canonical
 

@@ -17,8 +17,9 @@ lexicographically least — a choice that depends only on graph structure,
 never on the original labels, so non-automorphic WL-equivalent bnodes
 (e.g. two disconnected 3-cycles) now canonicalize label-invariantly too.
 The search is budgeted (``max_branches``); a pathological automorphism
-group past the budget falls back to the original-label tie-break
-(disclosed degradation, deterministic).
+group past the budget falls back to the (WL color, original label) order
+of the document's first refinement (disclosed degradation: deterministic,
+but label-dependent inside a tied class).
 
 Scale: the tie detection is one ontology-cheap agg over the bnode color
 table; only tied documents' triples enter Python, per-doc-bounded via
@@ -47,13 +48,12 @@ def _strip_bn(label: str) -> str:
     return label[2:] if label.startswith("_:") else label
 
 
-def _exact_canonical_labels(
-    rows: list[tuple], max_branches: int = 256
-) -> dict[str, str] | None:
+def _exact_canonical_labels(rows: list[tuple], max_branches: int = 256) -> dict[str, str]:
     """Individuation-refinement canonical labeling for ONE document's
     triples (list of (subject, predicate, (value, kind)) tuples). Returns
-    {original_label: canonical_label} or None if the branch budget is
-    exhausted. The chosen labeling depends only on graph structure: WL
+    {original_label: canonical_label}; when the branch budget is exhausted,
+    the labels follow the (color, original label) order of the first
+    refinement instead. The chosen labeling depends only on graph structure: WL
     refinement signatures are built from predicates, directions, ground
     terms and CURRENT colors (never original bnode labels), the first
     tied class is selected by its color, and branches compare on the
@@ -155,7 +155,8 @@ def _exact_canonical_labels(
     try:
         _text, order = search({}, 0)
     except _BudgetExceeded:
-        return None
+        colors = refine({})
+        order = {b: i for i, b in enumerate(sorted(bnodes, key=lambda x: (colors[x], x)))}
     return {b: f"c{i}" for b, i in order.items()}
 
 
@@ -212,21 +213,6 @@ def canonical_bnode_labels(
             if s is not None and p is not None and o is not None
         ]
         mapping = _exact_canonical_labels(rows, max_branches=max_branches)
-        if mapping is None:
-            # budget fallback: the legacy (internal-WL color, label) order
-            labs = sorted(
-                {
-                    _strip_bn(s)
-                    for s, _p, _o in rows
-                    if s.startswith("_:")
-                }
-                | {
-                    _strip_bn(o[0])
-                    for _s, _p, o in rows
-                    if o[1] == "bnode"
-                }
-            )
-            mapping = {b: f"c{i}" for i, b in enumerate(labs)}
         return pd.DataFrame(
             {
                 "url": [url] * len(mapping),

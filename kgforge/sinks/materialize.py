@@ -1,17 +1,18 @@
 """Stage 07: materialize the graph as partitioned S/P/O tables with per-file
 stats and checkpointed stage manifests for exact resume.
 
-North-rule requirements implemented here:
-- explicit ``repartitionByRange`` before every write (range-clustered files;
-  without an explicit count AQE sizes the files to the data, so a small
-  stage is not split into one tiny file per shuffle partition);
+North-rule requirements implemented here, in one layout for every stage:
+- ``repartitionByRange`` on the stage's cluster columns before every write
+  (range-clustered files; the shuffle has no fixed count, so AQE sizes the
+  files to the data and a small stage is not split into one tiny file per
+  shuffle partition);
 - per-file metadata is footer-derived and costs no Spark job: after each
   write the driver folds every data file's Parquet footer into
-  ``<path>_filestats`` (file, row count, min/max of the skip columns); the
+  ``<path>_filestats`` (file, row count, min/max of the cluster columns); the
   manifest's row count is their sum, and ``pruned_read`` plans from that
   table on the driver. A NULL bound means "no bound": the file is read;
-- stage manifests: a stage whose manifest exists and matches its input
-  fingerprint is SKIPPED on re-run (exact resume after failure);
+- stage manifests: a stage whose (run_id, stage) manifest is complete is
+  SKIPPED on re-run, its plan never built (exact resume after failure);
 - parquet here; the writer API is format-agnostic (swap ``.format("iceberg")
   .writeTo(...)`` on a cluster with an Iceberg catalog — partitioning
   columns and ordering are chosen to match Iceberg hidden-partitioning).
@@ -24,6 +25,7 @@ import os
 import pathlib
 import shutil
 import time
+from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -34,6 +36,9 @@ from pyspark.sql.types import StructType
 # footer key under which Spark's Parquet writer stores the table's Spark schema
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+# compact_stage's output file size
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 
 def _row_hash(cols: list[str]):
     """Per-row content hash: xxhash64 over the string-cast columns, widened
@@ -41,10 +46,10 @@ def _row_hash(cols: list[str]):
     return F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)")
 
 
-def content_fingerprint(df: DataFrame, cols: list[str] | None = None) -> str:
+def content_fingerprint(df: DataFrame) -> str:
     """Order-insensitive content hash: sum + count of per-row xxhash64."""
     row = df.select(
-        F.sum(_row_hash(cols or df.columns)).alias("h"), F.count("*").alias("c")
+        F.sum(_row_hash(df.columns)).alias("h"), F.count("*").alias("c")
     ).collect()[0]
     return f"{row['h']}:{row['c']}"
 
@@ -73,108 +78,38 @@ class ManifestStore:
             json.dump(record, fh, indent=1, sort_keys=True)
         os.replace(tmp, p)
 
-    def is_complete(self, run_id: str, stage: str, input_fingerprint: str | None = None) -> bool:
+    def is_complete(self, run_id: str, stage: str) -> bool:
         rec = self.load(run_id, stage)
-        if rec is None or rec.get("status") != "complete":
-            return False
-        if input_fingerprint is not None and rec.get("input_fingerprint") != input_fingerprint:
-            return False
-        return True
-
-
-def zorder_key_col(df: DataFrame, cols: list[str], bits: int = 16) -> DataFrame:
-    """Attach a Z-order (Morton) clustering key ``_zkey`` interleaving the
-    bits of min/max-normalized numeric columns — the multi-dimensional
-    data-skipping layout (Delta OPTIMIZE ZORDER / Iceberg sort orders):
-    range-clustering on ``_zkey`` makes per-file min/max ranges narrow in
-    EVERY listed column at once, where single-column range clustering only
-    narrows its own column.
-
-    Per-column bounds are one 1-row aggregate crossJoin-broadcast back
-    into the plan (no driver collect); normalization to [0, 2^bits) then
-    bit interleaving are pure codegen (bits * n_cols shift/mask terms).
-    NULLs sort to cell 0. Columns must be numeric (cast to double);
-    ``bits * len(cols)`` must stay <= 63."""
-    if bits * len(cols) > 63:
-        raise ValueError("zorder key would overflow int64: reduce bits or columns")
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.min(F.col(c).cast("double")).alias(f"_zmin_{c}"),
-            F.max(F.col(c).cast("double")).alias(f"_zmax_{c}"),
-        ]
-    out = df.crossJoin(F.broadcast(df.agg(*aggs)))
-    top = (1 << bits) - 1
-    scaled = []
-    for c in cols:
-        rng = F.col(f"_zmax_{c}") - F.col(f"_zmin_{c}")
-        s = (
-            F.when(
-                rng > 0,
-                F.floor(
-                    (F.col(c).cast("double") - F.col(f"_zmin_{c}")) / rng * top
-                ),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-        scaled.append(F.coalesce(F.least(s, F.lit(top)), F.lit(0)))
-    key = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, s in enumerate(scaled):
-            key = key + F.shiftleft(
-                F.shiftright(s, i).bitwiseAND(F.lit(1)), i * len(cols) + j
-            )
-    return out.withColumn("_zkey", key).drop(
-        *[f"_zmin_{c}" for c in cols], *[f"_zmax_{c}" for c in cols]
-    )
+        return rec is not None and rec.get("status") == "complete"
 
 
 def write_stage(
-    df: DataFrame,
+    build: Callable[[], DataFrame],
     path: str,
     stage: str,
     run_id: str,
     manifests: ManifestStore,
-    range_cols: list[str] | None = None,
-    num_partitions: int | None = None,
-    input_fingerprint: str | None = None,
-    stats_cols: list[str] | None = None,
-    zorder_cols: list[str] | None = None,
+    range_cols: list[str],
 ) -> DataFrame:
-    """Range-repartition -> write parquet -> the per-file table, footer-
-    derived with no Spark job (rows and min/max skipping stats on the range
-    columns, whose per-file ranges the range partitioning makes narrow; a
-    NULL bound = read the file; see write_file_stats) -> manifest, whose
-    ``rows`` is the per-file rows' sum. Returns the re-read DataFrame
-    (checkpointed lineage cut), read with the footer schema so that no
-    schema-inference job runs, after a write and on resume alike.
+    """The one stage layout: ``build()``'s rows range-repartitioned on
+    ``range_cols`` with no fixed count, so AQE coalesces the shuffle to the
+    data's size (a 64-row stage is one file, not one per shuffle
+    partition) -> parquet -> the per-file table, footer-derived with no
+    Spark job (rows and min/max skipping stats on ``range_cols``, whose
+    per-file ranges the range partitioning makes narrow; a NULL bound =
+    read the file; see write_file_stats) -> manifest, whose ``rows`` is the
+    per-file rows' sum. Returns the re-read DataFrame (checkpointed lineage
+    cut), read with the footer schema so that no schema-inference job runs.
 
-    Without ``num_partitions`` the range shuffle has no fixed count, so AQE
-    coalesces it to the data's size: a 64-row stage is one file, not one
-    file per shuffle partition. An explicit ``num_partitions`` is kept.
-    ``zorder_cols`` switches the layout to Z-order clustering (multi-column
-    skipping; see zorder_key_col) — stats are then written for every
-    z-ordered column."""
-    spark = df.sparkSession
-    if manifests.is_complete(run_id, stage, input_fingerprint):
-        return _read_table(spark, path)
+    ``build`` is the stage's plan as a zero-argument builder: a stage whose
+    manifest is complete is not built at all, so resuming it submits no
+    Spark job, even when building the plan would (a count, a collect)."""
+    if manifests.is_complete(run_id, stage):
+        return _read_table(SparkSession.active(), path)
     t0 = time.time()
-    count = [num_partitions] if num_partitions else []
-    if zorder_cols:
-        df = (
-            zorder_key_col(df, zorder_cols)
-            .repartitionByRange(*count, F.col("_zkey"))
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
-        )
-        if stats_cols is None:
-            stats_cols = zorder_cols
-    elif range_cols:
-        df = df.repartitionByRange(*count, *[F.col(c) for c in range_cols])
-    df.write.mode("overwrite").parquet(path)
-    skip_cols = stats_cols if stats_cols is not None else (range_cols or [])
-    stats = write_file_stats(path, spark, skip_cols)
+    df = build()
+    df.repartitionByRange(*range_cols).write.mode("overwrite").parquet(path)
+    stats = write_file_stats(path, df.sparkSession, range_cols)
     manifests.save(
         run_id,
         stage,
@@ -184,11 +119,10 @@ def write_stage(
             "run_id": run_id,
             "path": path,
             "rows": sum(r["rows"] for r in stats),
-            "input_fingerprint": input_fingerprint,
             "elapsed_sec": round(time.time() - t0, 3),
         },
     )
-    return _read_table(spark, path)
+    return _read_table(df.sparkSession, path)
 
 
 def _data_files(path: str) -> list[str]:
@@ -314,7 +248,6 @@ def materialize_spo(
     out_root: str,
     run_id: str,
     manifests: ManifestStore,
-    num_partitions: int | None = None,
 ) -> dict[str, DataFrame]:
     """The final graph: subject-, predicate-, and object-clustered copies
     (classic S/P/O layout so any lookup pattern scans one clustered table)."""
@@ -330,13 +263,12 @@ def materialize_spo(
     out = {}
     for name, cols in (("s", ["subject"]), ("p", ["predicate"]), ("o", ["obj_value"])):
         out[name] = write_stage(
-            flat,
+            lambda: flat,
             os.path.join(out_root, f"spo_{name}"),
             f"materialize_{name}",
             run_id,
             manifests,
             range_cols=cols,
-            num_partitions=num_partitions,
         )
     return out
 
@@ -348,7 +280,6 @@ def compact_stage(
     run_id: str,
     manifests: ManifestStore,
     range_cols: list[str],
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> DataFrame:
     """Small-file compaction for a written stage directory.
 
@@ -378,7 +309,7 @@ def compact_stage(
     n_files_before = sum(
         1 for _dp, _dn, fns in os.walk(path) for f in fns if f.endswith(".parquet")
     )
-    n_parts = max(1, (on_disk + target_file_bytes - 1) // target_file_bytes)
+    n_parts = max(1, (on_disk + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES)
     before_fp = content_fingerprint(df)
 
     tmp = path.rstrip("/") + "__compact_tmp"

@@ -153,11 +153,10 @@ def streaming_mentions(pages_stream: DataFrame, gazetteer: list) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..operators.mentions import GazetteerMatcher, hash_embedding
+    from ..operators.mentions import CONTEXT_WINDOW, GazetteerMatcher, hash_embedding
 
     spark = pages_stream.sparkSession
     bc = spark.sparkContext.broadcast(GazetteerMatcher(gazetteer))
-    context_window = 80
 
     def fn(batches):
         matcher = bc.value
@@ -171,7 +170,7 @@ def streaming_mentions(pages_stream: DataFrame, gazetteer: list) -> DataFrame:
                     starts.append(s)
                     ends.append(e)
                     eids.append(eid)
-                    ctxs.append((text or "")[max(0, s - context_window) : e + context_window])
+                    ctxs.append((text or "")[max(0, s - CONTEXT_WINDOW) : e + CONTEXT_WINDOW])
             if not urls:
                 yield pd.DataFrame(
                     {"url": [], "warc_ts": [], "surface": [], "start": [], "end": [],

@@ -126,3 +126,25 @@ def test_bpe_encode_counts(spark):
         words = text.lower().split()
         assert row["n_words"] == len(words)
         assert row["n_bpe_tokens"] == sum(enc_len(w) for w in words)
+
+
+RUN_TEXTS = ["aaaaa aaaaa aaaaaa", "aaaaaa bbbbb aaaaa", "bbbbbb bbbbb"]
+
+
+def test_duckdb_twin_folds_runs_of_identical_symbols():
+    """The DuckDB twin of bpe_learn replays each merge as one string
+    replace. On runs of 5 and 6 identical symbols ('aaaaa' merges (a, a)
+    to aa aa a</w>, never aa a aa</w>) it must give the reference's
+    merges."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame({"doc_id": range(len(RUN_TEXTS)), "text": RUN_TEXTS}))
+    con.execute("CREATE TABLE documents AS SELECT * FROM docs")
+    got = [tuple(r) for r in con.execute(e._bpe_merges_sql(6)).fetchall()]
+    counts = Counter(w for t in RUN_TEXTS for w in t.split())
+    assert got == _py_learn(dict(counts), 6)
+    assert ("aa", "aa", 2) in got

@@ -129,16 +129,26 @@ def test_canonical_distinguishes_c6_from_two_c3(spark):
 
 
 def test_canonical_budget_fallback_is_deterministic(spark):
+    """Past the branch budget a tied document is labeled in the (WL color,
+    label) order of its first refinement: in Q the 3-cycle's color sorts
+    before the literal-bearing bnode's, so _:a comes last, not first as a
+    label-only order would put it."""
     from kgforge.rdf.c14n import canonical_bnode_labels
 
     rows = _cycle("P", ["a", "b", "c"])
+    rows += _cycle("Q", ["b", "c", "d"]) + [
+        ("Q", "_:a", "http://p/q", _term("x", "literal"))
+    ]
     df = spark.createDataFrame(rows, _SCHEMA)
     got1 = {
-        (r["label"], r["canon"])
+        (r["url"], r["label"], r["canon"])
         for r in canonical_bnode_labels(df, max_branches=0).collect()
     }
     got2 = {
-        (r["label"], r["canon"])
+        (r["url"], r["label"], r["canon"])
         for r in canonical_bnode_labels(df, max_branches=0).collect()
     }
-    assert got1 == got2 and len(got1) == 3
+    assert got1 == got2 and len(got1) == 7
+    assert {(lab, canon) for url, lab, canon in got1 if url == "Q"} == {
+        ("b", "c0"), ("c", "c1"), ("d", "c2"), ("a", "c3")
+    }

@@ -21,27 +21,29 @@ from kgforge.sinks.materialize import (
 )
 
 
-def _table(spark, tmp_path, n=1000, parts=8):
+def _table(spark, tmp_path, range_files, n=1000, parts=8):
+    """A (subject, v) stage of ``n`` rows written as ``parts`` range files."""
     df = spark.range(n).select(
         F.format_string("s%04d", F.col("id")).alias("subject"),
         (F.col("id") % 7).alias("v"),
     )
     ms = ManifestStore(str(tmp_path / "manifests"))
     path = str(tmp_path / "spo_s")
-    write_stage(df, path, "s", "r1", ms, range_cols=["subject"], num_partitions=parts)
+    range_files(parts)
+    write_stage(lambda: df, path, "s", "r1", ms, range_cols=["subject"])
     return path
 
 
-def test_stats_written_and_ranges_disjointish(spark, tmp_path):
-    path = _table(spark, tmp_path)
+def test_stats_written_and_ranges_disjointish(spark, tmp_path, range_files):
+    path = _table(spark, tmp_path, range_files)
     stats = spark.read.parquet(path + "_filestats").collect()
     assert len(stats) >= 4  # range partitioning produced multiple files
     for r in stats:
         assert r.min_subject <= r.max_subject
 
 
-def test_point_lookup_prunes_and_matches_full_scan(spark, tmp_path):
-    path = _table(spark, tmp_path)
+def test_point_lookup_prunes_and_matches_full_scan(spark, tmp_path, range_files):
+    path = _table(spark, tmp_path, range_files)
     full = spark.read.parquet(path).filter(F.col("subject") == "s0123").collect()
     got = pruned_read(spark, path, "subject", "s0123").collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, full))
@@ -55,8 +57,8 @@ def test_point_lookup_prunes_and_matches_full_scan(spark, tmp_path):
     assert 1 <= n_kept < n_files
 
 
-def test_range_lookup_and_out_of_range(spark, tmp_path):
-    path = _table(spark, tmp_path)
+def test_range_lookup_and_out_of_range(spark, tmp_path, range_files):
+    path = _table(spark, tmp_path, range_files)
     full = (
         spark.read.parquet(path)
         .filter(F.col("subject").between("s0100", "s0199"))
@@ -77,8 +79,8 @@ def test_fallback_without_stats(spark, tmp_path):
     assert [r.subject for r in got] == ["3"]
 
 
-def test_stats_refresh_on_rewrite(spark, tmp_path):
-    path = _table(spark, tmp_path, n=100, parts=4)
+def test_stats_refresh_on_rewrite(spark, tmp_path, range_files):
+    path = _table(spark, tmp_path, range_files, n=100, parts=4)
     write_file_stats(path, spark, ["subject"])
     stats1 = spark.read.parquet(path + "_filestats").count()
     assert stats1 >= 2
@@ -88,13 +90,13 @@ def _data_files(path):
     return glob.glob(os.path.join(path, "*.parquet"))
 
 
-def test_filestats_is_the_per_file_table(spark, tmp_path):
+def test_filestats_is_the_per_file_table(spark, tmp_path, range_files):
     """One _filestats row per data file, named by the URI Spark's
     input_file_name() gives; its rows sum to the manifest's rows and the
     table count. Footers carry no content hash, so the table has no
     content_hash column (content_fingerprint hashes a table's content). No
     per-partition lineage table is written."""
-    path = _table(spark, tmp_path)
+    path = _table(spark, tmp_path, range_files)
     stats = spark.read.parquet(path + "_filestats").collect()
     files = _data_files(path)
     assert len(stats) == len(files) >= 4
@@ -121,7 +123,7 @@ def test_zero_row_stage(spark, tmp_path):
     ).filter(F.lit(False))
     ms = ManifestStore(str(tmp_path / "manifests"))
     path = str(tmp_path / "empty")
-    out = write_stage(df, path, "empty", "r1", ms, range_cols=["subject"])
+    out = write_stage(lambda: df, path, "empty", "r1", ms, range_cols=["subject"])
     assert out.count() == 0
     assert ms.load("r1", "empty")["rows"] == 0
     got = pruned_read(spark, path, "subject", "s0003")
@@ -130,27 +132,24 @@ def test_zero_row_stage(spark, tmp_path):
 
 
 def test_small_stage_is_sized_by_its_data(spark, tmp_path):
-    """Without num_partitions the range shuffle is AQE-coalesced to the
+    """The range shuffle has no fixed count, so AQE coalesces it to the
     data's size: a 64-row stage is one file, not one per shuffle
-    partition. An explicit num_partitions still sets the file count."""
+    partition."""
     df = spark.range(64).select(F.format_string("s%04d", F.col("id")).alias("subject"))
     ms = ManifestStore(str(tmp_path / "manifests"))
     sized = str(tmp_path / "sized")
-    write_stage(df, sized, "sized", "r1", ms, range_cols=["subject"])
+    write_stage(lambda: df, sized, "sized", "r1", ms, range_cols=["subject"])
     assert len(_data_files(sized)) == 1
-    fixed = str(tmp_path / "fixed")
-    write_stage(df, fixed, "fixed", "r1", ms, range_cols=["subject"], num_partitions=4)
-    assert len(_data_files(fixed)) == 4
 
 
-def test_resume_skips_complete_stage(spark, tmp_path):
+def test_resume_skips_complete_stage(spark, tmp_path, range_files):
     """A stage whose manifest is complete is not rewritten: neither its
     data files nor its per-file table change, whatever the new input."""
-    path = _table(spark, tmp_path)
+    path = _table(spark, tmp_path, range_files)
     before = sorted(_data_files(path) + _data_files(path + "_filestats"))
     ms = ManifestStore(str(tmp_path / "manifests"))
     other = spark.range(5).select(F.col("id").cast("string").alias("subject"))
-    out = write_stage(other, path, "s", "r1", ms, range_cols=["subject"], num_partitions=8)
+    out = write_stage(lambda: other, path, "s", "r1", ms, range_cols=["subject"])
     assert sorted(_data_files(path) + _data_files(path + "_filestats")) == before
     assert out.count() == 1000
 
@@ -223,18 +222,37 @@ def _jobs_submitted(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_stage_metadata_submits_no_spark_jobs(spark, tmp_path):
+def test_stage_metadata_submits_no_spark_jobs(spark, tmp_path, range_files):
     """Folding the per-file table, planning a pruned read and re-reading a
     complete stage all run on the driver: 0 Spark jobs each. The lookup's
     own scan is the one job, which shows the counter counts."""
-    path = _table(spark, tmp_path)
+    path = _table(spark, tmp_path, range_files)
     ms = ManifestStore(str(tmp_path / "manifests"))
     assert _jobs_submitted(spark, lambda: write_file_stats(path, spark, ["subject"]))[1] == 0
     planned, jobs = _jobs_submitted(spark, lambda: pruned_read(spark, path, "subject", "s0123"))
     assert jobs == 0
     resumed, jobs = _jobs_submitted(
-        spark, lambda: write_stage(spark.range(1), path, "s", "r1", ms, range_cols=["subject"])
+        spark,
+        lambda: write_stage(lambda: spark.range(1), path, "s", "r1", ms, range_cols=["subject"]),
     )
     assert jobs == 0
     assert resumed.columns == ["subject", "v"]
     assert _jobs_submitted(spark, planned.collect)[1] >= 1
+
+
+def test_resumed_pipeline_submits_no_spark_jobs(spark, tmp_path):
+    """Every stage hands write_stage a builder, so a second run_pipeline
+    call with the same run_id on a completed work root builds no stage
+    plan: near-dup detection's and CC's eager counts and collects do not
+    run again, and the call submits no Spark job."""
+    from kgforge.fixtures import pages_df
+    from kgforge.pipeline.run import run_pipeline
+
+    pages = pages_df(spark, 60)
+    work = str(tmp_path / "w")
+    options = {"dedup": "near", "extended_checks": True}
+    first = run_pipeline(pages, work, **options)
+    n_accepted = first["accepted"].count()
+    again, jobs = _jobs_submitted(spark, lambda: run_pipeline(pages, work, **options))
+    assert jobs == 0
+    assert again["accepted"].count() == n_accepted > 0

@@ -7,7 +7,6 @@ import pytest
 
 from kgforge.fixtures import pages_df
 from kgforge.html import extract_text
-from kgforge.operators.canonicalize import verified_similar_pairs
 from kgforge.operators.dedup import jaccard_similarity_join
 from kgforge.persist import persist, released
 from kgforge.pipeline.run import run_pipeline
@@ -89,11 +88,8 @@ NEAR_DUP_TEXTS = [
 
 @pytest.mark.parametrize(
     "pairs",
-    [
-        lambda docs: verified_similar_pairs(docs, "doc_id", "text", threshold=0.5),
-        lambda docs: jaccard_similarity_join(docs, threshold=0.5),
-    ],
-    ids=["verified_similar_pairs", "jaccard_similarity_join"],
+    [lambda docs: jaccard_similarity_join(docs, threshold=0.5)],
+    ids=["jaccard_similarity_join"],
 )
 def test_gram_operators_release_their_persisted_tables(spark, pairs):
     docs = spark.createDataFrame(

@@ -218,11 +218,13 @@ def test_materialize_resume(spark, pages, tmp_path):
     work = str(tmp_path / "w")
     ms = ManifestStore(work + "/_m")
     t = split_parsed(parse_combined(pages))[0]
-    out1 = write_stage(t, work + "/t", "parse", "r1", ms, range_cols=["url", "seq"])
+    out1 = write_stage(lambda: t, work + "/t", "parse", "r1", ms, range_cols=["url", "seq"])
     n1 = out1.count()
     assert ms.is_complete("r1", "parse")
     # resume: returns same data without rewriting
-    out2 = write_stage(t.limit(0), work + "/t", "parse", "r1", ms, range_cols=["url", "seq"])
+    out2 = write_stage(
+        lambda: t.limit(0), work + "/t", "parse", "r1", ms, range_cols=["url", "seq"]
+    )
     assert out2.count() == n1
 
 
@@ -346,7 +348,7 @@ def test_pipeline_dedup_stage(spark, tmp_path):
     assert {r["url"] for r in out["triples"].select("url").distinct().collect()} <= kept
 
 
-def test_compact_stage(spark, tmp_path):
+def test_compact_stage(spark, tmp_path, range_files):
     """Compaction collapses a many-file stage to size-targeted files,
     preserves content exactly (fingerprint-verified swap), keeps range
     clustering, and refreshes the manifest."""
@@ -365,9 +367,8 @@ def test_compact_stage(spark, tmp_path):
     t = split_parsed(parse_combined(pages_df(spark, 40, partitions=4)))[0]
     work = str(tmp_path / "w")
     ms = ManifestStore(work + "/_manifests")
-    out = write_stage(
-        t, work + "/t", "parse", "r1", ms, range_cols=["url", "seq"], num_partitions=16
-    )
+    range_files(16)
+    out = write_stage(lambda: t, work + "/t", "parse", "r1", ms, range_cols=["url", "seq"])
     before = {(r["url"], r["seq"]) for r in out.select("url", "seq").collect()}
     assert len(glob.glob(work + "/t/*.parquet")) > 1
 
