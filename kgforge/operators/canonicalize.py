@@ -294,30 +294,18 @@ def connected_components(edges: DataFrame, driver_cap: int = 100_000) -> DataFra
     spark = edges.sparkSession
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
 
-    # Size the whole CC job's partitioning from the measured edge count:
-    # each iteration is ~8 shuffle stages, so task-scheduling overhead (not
-    # data) dominates when a small graph inherits a wide partitioning. ~50k
-    # 16-byte edge rows per task keeps tasks meaningful; large graphs keep
-    # num_partitions untouched. (Callers pass persisted/materialized edges,
-    # so the sizing count is cheap.)
-    # pin the edge input: the sizing count, the nodes build, and the e build
-    # each traverse the edges lineage (often a filter over a cached-but-wide
-    # upstream), so without a persist the same scan runs 3x serially
-    edges = edges.persist()
-    n_edges_in = edges.count()
     # Small-graph fast path: each large/small-star iteration is ~8 serial
     # shuffle stages, so a few-hundred-edge graph (a near-dup pair set, an
     # incremental batch) pays seconds of pure scheduling latency per call.
-    # Up to ``driver_cap`` edges the already-materialized set collects (two
-    # strings per row — bounded MBs) and a union-find with path compression
-    # produces the identical (node, component=min-uri-member) output in
-    # microseconds; bigger graphs keep the distributed loop untouched
+    # One job collects at most ``driver_cap + 1`` edges (two strings per row
+    # — bounded MBs); when the graph fits, a union-find with path
+    # compression produces the identical (node, component=min-uri-member)
+    # output in microseconds; bigger graphs take the distributed loop
     # (tests force it with driver_cap=0). The mapping goes back to the JVM
     # as Arrow record batches: a list of Row tuples would be pickled and
     # converted by a Python-worker job.
-    if n_edges_in <= driver_cap:
-        rows = edges.select("src", "dst").collect()
-        edges.unpersist()
+    rows = edges.select("src", "dst").limit(driver_cap + 1).collect()
+    if len(rows) <= driver_cap:
         parent: dict[str, str] = {}
 
         def find(x: str) -> str:
@@ -345,6 +333,16 @@ def connected_components(edges: DataFrame, driver_cap: int = 100_000) -> DataFra
             pa.table({"node": nodes, "component": [members[x] for x in nodes]}),
             "node string, component string",
         )
+    # Size the whole CC job's partitioning from the measured edge count:
+    # each iteration is ~8 shuffle stages, so task-scheduling overhead (not
+    # data) dominates when a small graph inherits a wide partitioning. ~50k
+    # 16-byte edge rows per task keeps tasks meaningful; large graphs keep
+    # num_partitions untouched.
+    # pin the edge input: the sizing count, the nodes build, and the e build
+    # each traverse the edges lineage (often a filter over a cached-but-wide
+    # upstream), so without a persist the same scan runs 3x serially
+    edges = edges.persist()
+    n_edges_in = edges.count()
     # floor of 8, NOT defaultParallelism: each CC iteration is ~8 serial
     # shuffle stages, so a 50k-edge graph on 32 partitions pays 32-task
     # scheduling latency per stage for ~1.5k rows/task; 8 partitions keeps

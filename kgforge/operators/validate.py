@@ -117,6 +117,32 @@ def _typed_subjects(triples: DataFrame) -> DataFrame:
     )
 
 
+# the property-shape fields the executors read: the rule table's ``ps`` and
+# ``targets.property_shapes`` carry only these, so no executor's generated
+# code copies a property shape's labels, messages or SPARQL texts
+RULE_FIELDS = (
+    "path_type", "path", "paths", "deactivated",
+    # value-node and row-local parameters
+    "class", "datatype", "nodeKind", "node", "in", "languageIn", "hasValue",
+    "pattern", "minLength", "maxLength",
+    "minInclusive", "maxInclusive", "minExclusive", "maxExclusive",
+    "minCount", "maxCount", "uniqueLang",
+    "sh_or", "sh_and", "sh_xone", "sh_not",
+    # pair parameters
+    "equals", "disjoint", "lessThan", "lessThanOrEquals",
+    # qualified cardinality
+    "qualifiedValueShape", "qualifiedMinCount", "qualifiedMaxCount",
+    "qualifiedValueShapesDisjoint",
+)
+
+
+def _rule_fields(property_shapes: str):
+    """The ``property_shapes`` array narrowed to ``RULE_FIELDS``: one array
+    per field, zipped back into structs, so the parquet scan reads only
+    those fields of the stored shapes."""
+    return F.arrays_zip(*[F.col(property_shapes)[f].alias(f) for f in RULE_FIELDS])
+
+
 class ShapeFrames(NamedTuple):
     """What the constraint executors share, derived once by ``shape_frames``.
 
@@ -125,11 +151,12 @@ class ShapeFrames(NamedTuple):
     - ``values``: (url, subject, predicate, val, val_kind, val_dt) per ok
       triple; ``val_dt`` is xsd:string for a literal without a datatype.
     - ``targets``: (url, shape_uri, constraints, sparql_constraints,
-      property_shapes, target_class) per active shape and target class.
-    - ``all_rules``: (url, shape_uri, t_idx, target_class, severity,
-      shape_active, ps_idx, ps, active) per shape, target class (outer: a
+      property_shapes, target_class) per active shape and target class;
+      the property shapes carry only ``RULE_FIELDS``.
+    - ``all_rules``: (url, shape_uri, severity, shape_active, ps_idx, ps,
+      t_idx, target_class, active) per shape, target class (outer: a
       shape without one keeps a NULL row) and property shape, deactivated
-      ones included.
+      ones included; ``ps`` is the property shape's ``RULE_FIELDS``.
     - ``rules``: the ``active`` rows of ``all_rules``.
     """
 
@@ -154,22 +181,23 @@ def shape_frames(triples: DataFrame, shapes: DataFrame) -> ShapeFrames:
     # a property shape when its sh:deactivated reads "true" or "1"
     shape_active = ~F.col("deactivated")
     ps_active = F.col("ps.deactivated").isNull() | ~F.col("ps.deactivated").isin("true", "1")
-    # both generators in one select: a projection between them would copy
-    # the wide property-shape array once more in generated code
+    # both generators in one select, the property shapes first: a
+    # projection between them, or a target-class generator below them,
+    # would copy the property-shape array once more in generated code
     all_rules = shapes.select(
         "url",
         F.col("uri").alias("shape_uri"),
         "severity",
         shape_active.alias("shape_active"),
+        F.posexplode(_rule_fields("property_shapes")).alias("ps_idx", "ps"),
         F.posexplode_outer("target_classes").alias("t_idx", "target_class"),
-        F.posexplode("property_shapes").alias("ps_idx", "ps"),
     ).withColumn("active", F.col("shape_active") & ps_active)
     targets = shapes.filter(shape_active).select(
         "url",
         F.col("uri").alias("shape_uri"),
         "constraints",
         "sparql_constraints",
-        "property_shapes",
+        _rule_fields("property_shapes").alias("property_shapes"),
         F.explode("target_classes").alias("target_class"),
     )
     return ShapeFrames(

@@ -16,6 +16,25 @@ therefore read again after each filter stage, on a resume too, and must be
 a re-readable table (a scan, or persisted). ``span_dedup`` rewrites text,
 so its stage stores the rewritten pages.
 
+The stages form a DAG, and a stage starts as soon as the stages it reads
+are written (``side_by_side`` threads; none outlives the call):
+
+    host_filter -> dedup -> span_dedup        in order, each optional
+    -> parse | mentions                       both read only pages
+    -> ( verdicts -> validate_accept | validate_reject
+           -> canonicalize -> infer_rules -> materialize_s | _p | _o )
+       | constraint_reports                   reads all_triples and shapes
+
+``|`` marks writes that run side by side; the report stage runs beside the
+whole verdict chain. At most four stage writes run at once (the reports
+beside the three S/P/O copies), one thread each; there is no option for
+it. Stage threads inherit the caller's Spark job group and description.
+A thread that persists opens its own ``released()``: the scopes are
+per thread, and the verdict frames are freed once both verdict writes are
+done. When a stage fails, the stages already running finish, no further
+stage starts, and the first error is raised. Every completed stage keeps
+its manifest, so a rerun with the same run_id resumes.
+
 This module is the one definition of the stage chain: its validate step
 (``verdicts``) and canonicalize step (``canonicalized``) are what streaming
 validation and the incremental merge run too.
@@ -24,6 +43,7 @@ validation and the incremental merge run too.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,7 +65,7 @@ from ..operators.validate import (
     validate_triples,
 )
 from ..persist import persist, released
-from ..sinks.materialize import ManifestStore, materialize_spo, write_stage
+from ..sinks.materialize import ManifestStore, materialize_spo, side_by_side, write_stage
 
 
 def constraint_reports(triples: DataFrame, shapes: DataFrame) -> DataFrame:
@@ -291,64 +311,93 @@ def run_pipeline(
     # ``rec`` filters over the written parquet — the filter pushes down to
     # the scan and the wide ``shape`` struct column is pruned from triple
     # reads, so downstream stages pay only for the columns they touch.
-    combined = write_stage(
-        lambda: parse_combined(pages), os.path.join(work_root, "parsed"), "parse",
-        run_id, manifests, range_cols=["url", "seq"],
+    # Parse and mentions read only ``pages``: written side by side.
+    combined, mentions = side_by_side(
+        lambda: write_stage(
+            lambda: parse_combined(pages), os.path.join(work_root, "parsed"), "parse",
+            run_id, manifests, range_cols=["url", "seq"],
+        ),
+        lambda: write_stage(
+            lambda: detect_mentions(pages, gazetteer), os.path.join(work_root, "mentions"),
+            "mentions", run_id, manifests, range_cols=["url", "start"],
+        ),
     )
     triples, shapes = split_parsed(combined)
-    mentions = write_stage(
-        lambda: detect_mentions(pages, gazetteer), os.path.join(work_root, "mentions"),
-        "mentions", run_id, manifests, range_cols=["url", "start"],
-    )
 
     all_triples = triples.filter(F.col("subject").isNotNull()).unionByName(
         mention_triples(mentions)
     )
-    # the verdict streams are persisted for the accept AND the reject write
-    # and released right after the second
-    with released():
-        verdict = verdicts(all_triples, shapes)
-        accepted = write_stage(
-            lambda: verdict[0], os.path.join(work_root, "accepted"), "validate_accept",
-            run_id, manifests, range_cols=["subject", "predicate"],
-        )
-        rejected = write_stage(
-            lambda: verdict[1], os.path.join(work_root, "rejected"), "validate_reject",
-            run_id, manifests, range_cols=["subject", "predicate"],
-        )
 
-    reports = None
-    if extended_checks:
+    # set when the report stage fails: the verdict chain then starts no
+    # further stage (side_by_side raises the report's error)
+    report_failed = threading.Event()
+
+    def graph() -> tuple | None:
+        # the verdict streams are persisted for the accept AND the reject
+        # write, and released once both are written
         with released():
-            reports = write_stage(
-                lambda: constraint_reports(all_triples, shapes),
-                os.path.join(work_root, "reports"), "constraint_reports", run_id, manifests,
-                range_cols=["subject"],
+            verdict = verdicts(all_triples, shapes)
+            accepted, rejected = side_by_side(
+                lambda: write_stage(
+                    lambda: verdict[0], os.path.join(work_root, "accepted"), "validate_accept",
+                    run_id, manifests, range_cols=["subject", "predicate"],
+                ),
+                lambda: write_stage(
+                    lambda: verdict[1], os.path.join(work_root, "rejected"), "validate_reject",
+                    run_id, manifests, range_cols=["subject", "predicate"],
+                ),
             )
 
-    if canonicalize:
-        mapping, canonical = canonicalized(accepted, ifp_props, work_root, run_id, manifests)
+        if report_failed.is_set():
+            return None
+        if canonicalize:
+            mapping, canonical = canonicalized(accepted, ifp_props, work_root, run_id, manifests)
+        else:
+            mapping = None
+            canonical = accepted
+
+        if report_failed.is_set():
+            return None
+        entailed = None
+        if infer_rules:
+            from ..shacl.rules import apply_rules
+
+            spo_cols = ["subject", "predicate", "object"]
+            entailed = write_stage(
+                lambda: apply_rules(canonical.select(spo_cols), infer_rules).select(
+                    F.lit("urn:kgforge:entailed").alias("url"), *spo_cols
+                ),
+                os.path.join(work_root, "entailed"), "infer_rules", run_id, manifests,
+                range_cols=["subject", "predicate"],
+            )
+            graph_in = canonical.select("url", *spo_cols).unionByName(entailed)
+        else:
+            graph_in = canonical
+
+        if report_failed.is_set():
+            return None
+        spo = materialize_spo(graph_in, os.path.join(work_root, "graph"), run_id, manifests)
+        return accepted, rejected, mapping, entailed, spo
+
+    def report_stage() -> DataFrame:
+        try:
+            with released():
+                return write_stage(
+                    lambda: constraint_reports(all_triples, shapes),
+                    os.path.join(work_root, "reports"), "constraint_reports", run_id, manifests,
+                    range_cols=["subject"],
+                )
+        except BaseException:
+            report_failed.set()
+            raise
+
+    # the report stage reads only all_triples and shapes: it runs beside
+    # the verdict -> canonicalize -> S/P/O chain
+    if extended_checks:
+        chain, reports = side_by_side(graph, report_stage)
     else:
-        mapping = None
-        canonical = accepted
-
-    entailed = None
-    if infer_rules:
-        from ..shacl.rules import apply_rules
-
-        spo_cols = ["subject", "predicate", "object"]
-        entailed = write_stage(
-            lambda: apply_rules(canonical.select(spo_cols), infer_rules).select(
-                F.lit("urn:kgforge:entailed").alias("url"), *spo_cols
-            ),
-            os.path.join(work_root, "entailed"), "infer_rules", run_id, manifests,
-            range_cols=["subject", "predicate"],
-        )
-        graph_in = canonical.select("url", *spo_cols).unionByName(entailed)
-    else:
-        graph_in = canonical
-
-    spo = materialize_spo(graph_in, os.path.join(work_root, "graph"), run_id, manifests)
+        chain, reports = graph(), None
+    accepted, rejected, mapping, entailed, spo = chain
 
     return {
         "pages": pages,

@@ -32,6 +32,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import InheritableThread
 
 # footer key under which Spark's Parquet writer stores the table's Spark schema
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -81,6 +82,32 @@ class ManifestStore:
     def is_complete(self, run_id: str, stage: str) -> bool:
         rec = self.load(run_id, stage)
         return rec is not None and rec.get("status") == "complete"
+
+
+def side_by_side(*steps: Callable[[], object]) -> list:
+    """Run each zero-argument step in a thread of its own and return their
+    results in order. The threads inherit the caller's Spark local
+    properties (job group, job description), so their jobs count where the
+    caller's do. A failing step does not stop the others: every thread is
+    joined, then the first error raised is raised again, so no step thread
+    outlives the call and every stage that completed keeps its manifest."""
+    results: list = [None] * len(steps)
+    errors: list[BaseException] = []
+
+    def run(i: int) -> None:
+        try:
+            results[i] = steps[i]()
+        except BaseException as exc:  # noqa: BLE001 — re-raised by the caller
+            errors.append(exc)
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(len(steps))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 def write_stage(
@@ -250,7 +277,8 @@ def materialize_spo(
     manifests: ManifestStore,
 ) -> dict[str, DataFrame]:
     """The final graph: subject-, predicate-, and object-clustered copies
-    (classic S/P/O layout so any lookup pattern scans one clustered table)."""
+    (classic S/P/O layout so any lookup pattern scans one clustered table),
+    written side by side."""
     flat = triples.select(
         "url",
         "subject",
@@ -260,9 +288,9 @@ def materialize_spo(
         F.col("object.datatype").alias("obj_datatype"),
         F.col("object.lang").alias("obj_lang"),
     )
-    out = {}
-    for name, cols in (("s", ["subject"]), ("p", ["predicate"]), ("o", ["obj_value"])):
-        out[name] = write_stage(
+
+    def copy(name: str, cols: list[str]):
+        return lambda: write_stage(
             lambda: flat,
             os.path.join(out_root, f"spo_{name}"),
             f"materialize_{name}",
@@ -270,7 +298,9 @@ def materialize_spo(
             manifests,
             range_cols=cols,
         )
-    return out
+
+    s, p, o = side_by_side(copy("s", ["subject"]), copy("p", ["predicate"]), copy("o", ["obj_value"]))
+    return {"s": s, "p": p, "o": o}
 
 
 def compact_stage(

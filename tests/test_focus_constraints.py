@@ -66,3 +66,26 @@ def test_unique_lang_and_has_value(spark):
     assert rej[("http://example.org/bob", "http://example.org/status")] == ["hasValue"]
     # alice's status does
     assert ("http://example.org/alice", "http://example.org/status") not in rej
+
+
+def test_rule_table_carries_only_the_rule_fields(spark):
+    """The rule table's property shape and the targets' property shapes
+    hold exactly ``RULE_FIELDS``: what the executors read, no labels,
+    messages or SPARQL texts."""
+    from kgforge.operators.validate import RULE_FIELDS, shape_frames
+    from kgforge.schema import PROPERTY_SHAPE_STRUCT
+
+    fr = shape_frames(*split_parsed(parse_combined(_page(spark, TTL))))
+    assert fr.all_rules.schema["ps"].dataType.fieldNames() == list(RULE_FIELDS)
+    assert fr.targets.schema["property_shapes"].dataType.elementType.fieldNames() == list(
+        RULE_FIELDS
+    )
+    unread = {"labels", "descriptions", "messages", "sparql_constraints", "path_json",
+              "group", "order", "defaultValue"}
+    assert set(RULE_FIELDS) <= set(PROPERTY_SHAPE_STRUCT.fieldNames())
+    assert not unread & set(RULE_FIELDS)
+    rules = {(r["shape_uri"], r["ps"]["path"]) for r in fr.rules.collect()}
+    assert rules == {
+        ("http://example.org/PersonShape", "http://example.org/label"),
+        ("http://example.org/PersonShape", "http://example.org/status"),
+    }

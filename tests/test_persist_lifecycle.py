@@ -2,6 +2,8 @@
 holds no more persistent RDDs than before the call."""
 
 import datetime as dt
+import sys
+import threading
 
 import pytest
 
@@ -54,6 +56,76 @@ def test_released_unpersists_what_was_persisted_inside(spark):
         assert _persistent_rdds(spark) == base + 2
     assert _persistent_rdds(spark) == base + 1
     outside.unpersist()
+    assert _persistent_rdds(spark) == base
+
+
+def _cached(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def test_inner_block_keeps_an_outer_persist_of_the_same_plan(spark):
+    """Spark caches a plan once, so an inner block that persists a plan
+    an outer holder already cached must not free it on exit."""
+    plan = lambda: spark.range(30).selectExpr("id * 3 AS x")  # noqa: E731
+    outside = persist(plan())
+    assert outside.count() == 30
+    with released():
+        persist(plan()).count()
+    assert _cached(outside)
+    outside.unpersist()
+
+    base = _persistent_rdds(spark)
+    with released():
+        outer = persist(plan())
+        outer.count()
+        with released():
+            persist(plan()).count()
+        assert _cached(outer)
+        assert _persistent_rdds(spark) == base + 1
+    assert not _cached(outer)
+    assert _persistent_rdds(spark) == base
+
+
+@pytest.mark.parametrize("n_threads", [2, 8])
+def test_plan_held_by_several_threads_is_freed_by_the_last(spark, n_threads):
+    """The scopes are per thread but the cache is shared: the blocks of
+    the first threads to leave keep the plan for the last one, which frees
+    it. Eight threads on four cores, with a short switch interval, also
+    stress the shared owner count."""
+    plan = lambda: spark.range(40).selectExpr("id * 5 AS x")  # noqa: E731
+    base = _persistent_rdds(spark)
+    all_hold = threading.Barrier(n_threads)
+    others_left = threading.Barrier(n_threads)
+    seen = {}
+
+    def early():
+        with released():
+            persist(plan()).count()
+            all_hold.wait(timeout=60)
+        others_left.wait(timeout=60)
+
+    def last():
+        with released():
+            df = persist(plan())
+            df.count()
+            all_hold.wait(timeout=60)
+            others_left.wait(timeout=60)
+            seen["before_last_left"] = _cached(df)
+        seen["after_last_left"] = _cached(df)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=early) for _ in range(n_threads - 1)]
+        threads.append(threading.Thread(target=last))
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {"before_last_left": True, "after_last_left": False}
     assert _persistent_rdds(spark) == base
 
 

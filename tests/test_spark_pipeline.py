@@ -621,3 +621,31 @@ def test_cc_distributed_path_matches_driver_path(spark):
         for r in connected_components(df, driver_cap=0).collect()
     }
     assert fast == dist and len(fast) > 120
+
+
+def _jobs_in_group(spark, fn) -> tuple:
+    """``fn()``'s result and the Spark jobs it submitted, counted through a
+    job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"cc-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cc_small_graph_submits_no_more_jobs_than_one_collect(spark):
+    """The small-graph path reads its edges with one bounded collect: no
+    persist, count and second collect of the edge plan."""
+    pairs = [(f"n{i % 40:02d}", f"n{(i * 7 + 1) % 40:02d}") for i in range(200)]
+    edges = spark.createDataFrame(pairs, ["src", "dst"]).distinct()
+    _rows, collect_jobs = _jobs_in_group(spark, lambda: edges.collect())
+    cc, cc_jobs = _jobs_in_group(spark, lambda: connected_components(edges))
+    assert cc_jobs <= collect_jobs
+    dist = connected_components(edges, driver_cap=0)
+    assert sorted(map(tuple, cc.collect())) == sorted(map(tuple, dist.collect()))
